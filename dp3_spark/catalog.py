@@ -67,7 +67,7 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return dfs
 
 
-@dataclass
+@dataclass(frozen=True)
 class LogStore:
     """Maps an arbitrary table onto dp3's (producer, topic, log_time,
     sequence, payload...) model.
@@ -75,6 +75,10 @@ class LogStore:
     Reference: treemgr/treemgr.go:29-33 (one (producer, topic) pair = one
     storage tree). Here one (producer, topic) pair = one partition predicate
     Catalyst pushes down to the scan.
+
+    Frozen: one store is shared by every caller of a memo
+    (events_log_store, VersionedLogTable.log_store), so a variant is
+    built with dataclasses.replace, never by assignment.
     """
 
     df: DataFrame
@@ -97,6 +101,10 @@ class LogStore:
     # string-equality conjuncts on `probe_columns`.
     string_probe: object | None = None
     probe_columns: tuple[str, ...] = field(default_factory=tuple)
+    # upper bound on the rows of `df` (the committed data files' recorded
+    # row counts, summed by the manifest walk that planned the scan);
+    # None = unknown.  Lets the compiler skip the as-of skew-guard count.
+    row_bound: int | None = None
 
     PUSHDOWN_COL = "__ptime__"
 

@@ -49,8 +49,12 @@ class DP3Engine:
             return self._explicit_store
         # table-backed reads go through log_store() so the trigram-sidecar
         # probe hook (statfilter-in-scan) is active for QL string
-        # equality; log_store derives payload columns from its own single
-        # read (no second table.read() just for column names)
+        # equality.  log_store memoizes one store per committed snapshot
+        # (generation, watermark): a request on an unchanged table re-reads
+        # the two pointers and plans nothing, while every write moves a
+        # pointer and is seen by the next request.  The store's row_bound
+        # (summed manifest row counts) lets the compiler skip the as-of
+        # skew-guard count job on tables too small to need slicing.
         return self.table.log_store()
 
     def execute(self, statement: str) -> Optional[DataFrame]:

@@ -58,10 +58,13 @@ AUTO_SLICE_MAX_ROWS = 2_000_000
 def _auto_time_slices(u: DataFrame, partition_cols: Sequence[str]) -> int | None:
     """Rows-per-producer heuristic for `time_slices='auto'`: one
     map-combinable count over the (already-constructed) merged union —
-    cheap relative to the window sort it guards, and the same number a
-    catalog row-count statistic would supply at 100 TB.  Returns the slice
-    count K (ceil(max_run / AUTO_SLICE_MAX_ROWS), capped at the cluster
-    parallelism) or None when no producer's run is long enough."""
+    cheap relative to the window sort it guards, but a Spark job at plan
+    time.  Returns the slice count K (ceil(max_run / AUTO_SLICE_MAX_ROWS),
+    capped at the cluster parallelism) or None when no producer's run is
+    long enough.  The QL compiler skips this count when the store's
+    manifest row bound (LogStore.row_bound, the summed recorded row
+    counts of the committed data files) times the as-of's scan count is
+    within AUTO_SLICE_MAX_ROWS — the count would return None there."""
     import math
 
     row = (

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from dp3_spark.catalog import LogStore, drop_internal, time_range_filter
-from dp3_spark.operators.asof import dp3_asof_join
+from dp3_spark.operators import asof as ASOF
 from dp3_spark.operators.merge import ordered_merge
 from dp3_spark.ql import ast
 from dp3_spark.ql.parser import parse
@@ -292,14 +292,28 @@ class Compiler:
             right = self._compile_select(node.right, ctx)
             if node.keyword == "succeeds":
                 left, right = right, left
-            return dp3_asof_join(
+            return ASOF.dp3_asof_join(
                 left,
                 right,
                 immediate=node.immediate,
                 threshold_ns=node.threshold_ns,
                 partition_cols=("producer",),
+                time_slices=self._asof_slices(node),
             )
         raise CompileError(f"unknown select node {node!r}")
+
+    def _asof_slices(self, node: ast.AsofJoin) -> str | None:
+        """time_slices for one as-of node.  Each scan under it reads at
+        most the store's row_bound rows (a filtered view of the table; a
+        nested as-of emits a subset of its inputs), so the merged union
+        holds at most row_bound x scans rows.  When that cannot exceed
+        AUTO_SLICE_MAX_ROWS no producer's run can either, and the 'auto'
+        count would return None: skip it (exact, not a heuristic).
+        Unknown bound or above it: the 'auto' count decides."""
+        bound = self.store.row_bound
+        if bound is None or bound * len(ast.scans(node)) > ASOF.AUTO_SLICE_MAX_ROWS:
+            return "auto"
+        return None
 
     def _compile_merge(self, node: ast.MergeJoin, ctx: _ScanCtx) -> DataFrame:
         """Merge compilation with scan collapsing: children that are plain

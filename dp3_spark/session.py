@@ -54,11 +54,3 @@ def get_spark(app_name: str = "dp3_spark", extra_conf: dict | None = None) -> Sp
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def pin_session_conf(spark: SparkSession) -> SparkSession:
-    """Runtime-settable confs we rely on, applied defensively when we are
-    handed a session we did not build (e.g. the driver's)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark

@@ -99,7 +99,8 @@ reference's merge-time mask application.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass
+import threading
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -195,6 +196,15 @@ class VersionedLogTable:
     # conditional write and whose writer_lease is a TTL lease — the ONLY
     # class that changes when the table leaves a local filesystem.
     pointer_backend: object | None = None
+    # log_store()'s one-entry snapshot memo ((generation, watermark),
+    # LogStore) and the lock that makes its check-plan-store one step —
+    # internal state, not constructor arguments
+    _store_memo: tuple | None = field(
+        default=None, init=False, repr=False, compare=False
+    )
+    _store_lock: threading.Lock = field(
+        default_factory=threading.Lock, init=False, repr=False, compare=False
+    )
 
     @property
     def data_path(self) -> str:
@@ -445,17 +455,21 @@ class VersionedLogTable:
         hazard, closed structurally for manifest-bearing tables).
 
         kind: 'data' (rels under the current generation dir),
-        'tombstones', or 'both' — 'both' is how read() plans data AND
+        'tombstones', 'both' or 'snapshot' — 'both' plans data AND
         tombstones from ONE manifest walk (half the plan IO of two
         calls, and both sides provably from the same manifest
-        snapshot).  prune_to: time-travel file pruning — per-version
+        snapshot); 'snapshot' is 'both' plus the data files' summed
+        recorded row counts, how read() and log_store() plan.
+        prune_to: time-travel file pruning — per-version
         manifests above it are skipped entirely (whole committed files
         never scanned); base manifests stay in (their per-file versions
         are unresolved) and the caller's row-level `version <=`
         filter finishes the job.
 
         Returns (generation_path, sorted_paths) — for kind='both',
-        (generation_path, sorted_data_paths, sorted_tombstone_paths) —
+        (generation_path, sorted_data_paths, sorted_tombstone_paths), and
+        for kind='snapshot' that triple plus the row bound (None when any
+        data file's count is unrecorded) —
         the generation is pinned WITH the plan so the caller's basePath
         can never disagree with the planned paths across a racing
         compact — or None, in which case the caller falls back to the
@@ -476,7 +490,7 @@ class VersionedLogTable:
             ]
             if not names:
                 return None  # legacy table, or the flip->base-manifest gap
-            data: list[str] = []
+            data: dict[str, int] = {}  # path -> recorded rows (-1 unknown)
             tombs: list[str] = []
             complete = True
             for full in names:
@@ -492,25 +506,31 @@ class VersionedLogTable:
                 for line in raw.decode().splitlines():
                     if not line:
                         continue
-                    rel = line.partition("\t")[0]
+                    rel, _, rest = line.partition("\t")
                     seg = rel.split(os.sep, 1)[0]
-                    if seg == gen and kind in ("data", "both"):
-                        data.append(os.path.join(self.root, rel))
-                    elif seg == "tombstones" and kind in (
-                        "tombstones",
-                        "both",
-                    ):
+                    if seg == gen and kind != "tombstones":
+                        # rest is "rows" or "rows\tbytes"; a rel recorded
+                        # twice carries the same file, so overwriting is exact
+                        data[os.path.join(self.root, rel)] = int(
+                            rest.partition("\t")[0] or -1
+                        )
+                    elif seg == "tombstones" and kind != "data":
                         tombs.append(os.path.join(self.root, rel))
             if complete and os.path.basename(self._resolve_data_path()) == gen:
                 # [] is a COMPLETE empty plan ("no committed files of this
                 # kind"), distinct from None ("no plan; use the scan"):
                 # _tombstones turns [] into "no tombstones" with zero IO.
-                # set(): a rel recorded twice (e.g. a re-adopted baseline)
-                # must not be scanned twice — the listing path reads each
-                # file once, and the explicit plan must match it
+                # dict/set: a rel recorded twice (e.g. a re-adopted
+                # baseline) must not be scanned twice — the listing path
+                # reads each file once, and the explicit plan must match it
+                data_paths, tomb_paths = sorted(data), sorted(set(tombs))
+                if kind == "snapshot":
+                    rows = data.values()
+                    bound = None if any(r < 0 for r in rows) else sum(rows)
+                    return gen_path, data_paths, tomb_paths, bound
                 if kind == "both":
-                    return gen_path, sorted(set(data)), sorted(set(tombs))
-                return gen_path, sorted(set(data if kind == "data" else tombs))
+                    return gen_path, data_paths, tomb_paths
+                return gen_path, data_paths if kind == "data" else tomb_paths
         return None  # compacts raced the plan twice; scan path takes over
 
     def _ensure_manifest_baseline(self) -> None:
@@ -1096,20 +1116,39 @@ class VersionedLogTable:
         # ONE watermark resolution for both the data and tombstone reads:
         # a concurrent publish between the two must not apply a newer
         # tombstone against an older data snapshot
-        w = self.committed_version()
+        return self._read_at(self.committed_version(), as_of_version)[0]
+
+    def _read_at(
+        self, watermark: int, as_of_version: int | None = None
+    ) -> tuple[DataFrame, tuple | None]:
+        """read() at a pre-resolved watermark -> (frame, plan).  plan is
+        the kind='snapshot' manifest plan (generation, data paths,
+        tombstone paths, row bound) when the data side was served from
+        it, else None (listing fallback: legacy table, the compact
+        flip->base-manifest gap, or no committed data files)."""
         # as_of prunes whole per-version manifests out of the file plan;
         # the row-level version filter in _apply_tombstones finishes the
         # job for files under a base manifest (per-file versions there
-        # are unresolved).  ONE kind='both' manifest walk plans data and
-        # tombstones together: half the plan IO, and both sides come
-        # from the same manifest snapshot by construction.
-        dplan, tplan = self._plan_both(w, prune_to=as_of_version)
-        df = self._data(watermark=w, prune_to=as_of_version, plan=dplan)
+        # are unresolved).  ONE manifest walk plans data and tombstones
+        # together: half the plan IO, and both sides come from the same
+        # manifest snapshot by construction.
+        snap = self._snapshot_paths(
+            watermark, kind="snapshot", prune_to=as_of_version
+        )
+        dplan = tplan = None
+        if snap is not None:
+            gen_path, data_paths, tomb_paths, _ = snap
+            dplan, tplan = (gen_path, data_paths), (gen_path, tomb_paths)
+        df = self._data(watermark=watermark, prune_to=as_of_version, plan=dplan)
         if df is None:
             raise FileNotFoundError(f"no data at {self.data_path}")
-        return self._strip(
-            self._apply_tombstones(df, as_of_version, watermark=w, plan=tplan)
+        out = self._strip(
+            self._apply_tombstones(
+                df, as_of_version, watermark=watermark, plan=tplan
+            )
         )
+        # _data serves an empty data plan from the listing path
+        return out, (snap if snap is not None and snap[1] else None)
 
     def _plan_both(self, watermark: int, *, prune_to: int | None = None):
         """One manifest walk -> ((gen, data_paths), (gen, tomb_paths)),
@@ -1746,7 +1785,36 @@ class VersionedLogTable:
         (tree/iterator.go:177-187).  A QL `where t.col = 'x'` on an
         indexed column then reads only files whose signature can match;
         results are identical either way (tests pin parity + fewer
-        input files)."""
+        input files).
+
+        Planned once per committed snapshot — the reference resolves a
+        version to its root once and serves from its node cache
+        (nodestore/nodestore.go:36-50).  Every call re-reads the two
+        pointers (committed watermark, data generation); while both are
+        unchanged the previous store is returned with zero plan IO and
+        zero Spark jobs.  Any append, delete, truncate or compact moves
+        one of them, so the next call plans afresh.  Only
+        manifest-planned snapshots are memoized (strict by construction:
+        the plan names exactly the committed files); the listing
+        fallback and an explicit payload_cols are planned per call.  The
+        memo holds one entry, keyed on the watermark the snapshot was
+        actually planned at; the lock makes check-plan-store one step,
+        so concurrent service threads plan a snapshot once."""
+        if payload_cols:
+            return self._plan_log_store(self.committed_version(), payload_cols)[0]
+        with self._store_lock:
+            w = self.committed_version()
+            memo = self._store_memo
+            if memo is not None and memo[0] == (self._resolve_data_path(), w):
+                return memo[1]
+            store, plan = self._plan_log_store(w)
+            if plan is not None:
+                self._store_memo = ((plan[0], w), store)
+            return store
+
+    def _plan_log_store(self, watermark: int, payload_cols: tuple[str, ...] = ()):
+        """(LogStore of the snapshot at `watermark`, its kind='snapshot'
+        manifest plan or None when the listing path served it)."""
         from dp3_spark.catalog import LogStore
 
         def probe(column: str, needle: str, mode: str):
@@ -1754,7 +1822,7 @@ class VersionedLogTable:
             # masking are applied by the probe read itself
             return self.read_string_probe(column, needle, mode=mode)
 
-        df = self.read()
+        df, plan = self._read_at(watermark)
         if not payload_cols:
             # default: every non-canonical column is payload (version is
             # bookkeeping) — derived from THIS frame, no second read
@@ -1764,7 +1832,7 @@ class VersionedLogTable:
                 if c not in ("producer", "topic", "log_time", "sequence",
                              "version", "producer_bucket")
             )
-        return LogStore(
+        store = LogStore(
             df=df,
             producer_col="producer",
             topic_col="topic",
@@ -1773,7 +1841,9 @@ class VersionedLogTable:
             payload_cols=payload_cols,
             string_probe=probe if self.trigram_cols else None,
             probe_columns=self.trigram_cols,
+            row_bound=plan[3] if plan is not None else None,
         )
+        return store, plan
 
     # ---------------------------------------------------------- maintain
     def compact(self) -> None:

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -15,6 +16,28 @@ SF_SMOKE = os.environ.get("DP3_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     spark = get_spark("dp3_spark_tests", extra_conf={"spark.sql.shuffle.partitions": "8"})
     yield spark
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """spark_jobs(fn) -> (fn(), number of Spark jobs fn started), counted
+    through a job group on the status tracker.  The listener bus is
+    drained before counting, so no job fn submitted is missed."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"dp3-test-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "jobs started by one call")
+        try:
+            out = fn()
+        finally:
+            for prop in ("spark.jobGroup.id", "spark.job.description",
+                         "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(prop, None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 @pytest.fixture(scope="session")

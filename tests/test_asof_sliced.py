@@ -143,3 +143,70 @@ def test_sliced_plan_partitions_by_slice(spark):
         .count()
     )
     assert n_slices > 1
+
+
+# ------------------------------------------ manifest row bound skips 'auto'
+
+def _table_store(spark, tmp_path):
+    """The _frames fixture committed to a versioned table: a
+    manifest-planned store whose row_bound is the recorded row count."""
+    from dp3_spark.streaming.lifecycle import VersionedLogTable
+
+    left, right = _frames(spark)
+    vt = VersionedLogTable(spark, str(tmp_path / "vt"))
+    vt.append(left.unionByName(right))
+    store = vt.log_store()
+    assert store.row_bound == 600
+    return store
+
+
+def test_row_bound_skips_auto_slice_count(spark, tmp_path, spark_jobs):
+    """On a small manifest-planned table no producer's run can reach
+    AUTO_SLICE_MAX_ROWS, so compiling an as-of starts zero Spark jobs
+    (the 'auto' count is skipped, not run and discarded)."""
+    from dp3_spark.plans import Compiler
+
+    store = _table_store(spark, tmp_path)
+    df, jobs = spark_jobs(
+        lambda: Compiler(store).compile("from p click precedes purchase;")
+    )
+    assert jobs == 0
+    assert "__slice__" not in df._jdf.queryExecution().executedPlan().toString()
+    assert df.count() > 50
+
+
+def test_row_bound_scales_with_scan_count(spark, tmp_path, spark_jobs, monkeypatch):
+    """The bound is row_bound x scans: a self-join (/gps precedes /gps)
+    reads the table twice, so with the cap at row_bound it must still run
+    the count, and at 2 x row_bound it may skip it."""
+    from dp3_spark.operators import asof as asof_mod
+    from dp3_spark.plans import Compiler
+
+    store = _table_store(spark, tmp_path)
+    stmt = "from p click precedes click;"
+    monkeypatch.setattr(asof_mod, "AUTO_SLICE_MAX_ROWS", 600)
+    _, jobs = spark_jobs(lambda: Compiler(store).compile(stmt))
+    assert jobs > 0
+    monkeypatch.setattr(asof_mod, "AUTO_SLICE_MAX_ROWS", 1200)
+    _, jobs = spark_jobs(lambda: Compiler(store).compile(stmt))
+    assert jobs == 0
+
+
+def test_auto_slice_still_runs_above_row_bound(spark, tmp_path, monkeypatch):
+    """Above row_bound x scans the 'auto' count decides as before: with the
+    cap below the fixture it engages the sliced path, and its rows equal
+    the unsliced path's (a bound of 0 forces time_slices=None)."""
+    import dataclasses
+
+    from dp3_spark.operators import asof as asof_mod
+    from dp3_spark.plans import Compiler
+
+    store = _table_store(spark, tmp_path)
+    stmt = "from p click precedes purchase by less than 120 seconds;"
+    monkeypatch.setattr(asof_mod, "AUTO_SLICE_MAX_ROWS", 100)
+    auto = Compiler(store).compile(stmt)
+    assert "__slice__" in auto._jdf.queryExecution().executedPlan().toString()
+    plain = Compiler(dataclasses.replace(store, row_bound=0)).compile(stmt)
+    assert "__slice__" not in plain._jdf.queryExecution().executedPlan().toString()
+    assert [tuple(r) for r in auto.collect()] == [tuple(r) for r in plain.collect()]
+    assert len(auto.collect()) > 50

@@ -54,6 +54,20 @@ def test_engine_truncate_then_query(engine):
     assert engine.execute("from dev1 /b;").count() == 0
 
 
+def test_warm_engine_plans_without_spark_jobs(engine, spark_jobs):
+    """Regression guard for per-request plan-time work: on a warm,
+    manifest-planned table, building a playback and an as-of plan
+    (execute, no action) starts ZERO Spark jobs — no re-planned snapshot
+    (schema inference) and no as-of skew-guard count."""
+    playback = "from dev1 /a where /a.v >= 15.0;"
+    asof = "from dev1 /a precedes immediate /b by less than 1 seconds;"
+    engine.execute(playback)  # warm: plans the committed snapshot once
+    for stmt in (playback, asof):
+        df, jobs = spark_jobs(lambda: engine.execute(stmt))
+        assert jobs == 0, stmt
+        assert df.count() > 0
+
+
 # ------------------------------------------------------- randomized asof
 
 def python_asof_reference(left, right, immediate, threshold):

@@ -550,3 +550,156 @@ def test_append_files_not_dominated_by_bloom_overhead(spark, table):
         if f.endswith(".parquet")
     }
     assert sizes and max(sizes.values()) < 200_000, sizes
+
+
+# ------------------------------------------------ snapshot memo (log_store)
+
+def test_log_store_memoized_per_snapshot(spark, table, spark_jobs):
+    """Two log_store() calls with no write between them return the SAME
+    store, and the second plans nothing: zero Spark jobs (no schema
+    inference over the planned files, no tombstone probe).  row_bound is
+    the manifests' recorded row count."""
+    table.append(mkbatch(spark, "/a", [10, 20, 30]))
+    table.delete_range("dev1", "/a", 0, 15)  # a tombstone: read() probes it
+    first = table.log_store()
+    second, jobs = spark_jobs(table.log_store)
+    assert second is first
+    assert jobs == 0
+    assert first.row_bound == 3  # recorded rows, before tombstones
+    assert first.df.count() == 2
+
+
+def test_engine_sees_every_write_through_memo(spark, table):
+    """One DP3Engine, one memo: after each of append, delete_range,
+    truncate and compact the NEXT QL query sees the write — each moves
+    the committed watermark or the data generation, so the memo key
+    changes."""
+    from dp3_spark.engine import DP3Engine
+
+    table.append(mkbatch(spark, "/a", [10, 20, 30]))
+    eng = DP3Engine(spark, table=table)
+
+    def times():
+        return [r["log_time"] for r in eng.execute("from dev1 /a;").collect()]
+
+    assert times() == [10, 20, 30]
+    table.append(mkbatch(spark, "/a", [40]))
+    assert times() == [10, 20, 30, 40]
+    table.delete_range("dev1", "/a", 0, 15)
+    assert times() == [20, 30, 40]
+    table.truncate("dev1", "/a", 25)
+    assert times() == [30, 40]
+    before = table.log_store()
+    table.compact()
+    after = table.log_store()
+    assert after is not before  # same watermark, new generation
+    assert after is table.log_store()  # the new generation is memoized
+    assert after.row_bound == 2  # compact physically applied the tombstones
+    assert times() == [30, 40]
+    table.append(mkbatch(spark, "/a", [50]))
+    assert times() == [30, 40, 50]
+
+
+def test_log_store_memo_only_for_manifest_plans(spark, table):
+    """Explicit payload_cols, a legacy manifest-less table and a
+    manifest-less new generation (a compact that crashed between its
+    pointer flip and its base manifest) are planned per call and never
+    memoized; off the manifest plan the row bound is unknown."""
+    import os
+
+    table.append(mkbatch(spark, "/a", [10, 20]))
+    cols = table.log_store(payload_cols=("v",))
+    assert table.log_store(payload_cols=("v",)) is not cols
+    assert cols.payload_cols == ("v",)
+    assert table.log_store() is table.log_store()  # the default does memoize
+
+    shutil.rmtree(os.path.join(table.meta_path, "manifest"))
+    # a fresh handle: the table object above already holds this snapshot
+    table = VersionedLogTable(spark, table.root, gc_grace_sec=0.0)
+    legacy = table.log_store()
+    assert table.log_store() is not legacy
+    assert legacy.row_bound is None
+    assert sorted(r["log_time"] for r in legacy.df.collect()) == [10, 20]
+
+    table.append(mkbatch(spark, "/a", [30]))  # grandfathers a base manifest
+    adopted = table.log_store()
+    assert table.log_store() is adopted
+    assert adopted.row_bound == 3
+
+    table.compact()
+    gen = os.path.basename(table._resolve_data_path())
+    shutil.rmtree(os.path.join(table.meta_path, "manifest", gen))  # the gap
+    gap = table.log_store()
+    assert table.log_store() is not gap
+    assert gap.row_bound is None
+    assert gap.df.count() == 3
+
+
+def test_log_store_memo_under_concurrent_readers(spark, table):
+    """Concurrent service threads (more than cores, with a shortened
+    switch interval to force interleavings) share one memo:
+    - on a cold memo they all get ONE store (the snapshot is planned once);
+    - under live appends each thread's snapshots never go back in time and
+      are always whole batches, and after the writer stops every thread
+      sees the final snapshot."""
+    import sys
+    import threading
+
+    BATCH = 20
+    rows = lambda k: mkbatch(spark, "/a", list(range(k * 1000, k * 1000 + BATCH)))
+    table.append(rows(0))
+    readers = 8
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        start = threading.Barrier(readers)
+        got: list = [None] * readers
+
+        def cold(i):
+            start.wait(timeout=60)
+            got[i] = table.log_store()
+
+        ts = [threading.Thread(target=cold, args=(i,)) for i in range(readers)]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in ts)
+        assert len({id(s) for s in got}) == 1
+
+        stop = threading.Event()
+        seen: list[list] = [[] for _ in range(readers)]
+        err = []
+
+        def writer():
+            try:
+                for k in range(1, 4):
+                    table.append(rows(k))
+            except Exception as e:  # pragma: no cover
+                err.append(e)
+            finally:
+                stop.set()
+
+        def reader(i):
+            try:
+                while not stop.is_set():
+                    seen[i].append(table.log_store().row_bound)
+                seen[i].append(table.log_store().row_bound)
+            except Exception as e:  # pragma: no cover
+                err.append(e)
+
+        ts = [threading.Thread(target=reader, args=(i,)) for i in range(readers)]
+        ts.append(threading.Thread(target=writer))
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(timeout=300)
+        assert not any(t.is_alive() for t in ts)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not err
+    for s in seen:
+        assert s == sorted(s), s
+        assert all(b % BATCH == 0 for b in s), s
+        assert s[-1] == 4 * BATCH
+    assert table.log_store().df.count() == 4 * BATCH
