@@ -15,6 +15,7 @@ dp3_spark.output.
 
 from __future__ import annotations
 
+import dataclasses
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -23,7 +24,7 @@ from pyspark.sql import functions as F
 from dp3_spark.catalog import LogStore
 from dp3_spark.output import to_json_lines, to_json_shape
 from dp3_spark.plans import Compiler
-from dp3_spark.ql import parse
+from dp3_spark.ql import ast, parse
 from dp3_spark.streaming.lifecycle import VersionedLogTable
 
 
@@ -57,10 +58,11 @@ class DP3Engine:
         # skew-guard count job on tables too small to need slicing.
         return self.table.log_store()
 
-    def execute(self, statement: str) -> Optional[DataFrame]:
-        """Run one QL statement.  Queries return a DataFrame; truncate
-        applies to the writable table and returns None."""
-        stmt = parse(statement)
+    def execute(self, statement: str | ast.Statement) -> Optional[DataFrame]:
+        """Run one QL statement (text or parsed).  Queries return a
+        DataFrame; truncate applies to the writable table and returns
+        None."""
+        stmt = parse(statement) if isinstance(statement, str) else statement
         if stmt.truncate is not None:
             if self.table is None:
                 raise ValueError("truncate requires a writable VersionedLogTable")
@@ -87,8 +89,16 @@ class DP3Engine:
         executor/executor.go:62-108).  Returns the message count."""
         from dp3_spark.sinks import query_to_mcap
 
-        df = self.execute(statement)
-        assert df is not None
+        q = parse(statement).query
+        assert q is not None
+        # the sink sorts by its own (log_time, producer, topic, sequence)
+        # order.  Compiled without a row bound, the statement's sort is a
+        # range-partitioned orderBy, which Catalyst drops under the sink's,
+        # so the export runs one sort; a one-task sort would leave its
+        # single-partition exchange under the sink's.  (An as-of in the
+        # statement then plans its skew guard as on any unbounded store.)
+        store = dataclasses.replace(self._store(), row_bound=None)
+        df = Compiler(store).compile_query(q)
         return query_to_mcap(df, out, skeleton=skeleton, **opts)
 
     # ------------------------------------------------------------------

@@ -30,10 +30,6 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 
 STOPWORDS_EN = LANG_STOPWORDS["en"]
 
-# BPE-ish token estimate: word chunks of <=4 chars count once; longer words
-# count ceil(len/4) — a cheap, deterministic proxy for subword tokenizers.
-_BPE_CHUNK = 4
-
 
 def _sql_list(words: tuple[str, ...]) -> str:
     return ", ".join(f"'{w}'" for w in words)
@@ -70,25 +66,6 @@ def tokens(col: str) -> tuple[str, str]:
 def token_count(col: str) -> tuple[str, str]:
     s, d = tokens(col)
     return f"size({s})", f"len({d})"
-
-
-def bpe_token_estimate(col: str) -> tuple[str, str]:
-    """ceil(len(word)/4) summed over words — BPE-ish subword count proxy."""
-    s, d = tokens(col)
-    spark = (
-        f"aggregate(transform({s}, w -> cast(ceil(length(w) / {_BPE_CHUNK}.0) as bigint)), "
-        f"cast(0 as bigint), (acc, x) -> acc + x)"
-    )
-    duck = (
-        f"list_reduce(list_prepend(cast(0 as bigint), "
-        f"list_transform({d}, w -> cast(ceil(length(w) / {_BPE_CHUNK}.0) as bigint))), "
-        f"(acc, x) -> acc + x)"
-    )
-    return spark, duck
-
-
-def char_count(col: str) -> tuple[str, str]:
-    return f"length({col})", f"length({col})"
 
 
 def alnum_space_count(col: str) -> tuple[str, str]:

@@ -74,11 +74,6 @@ def deterministic_sample(
     return df.filter(F.expr(b_s) < int(fraction * 1_000_000))
 
 
-def deterministic_sample_oracle_pred(id_col: str, *, fraction: float, salt: str = "") -> str:
-    _, b_d = _bucket_exprs(id_col, salt, 1_000_000)
-    return f"({b_d}) < {int(fraction * 1_000_000)}"
-
-
 def sample_k_per_group(
     df: DataFrame,
     id_col: str,

@@ -7,9 +7,11 @@ a, gamma = (1+a)/(1-a); positive values map to bin ceil(log_gamma(x)), with
 a dedicated zero bin and mirrored negative bins.  A sketch is a
 map<int, long> column — storable in a summary table, mergeable by summing
 bin counts, quantile-extractable with rank-accuracy-free relative error
-<= a.  Everything is built-in expressions + one explode/groupBy per
-operation: no UDAF object state, so partial aggregation and AQE behave
-normally at any scale.
+<= a.  Everything is built-in expressions: building and merging are one
+explode/groupBy each, and quantile extraction is one projection (a
+higher-order walk over each row's sorted bins, no shuffle).  No UDAF
+object state, so partial aggregation and AQE behave normally at any
+scale.
 
 Bin arithmetic uses double log(); bins are engine-deterministic but NOT
 oracle-compared bit-for-bit (libm may differ across engines) — accuracy
@@ -21,7 +23,7 @@ from __future__ import annotations
 import math
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_ACCURACY = 0.01  # reference: nodestore/statistics.go:130
@@ -48,13 +50,15 @@ def bin_expr(col: str, accuracy: float = DEFAULT_ACCURACY) -> Column:
     )
 
 
-def bin_value(accuracy: float = DEFAULT_ACCURACY) -> Column:
-    """Representative value of a bin column named `bin`: the geometric mean
-    gamma^(e - 0.5) of the bin interval — relative error <= accuracy."""
+def bin_value(b: str, accuracy: float = DEFAULT_ACCURACY) -> Column:
+    """Representative value of bin column `b` (a column name or SQL
+    expression): the geometric mean gamma^(e - 0.5) of the bin interval —
+    relative error <= accuracy.  Double literals carry lg exactly."""
     lg = math.log(_gamma(accuracy))
-    b = F.col("bin")
-    mag = F.exp((F.abs(b) - F.lit(_OFFSET)).cast("double") * F.lit(lg) - F.lit(0.5 * lg))
-    return F.when(b == ZERO_BIN, F.lit(0.0)).when(b > 0, mag).otherwise(-mag)
+    mag = f"exp(cast(abs({b}) - {_OFFSET} as double) * {lg!r}D - {0.5 * lg!r}D)"
+    return F.expr(
+        f"case when {b} = {ZERO_BIN} then 0.0D when {b} > 0 then {mag} else -{mag} end"
+    )
 
 
 def sketch_summarize(
@@ -89,6 +93,20 @@ def sketch_merge(df: DataFrame, *, keys: Sequence[str]) -> DataFrame:
     )
 
 
+# The DDSketch walk for one quantile, as one higher-order fold over a
+# row's key-sorted bins: carry the running count and keep the first bin
+# whose count reaches the rank.  SQL text, not the Python Column API: a
+# lambda built through the Column API costs hundreds of py4j round trips
+# of driver time per request; the text is parsed once by the JVM.
+_WALK = (
+    "aggregate(array_sort(map_entries(sketch)), "
+    "named_struct('cum', 0L, 'bin', cast(null as bigint)), "
+    "(acc, e) -> named_struct('cum', acc.cum + e.value, 'bin', "
+    "if(acc.bin is null and acc.cum + e.value >= {rank}, cast(e.key as bigint), acc.bin)), "
+    "acc -> acc.bin)"
+)
+
+
 def sketch_quantiles(
     df: DataFrame,
     *,
@@ -101,6 +119,13 @@ def sketch_quantiles(
     take the first bin whose cumulative count covers q * n (the DDSketch
     GetValueAtQuantile walk, relative error <= accuracy).
 
+    Input contract: one row per key with a non-empty `sketch` and its
+    `sketch_n`, as sketch_summarize / sketch_merge produce.  Each quantile
+    is one fold over the row's bins, so extraction is a projection: no
+    explode, window or join.  The rank is double(q) * sketch_n (a double
+    literal — a bare SQL 0.07 is DECIMAL, and 0.07 * 100 as a decimal is
+    7 where the double product is 7.000000000000001, a different bin).
+
     Output: keys + p{N} columns (value of the covering bin), or the raw
     covering bin indices as p{N}_bin longs when values=False.  Bin
     INDICES are bit-exact across engines (ceil(ln/ln) agreed on every
@@ -108,26 +133,19 @@ def sketch_quantiles(
     exp() differs in the last ulp between JVM Math.exp and libm — so
     cross-engine comparisons (the registry oracle) use bins, and callers
     wanting floats apply bin_value to them."""
-    exploded = df.select(*keys, "sketch_n", F.explode("sketch").alias("bin", "cnt"))
-    w = Window.partitionBy(*keys).orderBy("bin")
-    cum = exploded.withColumn("cum", F.sum("cnt").over(w))
-    out = None
-    for q in quantiles:
-        rank = (F.lit(q) * F.col("sketch_n")).cast("double")
-        col = (
-            bin_value(accuracy).alias(f"p{int(q * 100)}")
-            if values
-            else F.col("bin").alias(f"p{int(q * 100)}_bin")
-        )
-        hit = (
-            cum.filter(F.col("cum") >= rank)
-            .withColumn("__rn__", F.row_number().over(w))
-            .filter(F.col("__rn__") == 1)
-            .select(*keys, col)
-        )
-        out = hit if out is None else out.join(hit, list(keys))
-    assert out is not None
-    return out
+    names = [f"p{int(q * 100)}" for q in quantiles]
+    bins = df.select(
+        *keys,
+        *(
+            F.expr(_WALK.format(rank=f"{float(q)!r}D * sketch_n")).alias(f"{n}_bin")
+            for q, n in zip(quantiles, names)
+        ),
+    )
+    if not values:
+        return bins
+    # a separate projection: bin_value reads its column three times, and
+    # Catalyst does not inline a fold it would then evaluate thrice
+    return bins.select(*keys, *(bin_value(f"{n}_bin", accuracy).alias(n) for n in names))
 
 
 # ------------------------------------------------------------ HyperLogLog

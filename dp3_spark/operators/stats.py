@@ -24,6 +24,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from dp3_spark.catalog import LogStore, time_range_filter
 
@@ -370,9 +371,19 @@ class SummaryStore:
         self.sketch_fields = tuple(
             sketch_fields if sketch_fields is not None else meta.get("sketch_fields", ())
         )
+        self._schema: StructType | None = None
 
     def _read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)
+        """The store's rows.  The directory is listed on every read (a
+        streaming sink grows it, and a cached listing would serve stale
+        statistics); only the parquet schema is resolved once, by the
+        first read that finds rows, so later reads skip the inference
+        job.  An empty store raises and caches nothing."""
+        if self._schema is not None:
+            return self.spark.read.schema(self._schema).parquet(self.path)
+        df = self.spark.read.parquet(self.path)
+        self._schema = df.schema
+        return df
 
     def compact(self) -> int:
         """Merge partial rows back to ONE row per (keys, bucket) — the
@@ -472,6 +483,7 @@ class SummaryStore:
         os.rename(self.path, old)
         os.rename(staging, self.path)
         shutil.rmtree(old, ignore_errors=True)
+        self._schema = None  # the rewrite may lay columns out anew
         return n
 
     def can_serve(

@@ -38,7 +38,7 @@ from pyspark.sql import types as T
 
 from dp3_spark.catalog import LogStore, drop_internal, time_range_filter
 from dp3_spark.operators import asof as ASOF
-from dp3_spark.operators.merge import ordered_merge
+from dp3_spark.operators.merge import ordered_merge, sort_rows
 from dp3_spark.ql import ast
 from dp3_spark.ql.parser import parse
 
@@ -256,7 +256,11 @@ class Compiler:
                 F.col("__child__"),
                 F.col("sequence").desc(),
             ]
-        df = drop_internal(df.orderBy(*order).drop("__child__"))
+        # a limited statement already plans as a top-k sort
+        # (TakeOrderedAndProject), which samples nothing: keep it
+        bound = None if q.limit is not None else self._rows_bound(q.select)
+        df = sort_rows(df, order, bound)
+        df = drop_internal(df.drop("__child__"))
 
         if q.offset is not None:
             df = df.offset(q.offset)
@@ -302,16 +306,21 @@ class Compiler:
             )
         raise CompileError(f"unknown select node {node!r}")
 
-    def _asof_slices(self, node: ast.AsofJoin) -> str | None:
-        """time_slices for one as-of node.  Each scan under it reads at
-        most the store's row_bound rows (a filtered view of the table; a
-        nested as-of emits a subset of its inputs), so the merged union
-        holds at most row_bound x scans rows.  When that cannot exceed
-        AUTO_SLICE_MAX_ROWS no producer's run can either, and the 'auto'
-        count would return None: skip it (exact, not a heuristic).
-        Unknown bound or above it: the 'auto' count decides."""
+    def _rows_bound(self, node: ast.SelectNode) -> int | None:
+        """Proven bound on the rows `node` emits, or None.  Each scan under
+        it reads at most the store's row_bound rows (a filtered view of
+        the table; a merge is their union and an as-of emits a subset of
+        its inputs), so the node holds at most row_bound x scans rows."""
         bound = self.store.row_bound
-        if bound is None or bound * len(ast.scans(node)) > ASOF.AUTO_SLICE_MAX_ROWS:
+        return None if bound is None else bound * len(ast.scans(node))
+
+    def _asof_slices(self, node: ast.AsofJoin) -> str | None:
+        """time_slices for one as-of node.  When its merged union's bound
+        cannot exceed AUTO_SLICE_MAX_ROWS no producer's run can either,
+        and the 'auto' count would return None: skip it (exact, not a
+        heuristic).  Unknown bound or above it: the 'auto' count decides."""
+        bound = self._rows_bound(node)
+        if bound is None or bound > ASOF.AUTO_SLICE_MAX_ROWS:
             return "auto"
         return None
 

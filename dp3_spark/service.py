@@ -32,6 +32,7 @@ equivalent; production fronts Spark with a real gateway).
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import re
 import tempfile
@@ -40,6 +41,8 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
 
 from dp3_spark.engine import DP3Engine
+from dp3_spark.operators.merge import sort_rows
+from dp3_spark.ql import parse
 
 # names interpolated into a QL statement (export route): anything outside
 # this set could change the parsed statement shape
@@ -303,7 +306,9 @@ class DP3Service:
                     counts = eng.tail_version_counts(frm)
                 except Exception:
                     counts = None
-                rows, upto = None, frm
+                # bound: the exact row count of a manifest-planned body,
+                # which lets a small one sort in one task (sort_rows)
+                rows, upto, bound = None, frm, None
                 if counts is not None:
                     upto, n = frm, 0
                     for v, c in counts:
@@ -311,7 +316,7 @@ class DP3Service:
                             break
                         upto, n = v, n + c
                     if upto > frm:
-                        rows = eng.tail_slice(frm, upto)
+                        rows, bound = eng.tail_slice(frm, upto), n
                         if rows is None:
                             # the manifests vanished between the plan and
                             # the read (a compact raced this poll): the
@@ -319,6 +324,7 @@ class DP3Service:
                             # never served — re-derive both from the scan
                             counts = None
                 if counts is None:
+                    bound = None
                     tl = eng.tail(frm)
                     per_v = (
                         tl.groupBy("version").count().orderBy("version").collect()
@@ -334,8 +340,8 @@ class DP3Service:
                 out = _ChunkedWriter(h, "application/json")
                 out.write(json.dumps({"version": upto}).encode() + b"\n")
                 if rows is not None:
-                    rows = rows.orderBy(
-                        "log_time", "producer", "topic", "sequence"
+                    rows = sort_rows(
+                        rows, ["log_time", "producer", "topic", "sequence"], bound
                     )
                     for s in rows.toJSON().toLocalIterator():
                         out.write((s if isinstance(s, str) else s[0]).encode() + b"\n")
@@ -384,16 +390,24 @@ class DP3Service:
             return
         from dp3_spark.output import to_json_lines
 
-        df = eng.execute(stmt)
+        off = int(req.get("offset") or 0)
+        lim = int(req.get("limit") or 0)
+        parsed = parse(stmt)
+        q = parsed.query
+        # bound the scan BEFORE materialization: QL output is time-ordered
+        # by construction, so its first off+lim rows are the deterministic
+        # head.  A query folds that head into its own limit (applied after
+        # its offset), so the compiler plans one top-k sort for it; an
+        # explain statement's plan text is not folded and is cut after.
+        fold = bool(lim) and q is not None and not q.explain
+        if fold:
+            head = off + lim if q.limit is None else min(q.limit, off + lim)
+            parsed = dataclasses.replace(parsed, query=dataclasses.replace(q, limit=head))
+        df = eng.execute(parsed)
         if df is None:  # truncate statement
             _respond(h, 200, {"ok": True})
             return
-        off = int(req.get("offset") or 0)
-        lim = int(req.get("limit") or 0)
-        if lim:
-            # bound the scan BEFORE materialization: QL output is
-            # time-ordered by construction, so limit(off+lim) is the
-            # deterministic head
+        if lim and not fold:
             df = df.limit(off + lim)
         lines_df = to_json_lines(df, skeleton=bool(req.get("skeleton")))
         # stream the response as it executes (routes/query.go:92-135 pipes

@@ -222,17 +222,6 @@ def decode_audio_metadata(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return df.select(id_col, "payload").mapInPandas(decode, AUDIO_SCHEMA)
 
 
-def decode_image_stub(data: bytes) -> tuple[int, int, int]:
-    """Fallback pseudo-decode for payloads with no parseable image header
-    (e.g. the fixture's text-as-binary payloads): (content_hash, width,
-    height) deterministically derived from the bytes so tests and oracles
-    are stable.  A real deployment swaps this for PIL/libvips inside the
-    same mapInPandas batch loop; real PNG/JPEG/GIF headers never reach it
-    (parse_image_dims handles those)."""
-    h = poly_hash_bytes(data)
-    return h, 1 + h % 1024, 1 + (h // 1024) % 1024
-
-
 def with_binary_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Fixture adapter: treat utf-8 bytes of a text column as the opaque
     binary payload (the driver fixtures have no true binary column)."""

@@ -6,6 +6,8 @@ import math
 import random
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from dp3_spark.operators import sketch as SK
@@ -63,6 +65,62 @@ def test_nan_inf_excluded(spark):
     df = spark.createDataFrame(rows, "k int, v double")
     sk = SK.sketch_summarize(df, keys=["k"], field="v")
     assert sk.collect()[0]["sketch_n"] == 2
+
+
+# ------------------------------------------- quantile walk, property-based
+
+_BIN = st.one_of(
+    st.just(SK.ZERO_BIN),
+    st.integers(-40, 40).map(lambda e: e + SK._OFFSET),
+    st.integers(-40, 40).map(lambda e: -(e + SK._OFFSET)),
+)
+_SKETCH = st.dictionaries(_BIN, st.integers(1, 50), min_size=1, max_size=12)
+_Q = st.one_of(
+    st.sampled_from([0.07, 0.29, 0.57, 0.9, 0.99, 1.0]),
+    st.floats(0.0, 1.0, exclude_min=True),
+)
+
+
+def _walk(sketch: dict, q: float) -> int:
+    """Reference walk: the first bin, in bin order, whose running count
+    reaches the double rank q * n."""
+    rank, cum = float(q) * sum(sketch.values()), 0
+    for b in sorted(sketch):
+        cum += sketch[b]
+        if cum >= rank:
+            return b
+    raise AssertionError("rank beyond the sketch")
+
+
+@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    sketches=st.lists(_SKETCH, min_size=1, max_size=12),
+    qs=st.lists(_Q, min_size=1, max_size=5, unique_by=lambda q: int(q * 100)),
+)
+@example(sketches=[{SK._OFFSET + i: 1 for i in range(100)}], qs=[0.07, 0.29, 0.57])
+def test_sketch_quantiles_matches_reference_walk(spark, sketches, qs):
+    """sketch_quantiles on sketches with zero, negative and positive bins
+    over several keys.  Input contract: one row per key, as
+    sketch_summarize / sketch_merge produce.  values=False bins equal a
+    pure-Python walk at the same double rank (0.07 x 100 is
+    7.000000000000001, so the example's p7 is the 8th bin, not the 7th);
+    values=True equals bin_value of those bins."""
+    rows = [(k, sk, sum(sk.values())) for k, sk in enumerate(sketches)]
+    df = spark.createDataFrame(rows, "k int, sketch map<bigint,bigint>, sketch_n bigint")
+    # one Spark job per example: the values=True walk runs over the
+    # values=False output, whose bins ride along renamed as keys
+    n = len(qs)
+    bins = SK.sketch_quantiles(
+        df, keys=["k", "sketch", "sketch_n"], quantiles=qs, values=False
+    ).toDF("k", "sketch", "sketch_n", *(f"b{i}" for i in range(n)))
+    bin_cols = [f"b{i}" for i in range(n)]
+    both = SK.sketch_quantiles(bins, keys=["k", *bin_cols], quantiles=qs, values=True)
+    got = both.select("*", *(SK.bin_value(c) for c in bin_cols)).collect()
+    assert sorted(tuple(r[: 1 + n]) for r in got) == [
+        (k, *(_walk(sk, q) for q in qs)) for k, sk in enumerate(sketches)
+    ]
+    for r in got:
+        assert tuple(r[1 + n: 1 + 2 * n]) == tuple(r[1 + 2 * n:])
 
 
 # ----------------------------------------------------------- HyperLogLog

@@ -441,3 +441,47 @@ def test_compact_auto_recovers_from_crashed_prior_compact(spark, store, tmp_path
     s2.compact()
     assert os.path.exists(path) and not os.path.exists(path + "._old")
     assert _collect_sorted(ST.SummaryStore(spark, path).stat_range(**REQ)) == before
+
+
+# ------------------------------------------ job-count regression guards
+
+def test_raw_quantiles_job_count(spark, store, spark_jobs):
+    """A one-bucket raw quantile request (the serve shape) runs the two
+    sketch-build shuffles and one projection walking every requested
+    quantile: at most 3 Spark jobs.  A per-quantile window + row_number +
+    join pass (7 jobs and more) fails here."""
+    eng = DP3Engine(spark, store=store)
+    rows, jobs = spark_jobs(lambda: eng.stat_quantiles(
+        topic="/a", start_ns=0, end_ns=3600 * 10**9,
+        granularity_ns=3600 * 10**9, quantiles=(0.07, 0.5, 0.9, 0.99),
+    ).collect())
+    assert len(rows) == 1
+    assert jobs <= 3
+
+
+def test_summary_schema_resolved_once(spark, summary_path, spark_jobs):
+    """The first serve of a SummaryStore resolves the parquet schema (one
+    inference job); every later serve reads with it and starts one job
+    fewer, with the same answer."""
+    s = ST.SummaryStore(spark, summary_path)
+    first, j1 = spark_jobs(lambda: s.stat_range(**REQ).collect())
+    second, j2 = spark_jobs(lambda: s.stat_range(**REQ).collect())
+    assert second == first
+    assert j2 == j1 - 1
+
+
+def test_partial_appended_between_serves_is_counted(spark, summary_path, tmp_path):
+    """Only the schema is cached, never the listing: a partial row file a
+    maintainer appends between two serves is merged into the second."""
+    d = str(tmp_path / "grown")
+    shutil.copytree(summary_path, d)
+    s = ST.SummaryStore(spark, d)
+    before = s.stat_range(**REQ).agg(F.sum("message_count")).collect()[0][0]
+    partial = spark.read.parquet(d).filter(
+        (F.col("topic") == "/a") & (F.col("bucket_start") < 3600 * 10**9)
+    )
+    added = partial.agg(F.sum("message_count")).collect()[0][0]
+    partial.write.mode("append").partitionBy("topic").parquet(d)
+    after = s.stat_range(**REQ).agg(F.sum("message_count")).collect()[0][0]
+    assert added > 0
+    assert after == before + added
