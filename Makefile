@@ -2,7 +2,7 @@
 # recorded count is copy-paste reproducible (r8 verdict ask on the
 # gate-scale oracle sweep's env var).
 
-.PHONY: test oracle-gate oracle-sf1 bench
+.PHONY: test oracle-gate oracle-lsh oracle-sf1 bench
 
 # full suite (what "686 passed"-style ledger lines run)
 test:
@@ -12,6 +12,14 @@ test:
 # at sf0.01 — the exact comparison CORRECTNESS_r{N}.json gates on
 oracle-gate:
 	DP3_ORACLE_SF=/root/testdata/sf0.01 python -m pytest tests/test_oracle.py -q
+
+# the LSH-family rows of the gate sweep (every producer on the shared
+# band -> candidate -> verify core), at the same sf0.01
+LSH_ROWS = dedup_minhash_lsh or dedup_minhash_capped or dedup_incremental \
+	or dedup_clusters or dedup_keep_best or stream_corpus_dedup \
+	or decontam_fuzzy or sim_dup_pairs_lsh or sem_dedup
+oracle-lsh:
+	PYTEST_ADDOPTS='-k "$(LSH_ROWS)"' $(MAKE) --no-print-directory oracle-gate
 
 # the 10x-rows answer sweep (opt-in; ~35 min)
 oracle-sf1:

@@ -49,8 +49,8 @@ _CARRIED = "__carried__"
 # Auto skew guard: when any single producer's merged run exceeds this many
 # rows, the window stage would serialize that producer onto one task —
 # switch to the time-sliced path.  Same auto-dispatch idiom as
-# similarity.BROADCAST_VERIFY_MAX_ROWS: a module constant callers (and
-# tests) can tune.  2M rows ≈ a few hundred MB of log rows, the point
+# dedup.VERIFY_BROADCAST_MAX_ROWS: a module constant callers (and tests)
+# can tune.  2M rows ≈ a few hundred MB of log rows, the point
 # where one sorted run stops fitting a task comfortably.
 AUTO_SLICE_MAX_ROWS = 2_000_000
 

@@ -31,23 +31,24 @@ POLY_MOD = TXT.POLY_MOD
 # Fixed seeds so the oracle SQL embeds identical values.
 MINHASH_P = 2_147_483_647  # 2^31 - 1; products stay < 2^62 (no int64 overflow)
 
-# incremental probe: broadcast the batch's band keys while the batch stays
-# under this many docs (x bands rows of (band, key, id) ~ 24 B each →
-# ~20 MB at 50k docs / 16 bands); beyond it, fall back to the symmetric
-# shuffle join — a "batch" that big is a backfill, not a refresh
+# incremental probe: hint a broadcast of the batch's band keys while the
+# batch stays under this many docs (x bands rows of (band, key, id) ~ 24 B
+# each → ~20 MB at 50k docs / 16 bands); beyond it the planner shuffles
+# both sides — a "batch" that big is a backfill, not a refresh
 PROBE_BROADCAST_MAX_ROWS = 50_000
 # below this index size the broadcast verify's full (id, shingles) collect
 # is already bounded — the endpoint slice's extra eager job isn't worth it
 ENDPOINT_SLICE_MIN_INDEX_ROWS = 32_768
-# verify transport budget: total signature rows a broadcast verify may
-# collect driver-side (~2.4 KB of shingles per doc → ~500 MB at the cap)
+# verify transport budget (verify_pairs): payload rows a broadcast verify
+# may collect driver-side — ~2.4 KB of shingles per doc, or a 768-dim
+# float32 embedding, puts the cap at ~500-600 MB
 VERIFY_BROADCAST_MAX_ROWS = 200_000
 # probe-regime endpoint slice: broadcast the candidate-endpoint id set
 # (8 B/long → ~16 MB at the cap) to semi-join the signature table down to
 # candidate endpoints BEFORE the verify transport, so verify cost is
 # O(candidates) however large the index.  Above the cap (a pathological
 # fan-out where the endpoint set is no longer a small fraction of the
-# index), fall back to the full-table shuffle verify.
+# index), the verify takes the whole table.
 ENDPOINT_SLICE_MAX_BROADCAST_IDS = 2_000_000
 
 
@@ -340,49 +341,6 @@ def _banded_frame(
     )
 
 
-def _verify_shuffle(cand: DataFrame, sigs: DataFrame, threshold: float) -> DataFrame:
-    """Exact-jaccard verification with shingle arrays delivered by two
-    hash joins (the at-scale transport when the signature table exceeds
-    broadcast range).  cand: (id_a, id_b); sigs: minhash_signatures output."""
-    import pandas as pd
-
-    thr = threshold
-
-    def _verify_cols(batches):
-        for pdf in batches:
-            shared = _np_shared_counts(pdf["sh_a"].values, pdf["sh_b"].values)
-            denom = pdf["card_a"].values + pdf["card_b"].values - shared
-            jac = shared / denom
-            keep = jac >= thr
-            yield pd.DataFrame(
-                {
-                    "id_a": pdf["id_a"].values[keep],
-                    "id_b": pdf["id_b"].values[keep],
-                    "jaccard": jac[keep],
-                }
-            )
-
-    sh_sets = sigs.select("id", "shingles", "card")
-    return (
-        cand.join(
-            sh_sets.withColumnsRenamed({"id": "id_a", "shingles": "sh_a", "card": "card_a"}),
-            "id_a",
-        )
-        .join(
-            sh_sets.withColumnsRenamed({"id": "id_b", "shingles": "sh_b", "card": "card_b"}),
-            "id_b",
-        )
-        # exact pre-prune: jaccard <= min(card)/max(card), so pairs
-        # failing the cardinality ratio can't pass the threshold
-        .filter(
-            F.least("card_a", "card_b").cast("double")
-            >= F.lit(threshold) * F.greatest("card_a", "card_b").cast("double")
-        )
-        .select("id_a", "id_b", "card_a", "card_b", "sh_a", "sh_b")
-        .mapInPandas(_verify_cols, "id_a long, id_b long, jaccard double")
-    )
-
-
 def _np_shared_counts(sh_a, sh_b):
     """Exact |A ∩ B| for EVERY pair in one vectorized pass — no per-pair
     Python loop.  Spark's array_intersect is a CodegenFallback
@@ -409,6 +367,111 @@ def _np_shared_counts(sh_a, sh_b):
     return np.bincount(a_pair[hit], minlength=npairs).astype(np.int64)
 
 
+def _jaccard_kernel(sh_a, sh_b, thr):
+    """verify_pairs kernel for shingle sets: (keep, jaccard).  Exact
+    pre-prune first — jaccard <= min(card)/max(card), so a pair failing
+    the cardinality ratio can't pass and skips the intersect."""
+    import numpy as np
+
+    card_a = np.fromiter((a.size for a in sh_a), dtype=np.int64, count=len(sh_a))
+    card_b = np.fromiter((b.size for b in sh_b), dtype=np.int64, count=len(sh_b))
+    ok = np.minimum(card_a, card_b) >= thr * np.maximum(card_a, card_b)
+    shared = np.zeros(len(sh_a), dtype=np.int64)
+    shared[ok] = _np_shared_counts(sh_a[ok], sh_b[ok])
+    jac = shared / (card_a + card_b - shared)
+    return ok & (jac >= thr), jac
+
+
+def verify_pairs(
+    cand: DataFrame,
+    table: DataFrame,
+    n_rows: int,
+    kernel,
+    score_col: str,
+    thr: float,
+) -> DataFrame:
+    """The one exact-verify step behind every LSH pair producer (MinHash
+    Jaccard here, embedding cosine in similarity.py).
+
+    cand: (id_a, id_b) candidate pairs, repeated once per shared bucket.
+    table: (id, payload) — the id column first, the payload the kernel
+    scores (a shingle set, a vector); null payloads never verify.
+    n_rows: a bound on table's rows the caller already knows; it picks
+    the payload transport:
+    - n_rows <= VERIFY_BROADCAST_MAX_ROWS: the table is collected with
+      Arrow and shipped to workers once (sc.broadcast), the pair stream
+      carries two longs per row, and each batch finds its rows by
+      searchsorted over the sorted ids — on a near-dup-heavy corpus a
+      per-pair payload join would duplicate every shingle array per
+      candidate (~5 GB through Arrow for 1M pairs of 300-shingle docs);
+    - above it, payloads arrive by two hash joins on id and nothing
+      reaches the driver (the at-scale path).
+    kernel(a_payloads, b_payloads, thr) -> (keep mask, score) is one
+    whole-batch numpy pass over row-aligned payload arrays; both
+    transports feed it the same payloads, so the output is identical.
+    Output: the (id_a, id_b, score_col) rows the kernel kept, one per
+    pair while table ids are unique."""
+    import numpy as np
+    import pandas as pd
+
+    schema = f"id_a long, id_b long, {score_col} double"
+    table = table.toDF("id", "payload").filter(F.col("payload").isNotNull())
+    broadcast = n_rows <= VERIFY_BROADCAST_MAX_ROWS
+    # a pair colliding in several buckets appears once per bucket.  On the
+    # shuffle transport dedup BEFORE verify: dup pairs would fetch both
+    # payloads again.  On the broadcast transport the pair stream is two
+    # bare longs and the kernel is vectorized — re-verifying a ~1.3x dup
+    # factor is far cheaper than a full-candidate-list distinct shuffle
+    # (measured 2x cold / 15% warm on the sf0.1 corpus), so dedup the few
+    # verified pairs AFTER instead.
+    if not broadcast:
+        cand = cand.distinct()
+    # AQE coalesces the byte-small candidate shuffle to 1-2 partitions, but
+    # verify does per-pair numpy work — re-spread it across the cores
+    cand = cand.repartition(2 * cand.sparkSession.sparkContext.defaultParallelism)
+
+    def scored(ia, ib, pa, pb):
+        keep, score = kernel(pa, pb, thr)
+        return pd.DataFrame({"id_a": ia[keep], "id_b": ib[keep], score_col: score[keep]})
+
+    if not broadcast:
+        def run_joined(batches):
+            for pdf in batches:
+                yield scored(
+                    pdf["id_a"].values, pdf["id_b"].values,
+                    pdf["pa"].values, pdf["pb"].values,
+                )
+
+        return (
+            cand.join(table.toDF("id_a", "pa"), "id_a")
+            .join(table.toDF("id_b", "pb"), "id_b")
+            .select("id_a", "id_b", "pa", "pb")
+            .mapInPandas(run_joined, schema)
+        )
+    # Arrow transfer (guide §6 "Arrow for driver transfers"): a row
+    # collect() boxes every array element as a Python object — measured
+    # ~3x slower than toPandas for a ~1.5M-element pull
+    pdf = table.toPandas()
+    order = np.argsort(pdf["id"].values, kind="stable")
+    bc = cand.sparkSession.sparkContext.broadcast(
+        (pdf["id"].values[order], pdf["payload"].values[order])
+    )
+
+    def run_broadcast(batches):
+        ids, payloads = bc.value
+        for pdf in batches:
+            if not ids.size:
+                continue
+            ia, ib = pdf["id_a"].values, pdf["id_b"].values
+            ra = np.minimum(np.searchsorted(ids, ia), ids.size - 1)
+            rb = np.minimum(np.searchsorted(ids, ib), ids.size - 1)
+            # an id the table lacks drops its pair, as the joins above do
+            hit = (ids[ra] == ia) & (ids[rb] == ib)
+            yield scored(ia[hit], ib[hit], payloads[ra[hit]], payloads[rb[hit]])
+
+    return cand.mapInPandas(run_broadcast, schema).dropDuplicates(["id_a", "id_b"])
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,
@@ -418,7 +481,6 @@ def minhash_lsh_pairs(
     num_hashes: int = 128,
     bands: int = 16,
     threshold: float = 0.6,
-    verify: str = "auto",
     candidates: str = "all",
     bucket_cap: int = 64,
 ) -> DataFrame:
@@ -460,22 +522,13 @@ def minhash_lsh_pairs(
     the fixture corpus the derived components are identical to all-pairs
     (pinned in tests).  Not for consumers that need the complete list.
 
-    verify='broadcast' ships the (id -> shingle set) table to workers ONCE
-    (sc.broadcast) and streams bare (id_a, id_b) pairs through the numpy
-    intersect — on a near-dup-heavy corpus the alternative per-pair array
-    join duplicates every shingle array per candidate (~5 GB through Arrow
-    for 1M pairs of 300-shingle docs).  verify='shuffle' does that join —
-    arrays flow through a shuffle once per pair side — for corpora whose
-    signature table exceeds broadcast range (the at-scale path; same numpy
-    kernel, different array transport).  'auto' picks by corpus size."""
+    The verify transport (verify_pairs) follows the document count:
+    broadcast shingle table within VERIFY_BROADCAST_MAX_ROWS, two hash
+    joins beyond."""
     if num_hashes % bands != 0:
         raise ValueError("num_hashes must divide into equal bands")
-    if verify not in ("auto", "broadcast", "shuffle"):
-        raise ValueError(f"unknown verify mode {verify!r}")
     if candidates not in ("all", "capped"):
         raise ValueError(f"unknown candidates mode {candidates!r}")
-    rows = num_hashes // bands
-    par = df.sparkSession.sparkContext.defaultParallelism
     # a small parquet reads as few partitions; the signature work is
     # CPU-bound per row, so spread under-parallel inputs first (see
     # _spread_text — many-split inputs are left alone)
@@ -487,10 +540,26 @@ def minhash_lsh_pairs(
     sigs = minhash_signatures(
         _spread_text(df), id_col, text_col, n=n, num_hashes=num_hashes
     ).cache()
-    n_docs = sigs.count()
-    if verify == "auto":
-        # ~300 shingles/doc × 8 B ≈ 2.4 KB/doc: 200k docs ≈ 500 MB broadcast
-        verify = "broadcast" if n_docs <= VERIFY_BROADCAST_MAX_ROWS else "shuffle"
+    return _minhash_sig_pairs(
+        sigs, sigs.count(), num_hashes=num_hashes, bands=bands,
+        threshold=threshold, candidates=candidates, bucket_cap=bucket_cap,
+    )
+
+
+def _minhash_sig_pairs(
+    sigs: DataFrame,
+    n_rows: int,
+    *,
+    num_hashes: int,
+    bands: int,
+    threshold: float,
+    candidates: str = "all",
+    bucket_cap: int = 64,
+) -> DataFrame:
+    """The sigs -> pairs half of minhash_lsh_pairs: banding, the bucket
+    self-join and verify_pairs over already-materialized signatures.
+    n_rows bounds sigs' row count and picks the verify transport."""
+    rows = num_hashes // bands
     # one banded row per (doc, band) via a single explode — not a
     # bands-way union, which would re-read the cache `bands` times;
     # null-text docs have null signatures — dropped inside _banded_frame
@@ -500,8 +569,6 @@ def minhash_lsh_pairs(
         # window partitions by the EXACT band tuple (band_vals), not the
         # xxhash64 key: see _banded_frame — a key collision must not be
         # able to change which members the cap keeps.
-        from pyspark.sql import Window
-
         # ONE exact-vals explode, materialized, feeds BOTH join sides:
         # a second explode pass (plain banded for the RHS) measured as
         # expensive as the rank window itself
@@ -527,67 +594,9 @@ def minhash_lsh_pairs(
         .filter(F.col("x.id") < F.col("y.id"))
         .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
     )
-    # a pair colliding in several bands appears once per band.  On the
-    # shuffle transport dedup BEFORE verify: dup pairs would fetch both
-    # shingle arrays again.  On the broadcast transport the pair stream is
-    # two bare longs and the verify kernel is vectorized — re-verifying a
-    # ~1.3x dup factor is far cheaper than a full-candidate-list distinct
-    # shuffle (measured 2x cold / 15% warm on the sf0.1 corpus), so dedup
-    # the few verified pairs AFTER instead.
-    if verify == "shuffle":
-        cand = cand.distinct()
-    # AQE coalesces the candidate shuffle to few partitions (rows are
-    # tiny) but the verify stage does per-pair numpy work — re-spread it
-    # or the intersect runs on 2-3 cores
-    cand = cand.repartition(2 * par)
-    if verify == "shuffle":
-        return _verify_shuffle(cand, sigs, threshold)
-    return _verify_broadcast(cand, sigs, threshold).dropDuplicates(["id_a", "id_b"])
-
-
-def _verify_broadcast(cand: DataFrame, sigs: DataFrame, thr: float) -> DataFrame:
-    """Exact-jaccard verify with the (id -> shingle set) table shipped to
-    workers once via sc.broadcast (the local[32] stand-in for a persisted
-    signature table read); the pair stream carries only two longs per row."""
-    import numpy as np
-    import pandas as pd
-
-    # Arrow transfer (guide §6 "Arrow for driver transfers"): the row
-    # collect() deserializes every shingle as a boxed Python int —
-    # measured ~3x slower than toPandas for the same ~1.5M-element pull;
-    # with Arrow each cell lands as a numpy array already
-    sh_pdf = (
-        sigs.select("id", "shingles")
-        .filter(F.col("shingles").isNotNull())
-        .toPandas()
+    return verify_pairs(
+        cand, sigs.select("id", "shingles"), n_rows, _jaccard_kernel, "jaccard", threshold
     )
-    bc = cand.sparkSession.sparkContext.broadcast(
-        {
-            int(i): np.asarray(s, dtype=np.int64)
-            for i, s in zip(sh_pdf["id"].values, sh_pdf["shingles"].values)
-        }
-    )
-
-    def _verify_bc(batches):
-        sets = bc.value
-        for pdf in batches:
-            ia = pdf["id_a"].values
-            ib = pdf["id_b"].values
-            sh_a = [sets[int(i)] for i in ia]
-            sh_b = [sets[int(i)] for i in ib]
-            card_a = np.array([a.size for a in sh_a], dtype=np.int64)
-            card_b = np.array([b.size for b in sh_b], dtype=np.int64)
-            # cardinality-ratio pre-prune before the per-pair intersect
-            ok = np.minimum(card_a, card_b) >= thr * np.maximum(card_a, card_b)
-            shared = np.zeros(len(pdf), dtype=np.int64)
-            shared[ok] = _np_shared_counts(
-                [a for a, k in zip(sh_a, ok) if k], [b for b, k in zip(sh_b, ok) if k]
-            )
-            jac = shared / (card_a + card_b - shared)
-            keep = ok & (jac >= thr)
-            yield pd.DataFrame({"id_a": ia[keep], "id_b": ib[keep], "jaccard": jac[keep]})
-
-    return cand.mapInPandas(_verify_bc, "id_a long, id_b long, jaccard double")
 
 
 def _probe_candidates(
@@ -596,16 +605,22 @@ def _probe_candidates(
     index_bands: DataFrame | None,
     bands: int,
     rows: int,
+    n_new: int = 0,
 ) -> DataFrame:
-    """Candidate stage of the incremental probe: broadcast the BATCH's band
-    keys against the index's banding — the index side is a map-only scan
-    that never shuffles, so per-batch shuffle volume is candidates only
-    (the corpus-refresh contract at 100 TB).  Callers that maintain the
-    banding as a persisted table (streaming/dedup_stream.py) pass
-    index_bands and skip even the banding fold: the probe is then a pure
-    column scan of (id, band, band_key).  Kept as a separate function so
-    the plan guard (test_plan_quality.py) can inspect the candidate plan
-    before the public API checkpoints it."""
+    """Candidate stage of the incremental probe: the BATCH's band keys
+    against the index's banding (vs-index) ∪ the batch against itself
+    (in-batch) — never index-vs-index.  While the batch is within
+    PROBE_BROADCAST_MAX_ROWS (n_new) its band keys are broadcast, so the
+    index side is a map-only scan that never shuffles and per-batch
+    shuffle volume is candidates only (the corpus-refresh contract at
+    100 TB); a backfill-sized batch leaves the join strategy to the
+    planner.  Callers that maintain the banding as a persisted table
+    (streaming/dedup_stream.py) pass index_bands and skip even the
+    banding fold: the probe is then a pure column scan of (id, band,
+    band_key).  Kept as a separate function so the plan guard
+    (test_plan_quality.py) can inspect the candidate plan before the
+    public API checkpoints it."""
+    hint = F.broadcast if n_new <= PROBE_BROADCAST_MAX_ROWS else (lambda d: d)
     b_idx = (
         index_bands.select("id", "band", "band_key")
         if index_bands is not None
@@ -615,10 +630,7 @@ def _probe_candidates(
     )
     b_new = _banded_frame(sigs_new, bands, rows).select("id", "band", "band_key")
     vs_index = (
-        b_idx.join(
-            F.broadcast(b_new.withColumnRenamed("id", "nid")),
-            ["band", "band_key"],
-        )
+        b_idx.join(hint(b_new.withColumnRenamed("id", "nid")), ["band", "band_key"])
         # an id present on BOTH sides (at-least-once reprocessing after
         # a crash mid-append) must not pair with itself
         .filter(F.col("id") != F.col("nid"))
@@ -629,7 +641,7 @@ def _probe_candidates(
     )
     in_batch = (
         b_new.alias("x")
-        .join(F.broadcast(b_new.alias("y")), ["band", "band_key"])
+        .join(hint(b_new.alias("y")), ["band", "band_key"])
         .filter(F.col("x.id") < F.col("y.id"))
         .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
     )
@@ -646,7 +658,6 @@ def minhash_lsh_pairs_incremental(
     num_hashes: int = 128,
     bands: int = 16,
     threshold: float = 0.6,
-    verify: str = "auto",
     precomputed_sigs: DataFrame | None = None,
     index_bands: DataFrame | None = None,
 ) -> DataFrame:
@@ -660,12 +671,11 @@ def minhash_lsh_pairs_incremental(
     mh), typically `spark.read.parquet(sig_table)`.  Must share n /
     num_hashes with this call, and ids must be disjoint from the batch.
     index_bands: optional persisted `_banded_frame` output (id, band,
-    band_key) for the SAME index — lets the probe path skip the per-batch
-    banding fold entirely (ignored on the large-batch fallback path,
-    which re-bands index∪batch symmetrically).  Must be derived from
-    index_sigs with the same bands count, and may run AHEAD of index_sigs
-    after a crash (bands ⊇ sigs): a band row whose signature row is
-    missing can only produce candidates that the verify join then drops.
+    band_key) for the SAME index — lets the probe skip the per-batch
+    banding fold entirely.  Must be derived from index_sigs with the same
+    bands count, and may run AHEAD of index_sigs after a crash (bands ⊇
+    sigs): a band row whose signature row is missing can only produce
+    candidates that the verify then drops.
 
     Returns every near-dup pair with >= 1 endpoint in the new batch —
     batch-vs-index and batch-vs-batch, never index-vs-index (already
@@ -674,22 +684,17 @@ def minhash_lsh_pairs_incremental(
     batch, which is what the DuckDB oracle re-derives.
 
     Scale shape: banding the index is a map-only pass over the signature
-    table (no text re-shingling); the candidate join hash-partitions on
-    (band, band_key) where only buckets containing a batch doc produce
-    candidates.  Verify transport ('auto'): while index+batch fit the
-    broadcast budget, plain broadcast verify; past it, a probe-sized
-    batch slices the signature table to candidate ENDPOINTS (broadcast
-    semi-join on the candidate-id set) and picks broadcast-vs-shuffle on
-    the endpoint count — verify cost is O(candidates) however large the
-    index (measured flat-ish at 100x index rows, probe_dedup_100x.py).
-    Forcing verify='shuffle' keeps the full-table two-hash-join
-    transport, the right shape for backfill-scale candidate sets."""
+    table (no text re-shingling); candidates come from _probe_candidates,
+    where only buckets containing a batch doc produce pairs.  Past
+    ENDPOINT_SLICE_MIN_INDEX_ROWS of index, the signature table is sliced
+    to candidate ENDPOINTS (broadcast semi-join on the candidate-id set)
+    and verify_pairs picks its transport on the endpoint count — verify
+    cost is O(candidates) however large the index (measured flat-ish at
+    100x index rows, probe_dedup_100x.py); below it, on index + batch
+    rows."""
     if num_hashes % bands != 0:
         raise ValueError("num_hashes must divide into equal bands")
-    if verify not in ("auto", "broadcast", "shuffle"):
-        raise ValueError(f"unknown verify mode {verify!r}")
     rows = num_hashes // bands
-    par = new_df.sparkSession.sparkContext.defaultParallelism
     # callers that already signatured the batch (e.g. the streaming
     # corpus-refresh pipeline, which persists signatures anyway) pass
     # precomputed_sigs to skip the second shingling pass
@@ -700,60 +705,30 @@ def minhash_lsh_pairs_incremental(
             _spread_text(new_df), id_col, text_col, n=n, num_hashes=num_hashes
         ).localCheckpoint(eager=True)
     )
-
-    all_sigs = index_sigs.select("id", "shingles", "card", "mh").withColumn(
-        "is_new", F.lit(False)
-    ).unionByName(sigs_new.withColumn("is_new", F.lit(True)))
+    # counted per side — a parquet-backed index answers count() from
+    # footer stats without materializing anything
     n_new = sigs_new.count()
-    n_idx = None
-    probe = n_new <= PROBE_BROADCAST_MAX_ROWS
-    if verify == "auto":
-        # same budget as minhash_lsh_pairs (~2.4 KB of shingles per doc);
-        # counted per side — a parquet-backed index answers count() from
-        # footer stats without materializing anything
-        n_idx = index_sigs.count()
-        if n_idx + n_new <= VERIFY_BROADCAST_MAX_ROWS:
-            verify = "broadcast"
-        elif not probe:
-            verify = "shuffle"
-        # else: stays "auto" — a probe batch against a big index picks
-        # the transport below on CANDIDATE volume, independent of index
-        # size (the corpus-refresh contract: index growth must not
-        # degrade the probe's verify plan)
-    if probe:
-        cand = _probe_candidates(sigs_new, index_sigs, index_bands, bands, rows)
-    else:
-        # huge batch: fall back to the symmetric self-join (both sides
-        # shuffle on (band, band_key) — the minhash_lsh_pairs plan)
-        banded = _banded_frame(all_sigs, bands, rows)
-        cand = (
-            banded.alias("x")
-            .join(banded.alias("y"), ["band", "band_key"])
-            .filter(
-                (F.col("x.id") < F.col("y.id"))
-                & (F.col("x.is_new") | F.col("y.is_new"))
-            )
-            .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-        )
-    # same dedup placement rule as minhash_lsh_pairs: pre-distinct only
-    # when dup pairs would re-fetch shingle arrays through the shuffle
-    # transport; on broadcast, dedup the verified output instead
-    if verify == "shuffle":
-        # forced full-table transport (backfill-scale candidate sets):
-        # the two hash joins move the whole signature table — the right
-        # shape when candidates are a large fraction of the corpus
-        return _verify_shuffle(cand.distinct().repartition(2 * par), all_sigs, threshold)
-    if verify == "auto":
-        # probe batch vs big index: materialize candidates ONCE (they
-        # feed the endpoint slice and the verify), slice the signature
-        # table to candidate endpoints (broadcast semi-join — map-only on
-        # the index side), then pick the transport on the ENDPOINT count:
-        # within the broadcast budget the driver collect is O(candidates);
-        # beyond it, the shuffle verify still only moves sliced rows.
-        # Measured at 100x index rows (tools/probe_dedup_100x.py): this
-        # path holds ~7 s where index-size-gated auto chose a 14 s full
-        # shuffle — the residue is the two map-only index column scans.
-        cand = cand.distinct().localCheckpoint(eager=True)
+    n_idx = index_sigs.count()
+    cand = _probe_candidates(sigs_new, index_sigs, index_bands, bands, rows, n_new)
+    table = index_sigs.select("id", "shingles").unionByName(
+        sigs_new.select("id", "shingles")
+    )
+    n_rows = n_idx + n_new
+    if n_idx > ENDPOINT_SLICE_MIN_INDEX_ROWS:
+        # restrict the verify table to candidate ENDPOINTS (broadcast
+        # semi-join — map-only on the index side), so the broadcast
+        # collect is O(candidates), not O(index), and the shuffle verify
+        # only moves sliced rows.  Every candidate id exists in the table:
+        # index candidates come from its own banding — a bands-ahead-of-
+        # sigs id after a crash is by construction a member of the
+        # replayed batch, hence present in sigs_new.  Candidates are
+        # materialized once: they feed both the id slice and the verify.
+        # Measured at 100x index rows (tools/probe_dedup_100x.py): ~7 s
+        # where an index-size-gated transport chose a 14 s full shuffle.
+        # Gated on index size: below the threshold the full collect is
+        # already bounded and the slice's eager jobs cost more than they
+        # save (measured neutral-to-negative at 4k-doc fixtures).
+        cand = cand.localCheckpoint(eager=True)
         cand_ids = (
             cand.select(F.col("id_a").alias("id"))
             .unionByName(cand.select(F.col("id_b").alias("id")))
@@ -762,37 +737,9 @@ def minhash_lsh_pairs_incremental(
         )
         m = cand_ids.count()
         if m <= ENDPOINT_SLICE_MAX_BROADCAST_IDS:
-            all_sigs = all_sigs.join(F.broadcast(cand_ids), "id", "left_semi")
-        if m > VERIFY_BROADCAST_MAX_ROWS:
-            return _verify_shuffle(cand.repartition(2 * par), all_sigs, threshold)
-        return _verify_broadcast(cand.repartition(2 * par), all_sigs, threshold).dropDuplicates(
-            ["id_a", "id_b"]
-        )
-    if probe and n_idx is None:
-        # only pay the (footer-answered) count when the slice is even
-        # possible — a huge batch skips it regardless of index size
-        n_idx = index_sigs.count()
-    if probe and n_idx > ENDPOINT_SLICE_MIN_INDEX_ROWS:
-        # probe refinement: the broadcast transport collects (id, shingles)
-        # driver-side — restrict it to candidate ENDPOINTS, so the collect
-        # is O(candidates), not O(index) (every candidate id exists in
-        # all_sigs: index candidates come from its own banding — a
-        # bands-ahead-of-sigs id after a crash is by construction a member
-        # of the replayed batch, hence present in sigs_new).  Candidates
-        # are materialized once and feed both the id slice and the verify.
-        # Gated on index size: below the threshold the full collect is
-        # already bounded and the slice's eager checkpoint job costs more
-        # than it saves (measured neutral-to-negative at 4k-doc fixtures).
-        cand = cand.localCheckpoint(eager=True)
-        cand_ids = (
-            cand.select(F.col("id_a").alias("id"))
-            .unionByName(cand.select(F.col("id_b").alias("id")))
-            .distinct()
-        )
-        all_sigs = all_sigs.join(F.broadcast(cand_ids), "id", "left_semi")
-    return _verify_broadcast(cand.repartition(2 * par), all_sigs, threshold).dropDuplicates(
-        ["id_a", "id_b"]
-    )
+            table = table.join(F.broadcast(cand_ids), "id", "left_semi")
+            n_rows = m
+    return verify_pairs(cand, table, n_rows, _jaccard_kernel, "jaccard", threshold)
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str, *, bits: int = 32, n: int = 3) -> DataFrame:

@@ -52,8 +52,8 @@ def tokens_duck(col: str) -> str:
     return _TOKENS_DUCK.format(col=col)
 
 
-# single-pass dispatch for bm25_topk (same auto-dispatch idiom as
-# dedup.minhash_lsh_pairs' verify="auto"): below this input size the
+# single-pass dispatch for bm25_topk (same size-picked idiom as
+# dedup.verify_pairs' transport): below this input size the
 # lazy 3-subtree plan wins — its three corpus tokenizations (postings,
 # df-reuse, scalars) schedule CONCURRENTLY inside one action and the
 # corpus is too small for pass count to matter, while the single-pass
@@ -64,8 +64,9 @@ def tokens_duck(col: str) -> str:
 # cost it was meant to avoid to both regimes (r10 verdict, What's wrong
 # #2).  Threshold: the r10 crossover was 20k docs; at the fixture's
 # measured density (~119 B/doc of zstd parquet) that is ~2.4 MB of scan
-# bytes, re-confirmed by interleaved A/B at sf0.1 (5k docs: lazy wins;
-# see PLANS.md r11).  At corpus scale pass count is the whole cost —
+# bytes.  UNVERIFIED in bytes: no A/B of the byte gate is recorded
+# (PLANS.md has no r11 entry) — re-measuring it is open (ROADMAP item
+# 5).  At corpus scale pass count is the whole cost —
 # cores are saturated, so "concurrent" passes still triple CPU + I/O.
 BM25_ONE_PASS_MIN_BYTES = 2_400_000
 

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dp3_spark.functions import vectors as VEC
+from dp3_spark.operators import dedup as DD
 
 # 31-bit LCG + xorshift mixing: all intermediates < 2^62, safe under ANSI
 # overflow checking.  The xorshift/second-multiply steps are LOAD-BEARING:
@@ -347,20 +348,18 @@ def _banded_signature(df: DataFrame, id_col: str, vec_col: str, *, planes: int, 
     return sig.select("id", F.posexplode("keys").alias("band", "key"))
 
 
-# vector table sizes beyond this switch the exact-cosine verify from a
-# driver-collected broadcast to the shuffle (equi-join) transport: at a
-# typical 768-dim float32 embedding, 200k rows ≈ 600 MB — the edge of
-# sane broadcast range (mirrors dedup.py's minhash verify switch)
-BROADCAST_VERIFY_MAX_ROWS = 200_000
-
-
 def _np_cosine_batch(A, B, thr):
-    """(keep_mask, cosines) for row-aligned float32 matrices A, B.  Dot and
+    """verify_pairs kernel for vectors: (keep_mask, cosines) for
+    row-aligned vector payloads, stacked to float32 matrices.  Dot and
     norms accumulate float64 SEQUENTIALLY across dims so every cosine is
     bit-identical to the SQL fold (functions/vectors.py) and the DuckDB
     oracle, regardless of which transport delivered the vectors."""
     import numpy as np
 
+    if not len(A):
+        return np.zeros(0, dtype=bool), np.zeros(0, dtype=np.float64)
+    A = np.stack(A).astype(np.float32, copy=False)
+    B = np.stack(B).astype(np.float32, copy=False)
     dim = A.shape[1]
     dot = np.zeros(A.shape[0], dtype=np.float64)
     na = np.zeros(A.shape[0], dtype=np.float64)
@@ -375,65 +374,6 @@ def _np_cosine_batch(A, B, thr):
     with np.errstate(divide="ignore", invalid="ignore"):
         cos = dot / denom
     return (denom != 0.0) & (cos >= thr), cos
-
-
-def _verify_cosine_broadcast(cand: DataFrame, vecs: DataFrame, thr: float) -> DataFrame:
-    """Exact-cosine verify with the (id -> vector) matrix shipped to workers
-    once via sc.broadcast; the pair stream carries only two longs per row.
-    Driver-memory-bounded: callers must gate on corpus size
-    (BROADCAST_VERIFY_MAX_ROWS) — a 100 TB vector corpus never broadcasts."""
-    import numpy as np
-    import pandas as pd
-
-    vec_rows = vecs.collect()
-    ids = np.array([r["id"] for r in vec_rows], dtype=np.int64)
-    order = np.argsort(ids)
-    ids = ids[order]
-    M = np.stack([np.asarray(vec_rows[i]["vec"], dtype=np.float32) for i in order])
-    bc = cand.sparkSession.sparkContext.broadcast((ids, M))
-
-    def _verify(batches):
-        sids, mat = bc.value
-        for pdf in batches:
-            ia = pdf["id_a"].values
-            ib = pdf["id_b"].values
-            ra = np.searchsorted(sids, ia)
-            rb = np.searchsorted(sids, ib)
-            keep, cos = _np_cosine_batch(mat[ra], mat[rb], thr)
-            yield pd.DataFrame({"id_a": ia[keep], "id_b": ib[keep], "cosine": cos[keep]})
-
-    return cand.mapInPandas(_verify, "id_a long, id_b long, cosine double")
-
-
-def _verify_cosine_shuffle(cand: DataFrame, vecs: DataFrame, thr: float) -> DataFrame:
-    """Exact-cosine verify with vectors delivered by two hash joins on id —
-    the at-scale transport (minhash _verify_shuffle pattern, dedup.py):
-    arrays flow through a shuffle once per pair side, nothing ever
-    collects to the driver.  Same numpy kernel as the broadcast path, so
-    the cosines are bit-identical (transport equivalence pinned in
-    tests)."""
-    import numpy as np
-    import pandas as pd
-
-    def _verify(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            A = np.stack([np.asarray(v, dtype=np.float32) for v in pdf["vec_a"]])
-            B = np.stack([np.asarray(v, dtype=np.float32) for v in pdf["vec_b"]])
-            ia = pdf["id_a"].values
-            ib = pdf["id_b"].values
-            keep, cos = _np_cosine_batch(A, B, thr)
-            yield pd.DataFrame({"id_a": ia[keep], "id_b": ib[keep], "cosine": cos[keep]})
-
-    return (
-        cand.join(
-            vecs.select(F.col("id").alias("id_a"), F.col("vec").alias("vec_a")), "id_a"
-        )
-        .join(vecs.select(F.col("id").alias("id_b"), F.col("vec").alias("vec_b")), "id_b")
-        .select("id_a", "id_b", "vec_a", "vec_b")
-        .mapInPandas(_verify, "id_a long, id_b long, cosine double")
-    )
 
 
 def lsh_geometry(
@@ -483,20 +423,16 @@ def embedding_dup_pairs_lsh(
     threshold: float = 0.9,
     planes: int | None = None,
     bands: int | None = None,
-    verify: str = "auto",
 ) -> DataFrame:
     """Near-dup pairs via hyperplane-LSH banding: candidates = pairs sharing
     at least one band key, then exact cosine filter >= threshold.
 
     The 100 TB path: candidate generation is a hash-partitioned equi-join
-    on (band, key) — never all-pairs.  The exact-cosine verify has two
-    transports with bit-identical output (same sequential-fold numpy
-    kernel): verify='broadcast' ships the (id, vector) matrix to workers
-    once and streams bare (id_a, id_b) pairs — right while the matrix is
-    MBs; verify='shuffle' delivers vectors by two hash joins on id — the
-    at-scale path when the corpus exceeds broadcast range.  'auto'
-    (default) picks by corpus row count (BROADCAST_VERIFY_MAX_ROWS),
-    exactly like the minhash verify dispatch (dedup.py).
+    on (band, key) — never all-pairs.  The exact-cosine verify is
+    dedup.verify_pairs with the sequential-fold cosine kernel: a
+    broadcast (id, vector) table while the corpus is within
+    VERIFY_BROADCAST_MAX_ROWS, two hash joins on id beyond, with
+    bit-identical output either way.
     Recall for the default 24 planes / 4 bands (6 rows per band) at
     cosine 0.9 is ~87% (per-plane agreement 1 - θ/π = 0.857, band hit
     0.857⁶, ≥1 of 4 bands), while random pairs collide at only
@@ -508,14 +444,9 @@ def embedding_dup_pairs_lsh(
     2048 vectors (fixture scales — oracle-locked), then rows-per-band
     grows with log2(n) so candidate volume stays ~linear in corpus size
     instead of quadratic in bucket occupancy (the round-5 scaling fix)."""
-    if verify not in ("auto", "broadcast", "shuffle"):
-        raise ValueError(f"unknown verify mode {verify!r}")
-    # count (parquet footer job) only when something needs it: auto LSH
-    # geometry and/or the auto verify-transport gate — a caller supplying
-    # planes, bands AND an explicit verify mode pays no extra job
-    n_corpus = None
-    if planes is None or bands is None or verify == "auto":
-        n_corpus = df.count()
+    # one count (parquet footer job) feeds the auto geometry and the
+    # verify transport
+    n_corpus = df.count()
     if planes is None or bands is None:
         auto_planes, auto_bands = lsh_geometry(n_corpus)
         planes = planes if planes is not None else auto_planes
@@ -525,33 +456,14 @@ def embedding_dup_pairs_lsh(
     # (id, band, key) — bytes per vector)
     banded = _banded_signature(df, id_col, vec_col, planes=planes, bands=bands).cache()
     banded.count()
-    par = df.sparkSession.sparkContext.defaultParallelism
     cand = (
         banded.alias("x")
         .join(banded.alias("y"), ["band", "key"])
         .filter(F.col("x.id") < F.col("y.id"))
         .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
     )
-    if verify == "auto":
-        verify = "broadcast" if n_corpus <= BROADCAST_VERIFY_MAX_ROWS else "shuffle"
-    # dedup placement mirrors dedup.minhash_lsh_pairs: multi-band dup pairs
-    # must not re-fetch vectors through the shuffle transport, but on the
-    # broadcast transport re-scoring the dup factor beats a full
-    # candidate-list distinct shuffle — dedup the verified pairs after
-    if verify == "shuffle":
-        cand = cand.distinct()
-    # candidate rows are byte-tiny, so AQE coalesces their shuffle to 1-2
-    # partitions — but the next stage computes a cosine per pair, which
-    # must stay spread across cores
-    cand = cand.repartition(2 * par)
-    vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")).filter(
-        F.col("vec").isNotNull()
-    )
-    if verify == "shuffle":
-        return _verify_cosine_shuffle(cand, vecs, threshold)
-    return _verify_cosine_broadcast(cand, vecs, threshold).dropDuplicates(
-        ["id_a", "id_b"]
-    )
+    vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+    return DD.verify_pairs(cand, vecs, n_corpus, _np_cosine_batch, "cosine", threshold)
 
 
 # ---------------------------------------------------------------- IVF ANN
@@ -772,9 +684,9 @@ def embedding_dup_pairs(
 # cluster populations bounded (the paper's operating point).  At 100 TB:
 # assignment is one broadcast-centroid map pass (persistable alongside the
 # corpus like the minhash signature table), candidate generation is an
-# equi-join on cluster id, and the exact-cosine verify reuses the two
-# dup-pair transports (broadcast matrix under BROADCAST_VERIFY_MAX_ROWS,
-# two hash joins beyond — nothing corpus-sized ever reaches the driver).
+# equi-join on cluster id, and the exact-cosine verify is the dup-pair
+# core, dedup.verify_pairs (broadcast vectors within its row budget, two
+# hash joins beyond — nothing corpus-sized ever reaches the driver).
 
 
 def _assign_clusters_sql(
@@ -824,7 +736,6 @@ def semantic_dedup(
     k_clusters: int = 16,
     iters: int = 3,
     threshold: float = 0.95,
-    verify: str = "auto",
     assign: str = "numpy",
 ) -> DataFrame:
     """SemDeDup: one row per corpus document — (id, cluster, kept).
@@ -856,22 +767,15 @@ def semantic_dedup(
     # and the final rejoin, and checkpoint blocks are released with the
     # DataFrame reference instead of pinning a CacheManager entry per call
     assigned = assigned.localCheckpoint(eager=True)
-    par = corpus.sparkSession.sparkContext.defaultParallelism
     cand = (
         assigned.alias("x")
         .join(assigned.alias("y"), "cluster")
         .filter(F.col("x.id") < F.col("y.id"))
         .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-        .repartition(2 * par)
     )
-    if verify == "auto":
-        verify = "broadcast" if base.count() <= BROADCAST_VERIFY_MAX_ROWS else "shuffle"
-    if verify == "shuffle":
-        pairs = _verify_cosine_shuffle(cand, base, threshold)
-    elif verify == "broadcast":
-        pairs = _verify_cosine_broadcast(cand, base, threshold)
-    else:
-        raise ValueError(f"unknown verify mode {verify!r}")
+    pairs = DD.verify_pairs(
+        cand, base, base.count(), _np_cosine_batch, "cosine", threshold
+    )
     dropped = pairs.select(F.col("id_b").alias("id")).distinct()
     return (
         assigned.join(dropped.withColumn("__drop__", F.lit(True)), "id", "left")

@@ -21,9 +21,9 @@ batch-mode dedup per arrival would produce, pinned by the
 streaming-vs-batch parity test.
 
 At 100 TB: the index is a partitioned parquet (or Delta/Iceberg) table;
-appends are file-level; the probe's verify transport follows the batch
-operator's auto dispatch — broadcast while index+batch fit the budget,
-two hash joins beyond.
+appends are file-level; every drain's verify transport is the batch
+operator's (dedup.verify_pairs) — broadcast while the rows fit its
+budget, two hash joins beyond.
 
 Crash semantics: foreachBatch is AT-LEAST-ONCE — an epoch that crashed
 mid-batch is reprocessed on restart — so both appends are made
@@ -134,7 +134,6 @@ class StreamingCorpusDedup:
         ))
 
     def process_batch(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
-        par = self.spark.sparkContext.defaultParallelism
         n_in = batch_df.count()
         sigs_new = DD.minhash_signatures(
             DD._spread_text(batch_df),
@@ -183,19 +182,17 @@ class StreamingCorpusDedup:
             )
             dropped = drop_vs_index.unionByName(drop_in_batch).distinct()
         else:
-            # first drain: within-batch dedup only.  Reuse the already-
-            # materialized signatures — banding + verify over sigs_new,
-            # not a second shingling pass over the batch
-            rows = self.num_hashes // self.bands
-            banded = DD._banded_frame(sigs_new, self.bands, rows)
-            cand = (
-                banded.alias("x")
-                .join(banded.alias("y"), ["band", "band_key"])
-                .filter(F.col("x.id") < F.col("y.id"))
-                .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-                .repartition(2 * par)
+            # first drain: within-batch dedup only — minhash_lsh_pairs'
+            # candidate + verify step over the already-materialized
+            # signatures (no second shingling pass); n_in bounds their
+            # rows, so the verify transport follows the same budget
+            pairs = DD._minhash_sig_pairs(
+                sigs_new,
+                n_in,
+                num_hashes=self.num_hashes,
+                bands=self.bands,
+                threshold=self.threshold,
             )
-            pairs = DD._verify_broadcast(cand, sigs_new, self.threshold)
             dropped = pairs.select(F.col("id_b").alias("id")).distinct()
         dropped = dropped.localCheckpoint(eager=True)
         n_drop = dropped.count()  # free: counts the checkpointed blocks

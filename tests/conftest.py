@@ -40,6 +40,26 @@ def spark_jobs(spark):
     return run
 
 
+@pytest.fixture()
+def force_shuffle_verify(monkeypatch):
+    """force() sends every later LSH verify (dedup.verify_pairs) through
+    its shuffle transport: the one broadcast budget drops to 0, and a
+    driver-side sc.broadcast — the broadcast transport's ship step —
+    fails the test."""
+    from pyspark import SparkContext
+
+    from dp3_spark.operators import dedup as DD
+
+    def no_broadcast(self, value):
+        raise AssertionError("broadcast verify transport taken")
+
+    def force():
+        monkeypatch.setattr(DD, "VERIFY_BROADCAST_MAX_ROWS", 0)
+        monkeypatch.setattr(SparkContext, "broadcast", no_broadcast)
+
+    return force
+
+
 @pytest.fixture(scope="session")
 def alltypes_store(spark):
     """FIXTURES.md F1: topics t0..t9 for producer 'device', 5 messages each,

@@ -99,7 +99,7 @@ def test_sliced_immediate_first_match_crosses_boundary(spark):
 def test_auto_slice_guard_engages_without_caller_optin(spark, monkeypatch):
     """The r3 verdict ask: a pathological single-producer stream must plan
     >1 task in the window stage WITHOUT the caller passing time_slices.
-    Tune the dispatch constant down (the BROADCAST_VERIFY_MAX_ROWS test
+    Tune the dispatch constant down (the VERIFY_BROADCAST_MAX_ROWS test
     idiom) so the 600-row fixture counts as 'skewed', and pin both the
     engaged plan and exact output parity with the unsliced path."""
     from dp3_spark.operators import asof as asof_mod

@@ -128,11 +128,10 @@ def test_embedding_dup_pairs_lsh_recall_vs_brute(spark):
     assert recall >= 0.8, f"LSH recall {recall:.2f} vs brute ({len(brute)} true pairs)"
 
 
-def test_embedding_lsh_verify_transport_equivalence(spark):
-    # broadcast and shuffle verify transports must produce bit-identical
-    # (id_a, id_b, cosine) — same numpy kernel, different vector delivery —
-    # and 'auto' must route a small corpus to broadcast, a large one (by
-    # the BROADCAST_VERIFY_MAX_ROWS gate) to shuffle without a collect
+def test_embedding_lsh_verify_transport_equivalence(spark, force_shuffle_verify):
+    # broadcast (the default at this size) and shuffle (forced by a zero
+    # budget) verify transports must produce bit-identical, distinct
+    # (id_a, id_b, cosine) rows — same numpy kernel, different delivery
     import math
 
     rows = [
@@ -140,25 +139,29 @@ def test_embedding_lsh_verify_transport_equivalence(spark):
         for i in range(60)
     ]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    bc = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in SIM.embedding_dup_pairs_lsh(emb, threshold=0.8, verify="broadcast").collect()
-    }
-    sh = {
-        (r["id_a"], r["id_b"]): r["cosine"]
-        for r in SIM.embedding_dup_pairs_lsh(emb, threshold=0.8, verify="shuffle").collect()
-    }
-    assert bc.keys() == sh.keys() and len(bc) > 0
-    for k in bc:
-        assert bc[k] == sh[k], f"cosine differs for {k}: {bc[k]} != {sh[k]}"
-    with pytest.raises(ValueError):
-        SIM.embedding_dup_pairs_lsh(emb, verify="nope")
+
+    def run():
+        got = [
+            (r["id_a"], r["id_b"], r["cosine"])
+            for r in SIM.embedding_dup_pairs_lsh(emb, threshold=0.8).collect()
+        ]
+        assert len({(a, b) for a, b, _ in got}) == len(got)  # distinct pairs
+        return sorted(got)
+
+    bc = run()
+    force_shuffle_verify()
+    sh = run()
+    assert bc == sh and len(bc) > 0
 
 
 def test_embedding_lsh_auto_switches_to_shuffle(spark, monkeypatch):
-    # shrink the broadcast budget so auto takes the shuffle path, and pin
-    # that it still matches the broadcast result
+    # shrink the broadcast budget below the corpus size (but not to 0) so
+    # the row count alone routes verify to the shuffle transport — no
+    # sc.broadcast is taken — and pin that it still matches the broadcast
+    # result
     import math
+
+    from pyspark import SparkContext
 
     rows = [
         (i, [math.sin(0.3 * (i % 9 + 1) * (d + 1)) for d in range(12)])
@@ -167,14 +170,19 @@ def test_embedding_lsh_auto_switches_to_shuffle(spark, monkeypatch):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     want = {
         (r["id_a"], r["id_b"], r["cosine"])
-        for r in SIM.embedding_dup_pairs_lsh(emb, threshold=0.8, verify="broadcast").collect()
+        for r in SIM.embedding_dup_pairs_lsh(emb, threshold=0.8).collect()
     }
-    monkeypatch.setattr(SIM, "BROADCAST_VERIFY_MAX_ROWS", 10)
+
+    def no_broadcast(self, value):
+        raise AssertionError("broadcast verify transport taken")
+
+    monkeypatch.setattr(DD, "VERIFY_BROADCAST_MAX_ROWS", 10)
+    monkeypatch.setattr(SparkContext, "broadcast", no_broadcast)
     got = {
         (r["id_a"], r["id_b"], r["cosine"])
-        for r in SIM.embedding_dup_pairs_lsh(emb, threshold=0.8, verify="auto").collect()
+        for r in SIM.embedding_dup_pairs_lsh(emb, threshold=0.8).collect()
     }
-    assert got == want
+    assert got == want and len(want) > 0
 
 
 def test_embedding_dup_pairs_auto_dispatch(spark):
@@ -263,15 +271,24 @@ def test_np_lsh_signatures_bit_parity(spark):
     assert np_sig.count() == sql_sig.count()
 
 
-def test_minhash_verify_modes_agree(spark):
-    """broadcast (id pairs + broadcast shingle table) and shuffle (arrays
-    per pair) verify transports are the same operator — identical output."""
+def test_minhash_verify_modes_agree(spark, force_shuffle_verify):
+    """broadcast (id pairs + broadcast shingle table; the default at this
+    size) and shuffle (arrays per pair; forced by a zero budget) verify
+    transports are the same operator — identical, distinct output."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     kw = dict(n=3, num_hashes=64, bands=8, threshold=0.6)
-    a = DD.minhash_lsh_pairs(docs, "doc_id", "text", verify="broadcast", **kw)
-    b = DD.minhash_lsh_pairs(docs, "doc_id", "text", verify="shuffle", **kw)
-    ra = sorted((r["id_a"], r["id_b"], r["jaccard"]) for r in a.collect())
-    rb = sorted((r["id_a"], r["id_b"], r["jaccard"]) for r in b.collect())
+
+    def run():
+        got = [
+            (r["id_a"], r["id_b"], r["jaccard"])
+            for r in DD.minhash_lsh_pairs(docs, "doc_id", "text", **kw).collect()
+        ]
+        assert len({(a, b) for a, b, _ in got}) == len(got)  # distinct pairs
+        return sorted(got)
+
+    ra = run()
+    force_shuffle_verify()
+    rb = run()
     assert ra == rb and len(ra) > 0
 
 
@@ -563,7 +580,7 @@ def test_multimodal_features_compose_with_ann(spark):
     assert all(-1.0 - 1e-9 <= r["cosine"] <= 1.0 + 1e-9 for r in top)
 
 
-def test_minhash_incremental_matches_full_run(spark, tmp_path):
+def test_minhash_incremental_matches_full_run(spark, tmp_path, force_shuffle_verify):
     """Incremental dedup against a PERSISTED signature index equals the
     full-corpus run restricted to pairs touching the new batch — the
     corpus-refresh contract (index round-trips through parquet)."""
@@ -592,10 +609,12 @@ def test_minhash_incremental_matches_full_run(spark, tmp_path):
     )
     assert got == want and len(got) > 0
 
-    # the forced full-table shuffle transport must produce the identical
-    # pair set (the backfill shape: no endpoint slice)
+    # the full-table shuffle transport (a zero broadcast budget; this
+    # index is below the endpoint-slice size) must produce the identical
+    # pair set
+    force_shuffle_verify()
     inc_sh = DD.minhash_lsh_pairs_incremental(
-        new_docs, index_sigs, "doc_id", "text", verify="shuffle", **kw
+        new_docs, index_sigs, "doc_id", "text", **kw
     )
     got_sh = sorted(
         (r["id_a"], r["id_b"], round(r["jaccard"], 12)) for r in inc_sh.collect()
@@ -604,13 +623,14 @@ def test_minhash_incremental_matches_full_run(spark, tmp_path):
 
 
 def test_minhash_incremental_big_index_auto_slices(spark, tmp_path, monkeypatch):
-    """Probe batch vs BIG index (simulated by shrinking the broadcast
-    budget): auto must resolve the verify transport on CANDIDATE volume,
-    endpoint-slicing the signature table (broadcast LeftSemi on the
-    candidate-id set) so verify cost is O(candidates) however large the
-    index — both the sliced-shuffle and sliced-broadcast arms must be
-    hash-identical to the plain run (probe_dedup_100x.py measures the
-    same paths at real 100x index rows)."""
+    """Probe batch vs BIG index (simulated by shrinking the endpoint-slice
+    threshold and the broadcast budget): the verify transport must be
+    resolved on CANDIDATE volume, endpoint-slicing the signature table
+    (broadcast LeftSemi on the candidate-id set) so verify cost is
+    O(candidates) however large the index — both the sliced-shuffle and
+    sliced-broadcast arms must be hash-identical to the plain run
+    (probe_dedup_100x.py measures the same paths at real 100x index
+    rows)."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     kw = dict(n=3, num_hashes=64, bands=8, threshold=0.6)
     index_docs = docs.filter(F.col("doc_id") % 4 != 0)
@@ -627,6 +647,7 @@ def test_minhash_incremental_big_index_auto_slices(spark, tmp_path, monkeypatch)
     )
     assert len(want) > 0
 
+    monkeypatch.setattr(DD, "ENDPOINT_SLICE_MIN_INDEX_ROWS", 0)
     for budget in (0, 1000):  # 0 → sliced shuffle; 1000 → sliced broadcast
         monkeypatch.setattr(DD, "VERIFY_BROADCAST_MAX_ROWS", budget)
         inc = DD.minhash_lsh_pairs_incremental(
@@ -1432,11 +1453,11 @@ def test_detect_gaps_and_counter_delta(spark):
     assert (r["increase"], r["n_resets"], r["n_intervals"]) == (120, 1, 3)
 
 
-def test_minhash_incremental_symmetric_fallback_matches(spark, monkeypatch):
-    """Backfill-scale batches (n_new past the probe cap) drop to the
-    symmetric band self-join; both its verify transports must equal the
-    probe-path answer.  The cap is monkeypatched to 0 so the fixture
-    exercises the real fallback code."""
+def test_minhash_incremental_backfill_batch_matches(spark, monkeypatch, force_shuffle_verify):
+    """Backfill-scale batches (n_new past the probe cap) lose the batch
+    band-key broadcast hint; the probe's answer must not change, on
+    either verify transport.  The cap is monkeypatched to 0 so the
+    fixture exercises the unhinted plan."""
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     kw = dict(n=3, num_hashes=64, bands=8, threshold=0.6)
     index_docs = docs.filter(F.col("doc_id") % 4 != 0)
@@ -1456,14 +1477,11 @@ def test_minhash_incremental_symmetric_fallback_matches(spark, monkeypatch):
     assert len(want) > 0
 
     monkeypatch.setattr(DD, "PROBE_BROADCAST_MAX_ROWS", 0)
-    for verify in ("broadcast", "shuffle"):
-        got = key(DD.minhash_lsh_pairs_incremental(
-            new_docs, index_sigs, "doc_id", "text", verify=verify, **kw
-        ))
-        assert got == want, verify
-    # auto past the broadcast budget on the fallback path resolves to
-    # the full-table shuffle (candidate-sliced auto is probe-only)
-    monkeypatch.setattr(DD, "VERIFY_BROADCAST_MAX_ROWS", 0)
+    got = key(DD.minhash_lsh_pairs_incremental(
+        new_docs, index_sigs, "doc_id", "text", **kw
+    ))
+    assert got == want
+    force_shuffle_verify()
     got = key(DD.minhash_lsh_pairs_incremental(
         new_docs, index_sigs, "doc_id", "text", **kw
     ))

@@ -385,24 +385,25 @@ def test_semantic_dedup_sql_numpy_assign_parity(spark):
     assert a == b
 
 
-def test_semantic_dedup_transport_parity(spark):
-    """Broadcast and shuffle cosine-verify transports produce identical
-    kept sets (same numpy kernel, different delivery)."""
+def test_semantic_dedup_transport_parity(spark, force_shuffle_verify):
+    """Broadcast (the default at this size) and shuffle (forced by a zero
+    budget) cosine-verify transports produce identical kept sets (same
+    numpy kernel, different delivery)."""
     from dp3_spark.operators import similarity as SIM
 
     df = _emb_corpus(spark)
-    a = sorted(
-        (r["id"], r["cluster"], r["kept"])
-        for r in SIM.semantic_dedup(
-            df, k_clusters=4, iters=1, threshold=0.95, verify="broadcast"
-        ).collect()
-    )
-    b = sorted(
-        (r["id"], r["cluster"], r["kept"])
-        for r in SIM.semantic_dedup(
-            df, k_clusters=4, iters=1, threshold=0.95, verify="shuffle"
-        ).collect()
-    )
+
+    def run():
+        return sorted(
+            (r["id"], r["cluster"], r["kept"])
+            for r in SIM.semantic_dedup(
+                df, k_clusters=4, iters=1, threshold=0.95
+            ).collect()
+        )
+
+    a = run()
+    force_shuffle_verify()
+    b = run()
     assert a == b
 
 

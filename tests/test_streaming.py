@@ -263,6 +263,38 @@ def test_streaming_corpus_dedup(spark, tmpdir):
     assert [s["dropped"] for s in sd.stats] == [1, 2]
 
 
+def test_streaming_corpus_first_drain_follows_verify_budget(
+    spark, tmpdir, force_shuffle_verify
+):
+    """The first drain (no index yet) verifies through the batch
+    operator's transport choice: with the broadcast budget at 0 it must
+    never collect-and-broadcast the batch's signatures, and it must keep
+    exactly the documents the default (broadcast) drain keeps."""
+    from dp3_spark.streaming.dedup_stream import StreamingCorpusDedup
+
+    batch = spark.createDataFrame(
+        [
+            (1, LOREM["fox"]),
+            (2, LOREM["sql"]),
+            (3, LOREM["fox"]),  # in-batch dup of 1 -> dropped
+            (4, LOREM["sea"]),
+            (5, LOREM["sea"]),  # in-batch dup of 4 -> dropped
+        ],
+        "doc_id long, text string",
+    )
+
+    def drain(root):
+        sd = StreamingCorpusDedup(spark, f"{tmpdir}/{root}", threshold=0.6)
+        sd.process_batch(batch, 0)
+        kept = {r["doc_id"] for r in spark.read.parquet(sd.corpus_path).collect()}
+        return kept, sd.stats
+
+    want = drain("default_budget")
+    assert want[0] == {1, 2, 4}
+    force_shuffle_verify()
+    assert drain("zero_budget") == want
+
+
 def test_streaming_corpus_dedup_bands_migration(spark, tmpdir):
     """A pre-bands index layout (sigs + corpus only) migrates on first
     probe: the banding derives from the signatures, persists, and the

@@ -16,15 +16,12 @@ tables and times minhash_lsh_pairs_incremental end-to-end (count()).
 Two transports per scale:
   auto    — deployment behavior (broadcast verify under the 200k budget,
             shuffle verify beyond: sf10 crosses it)
-  shuffle — the at-scale transport forced everywhere, so the 1x/10x/100x
+  shuffle — the at-scale transport forced everywhere (the child sets
+            dedup.VERIFY_BROADCAST_MAX_ROWS = 0), so the 1x/10x/100x
             column is apples-to-apples on the path a 100 TB index runs.
-            NOTE: only AUTO endpoint-slices the verify; forcing shuffle
-            keeps the plain full-table two-hash-join transport
-            (dedup.py verify='shuffle'), so this column GROWS with the
-            index — that is the backfill-scale regime, where the
-            pipelined sort-merge joins beat the slice's checkpoint
-            barriers (the eager slice was tried on this path and
-            reverted, see PLANS.md round 8).
+            Both columns endpoint-slice the verify table once the index
+            passes dedup.ENDPOINT_SLICE_MIN_INDEX_ROWS (10x, 100x); the
+            1x shuffle cell moves the whole table.
 """
 import json
 import os
@@ -46,6 +43,8 @@ from dp3_spark.session import get_spark
 from dp3_spark.operators import dedup as DD
 
 idx_dir, verify = sys.argv[1], sys.argv[2]
+if verify == "shuffle":
+    DD.VERIFY_BROADCAST_MAX_ROWS = 0
 spark = get_spark("dedup-probe")
 batch = spark.read.parquet("/root/testdata/sf0.1/documents.parquet").filter(
     F.col("doc_id") % 5 == 0
@@ -59,7 +58,6 @@ for rep in range(2):
         spark.read.parquet(f"{idx_dir}/sigs.parquet"),
         "doc_id", "text",
         n=3, num_hashes=128, bands=16, threshold=0.7,
-        verify=verify,
         index_bands=spark.read.parquet(f"{idx_dir}/bands.parquet"),
     )
     n = pairs.count()
