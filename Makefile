@@ -2,7 +2,7 @@
 # recorded count is copy-paste reproducible (r8 verdict ask on the
 # gate-scale oracle sweep's env var).
 
-.PHONY: test oracle-gate oracle-lsh oracle-sf1 bench
+.PHONY: test oracle-gate oracle-lsh oracle-lifecycle oracle-sf1 bench
 
 # full suite (what "686 passed"-style ledger lines run)
 test:
@@ -20,6 +20,13 @@ LSH_ROWS = dedup_minhash_lsh or dedup_minhash_capped or dedup_incremental \
 	or decontam_fuzzy or sim_dup_pairs_lsh or sem_dedup
 oracle-lsh:
 	PYTEST_ADDOPTS='-k "$(LSH_ROWS)"' $(MAKE) --no-print-directory oracle-gate
+
+# the versioned-table rows of the gate sweep (manifest-planned snapshot
+# reads, the manifest tail, the trigram-pruned probe), at the same sf0.01
+LIFECYCLE_ROWS = lifecycle_delete_versions or lifecycle_tail_versions \
+	or ql_where_trigram_pruned
+oracle-lifecycle:
+	PYTEST_ADDOPTS='-k "$(LIFECYCLE_ROWS)"' $(MAKE) --no-print-directory oracle-gate
 
 # the 10x-rows answer sweep (opt-in; ~35 min)
 oracle-sf1:

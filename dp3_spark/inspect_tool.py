@@ -25,6 +25,8 @@ from __future__ import annotations
 import os
 from typing import Any
 
+from dp3_spark.streaming import manifest
+
 
 def _file_info(path: str) -> tuple[int | None, int, str]:
     """(version, num_rows, status) from ONE ParquetFile open.
@@ -89,30 +91,19 @@ def _read_meta_int(meta: str, name: str) -> int | None:
 
 def _read_manifests(
     meta: str, gen: str
-) -> dict[str, dict[str, tuple[int, int]]] | None:
-    """{manifest_name -> {root-relative path -> (rows, bytes)}} for the
-    current generation; None = legacy table (footer resolution applies).
-    Same format VersionedLogTable._manifests reads — kept
-    dependency-free here so the inspector never imports Spark-touching
-    modules.  bytes is -1 for pre-size-column (two-field) manifests."""
-    mdir = os.path.join(meta, "manifest", gen)
+) -> dict[tuple[bool, int], dict[str, tuple[int, int]]] | None:
+    """{manifest.parse_name key -> {root-relative path -> (rows, bytes)}}
+    for generation `gen`; None = legacy table (footer resolution
+    applies).  The format lives in streaming/manifest.py."""
+    mdir = os.path.join(meta, manifest.prefix(gen))
     if not os.path.isdir(mdir):
         return None
-    out: dict[str, dict[str, tuple[int, int]]] = {}
+    out: dict[tuple[bool, int], dict[str, tuple[int, int]]] = {}
     for name in sorted(os.listdir(mdir)):
-        if name.endswith(".tmp") or not name.endswith(".list"):
-            continue
-        entries: dict[str, tuple[int, int]] = {}
-        with open(os.path.join(mdir, name)) as f:
-            for line in f:
-                line = line.rstrip("\n")
-                if not line:
-                    continue
-                fields = line.split("\t")
-                rows = int(fields[1]) if len(fields) > 1 and fields[1] else -1
-                size = int(fields[2]) if len(fields) > 2 and fields[2] else -1
-                entries[fields[0]] = (rows, size)
-        out[name] = entries
+        key = manifest.parse_name(name)
+        if key is not None:
+            with open(os.path.join(mdir, name), "rb") as f:
+                out[key] = manifest.parse_lines(f.read())
     return out or None
 
 
@@ -136,12 +127,10 @@ def inspect_table(root: str) -> dict[str, Any]:
     manifested: dict[str, tuple[int | None, int, int]] = {}
     base = {"files": 0, "rows": 0, "bytes": 0, "watermarks": []}
     if manifests:
-        for name, entries in manifests.items():
-            v: int | None = None
-            if name.startswith("v"):
-                v = int(name[1:].split(".")[0])
-            else:  # base_{W}.list: committed at <= W, versions unresolved
-                base["watermarks"].append(int(name.split("_")[1].split(".")[0]))
+        for (is_base, n), entries in manifests.items():
+            v: int | None = None if is_base else n
+            if is_base:  # committed at <= n, versions unresolved
+                base["watermarks"].append(n)
             for rel, (rows, size) in entries.items():
                 manifested[rel] = (v, rows, size)
 

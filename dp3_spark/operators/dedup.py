@@ -410,7 +410,8 @@ def verify_pairs(
     whole-batch numpy pass over row-aligned payload arrays; both
     transports feed it the same payloads, so the output is identical.
     Output: the (id_a, id_b, score_col) rows the kernel kept, one per
-    pair while table ids are unique."""
+    pair on both transports, even when a table id repeats (an
+    at-least-once replay of a batch)."""
     import numpy as np
     import pandas as pd
 
@@ -418,12 +419,13 @@ def verify_pairs(
     table = table.toDF("id", "payload").filter(F.col("payload").isNotNull())
     broadcast = n_rows <= VERIFY_BROADCAST_MAX_ROWS
     # a pair colliding in several buckets appears once per bucket.  On the
-    # shuffle transport dedup BEFORE verify: dup pairs would fetch both
+    # shuffle transport dedup BEFORE verify too: dup pairs would fetch both
     # payloads again.  On the broadcast transport the pair stream is two
     # bare longs and the kernel is vectorized — re-verifying a ~1.3x dup
     # factor is far cheaper than a full-candidate-list distinct shuffle
-    # (measured 2x cold / 15% warm on the sf0.1 corpus), so dedup the few
-    # verified pairs AFTER instead.
+    # (measured 2x cold / 15% warm on the sf0.1 corpus).  Both end with
+    # the same dedup of the verified pairs: a table id listed twice joins
+    # a pair once per row on the shuffle transport.
     if not broadcast:
         cand = cand.distinct()
     # AQE coalesces the byte-small candidate shuffle to 1-2 partitions, but
@@ -442,12 +444,13 @@ def verify_pairs(
                     pdf["pa"].values, pdf["pb"].values,
                 )
 
-        return (
+        out = (
             cand.join(table.toDF("id_a", "pa"), "id_a")
             .join(table.toDF("id_b", "pb"), "id_b")
             .select("id_a", "id_b", "pa", "pb")
             .mapInPandas(run_joined, schema)
         )
+        return out.dropDuplicates(["id_a", "id_b"])
     # Arrow transfer (guide §6 "Arrow for driver transfers"): a row
     # collect() boxes every array element as a Python object — measured
     # ~3x slower than toPandas for a ~1.5M-element pull

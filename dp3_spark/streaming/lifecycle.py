@@ -40,9 +40,9 @@ instead of replay, since the inbound batch is re-submittable upstream
 (the ingest path dedups on (producer, topic, log_time, sequence)).
 
 Per-version write manifests (round 9): every append/delete records the
-file set it landed — `_meta/manifest/<generation>/v{N}.list`, one
-"relpath\\trows" line per file, written tmp+fsync+replace BEFORE the
-watermark flip — the WAL-batch record the reference gets from
+file set it landed — `_meta/manifest/<generation>/v{N}.list`, one line
+per file in the format `manifest.py` owns, written tmp+fsync+replace
+BEFORE the watermark flip — the WAL-batch record the reference gets from
 wal/walmgr.go's replay log, re-expressed as a commit manifest.
 Rollback (`_gc_uncommitted`) and the offline inspector resolve
 file -> version from the manifests with ZERO parquet-footer reads: a
@@ -81,16 +81,20 @@ loss (a storage fault, an accidental delete, a scan that outlives the
 grace window): outside the contract it would silently truncate instead
 of failing loudly.  On a MANIFEST-BEARING table the query path no
 longer pays that tradeoff at all (round 10): `read()` plans the scan
-from the write manifests (`_snapshot_paths`) — an explicit committed
-file list, so an uncommitted file is never opened (nothing to
-tolerate) and a vanished COMMITTED file fails loudly by construction,
-with no directory listing at plan time (the 100 TB win: O(versions
-since compact) small-object reads instead of an object-store LIST over
-every file).  The listing path — with its two mitigations: the
-hours-scale default `gc_grace_sec` (21600 s) so only pathological
-scans outlive it, and `strict_reads=True` turning the option off on
-every read path — remains for legacy tables, plan-vs-compact races,
-and the file-stream tail.
+from the write manifests (`_snapshot`) — an explicit committed file
+list, so an uncommitted file is never opened (nothing to tolerate) and
+a vanished COMMITTED file fails loudly by construction, with no
+directory listing at plan time (the 100 TB win: O(versions since
+compact) small-object reads instead of an object-store LIST over every
+file).  The manifest tail (`tail_versions`, `read_manifest_range`)
+reads its manifest-named files through the same strict scan.  Every
+manifest question — snapshot plan, tail poll, rollback, audit — is
+answered by one generation-pinned walk (`_walk`).  The listing path —
+with its two mitigations: the hours-scale default `gc_grace_sec`
+(21600 s) so only pathological scans outlive it, and
+`strict_reads=True` turning the option off on every read path —
+remains for legacy tables, plan-vs-compact races, and the file-stream
+tail.
 
 A `compact()` pass physically drops tombstoned rows and rewrites — the
 reference's merge-time mask application.
@@ -101,9 +105,12 @@ from __future__ import annotations
 import os
 import threading
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from dp3_spark.streaming import manifest
 
 LOG_SCHEMA_META = "producer string, topic string, log_time long, sequence long"
 TOMBSTONE_SCHEMA = (
@@ -123,6 +130,19 @@ class StaleWriterError(RuntimeError):
     version becomes visible; its landed files sit above the real
     watermark and are quarantined by the next writer's
     `_gc_uncommitted`."""
+
+
+class Snapshot(NamedTuple):
+    """The read plan of one committed snapshot (VersionedLogTable._snapshot).
+    data/tombs None: no manifest plan (legacy table, or compacts raced
+    the walk twice), so the scans list the directories — still filtered
+    at `watermark`, so data and tombstones see one snapshot either way."""
+
+    watermark: int  # every scan of the snapshot keeps version <= this
+    gen: str  # data generation dir, pinned with the plan
+    data: list[str] | None  # committed data files
+    tombs: list[str] | None  # committed tombstone files
+    bound: int | None  # summed recorded data rows; None if any unknown
 
 
 @dataclass
@@ -183,10 +203,10 @@ class VersionedLogTable:
     # strict_reads=True drops ignoreMissingFiles from every LISTING read
     # path: any file that vanishes between listing and open — even the
     # modeled quarantine race — fails the scan loudly instead of being
-    # skipped.  The manifest-planned query path (_snapshot_paths) is
-    # strict by construction regardless of this flag; the flag governs
-    # the paths that still list (legacy tables, plan-race fallback,
-    # tail_stream, read_manifest_range).  Use for audit reads and
+    # skipped.  The manifest-planned reads (_snapshot, tail_versions,
+    # read_manifest_range) are strict by construction regardless of
+    # this flag; the flag governs the paths that still list (legacy
+    # tables, plan-race fallback, tail_stream).  Use for audit reads and
     # wherever silent truncation is worse than a retried query (module
     # header, "silent data loss" paragraph).
     strict_reads: bool = False
@@ -249,11 +269,14 @@ class VersionedLogTable:
         raw = self._backend.get("version")
         if raw is not None:
             return int(raw.decode().strip() or "0")
-        vs = [
-            self._max_version(self._data(committed_only=False)),
-            self._max_version(self._tombstones(committed_only=False)),
-        ]
-        v = max((x for x in vs if x is not None), default=0)
+        # the one unfiltered read: every version on disk, committed or not
+        v = 0
+        for path in (self._resolve_data_path(), self.tombstones_path):
+            try:
+                df = self._batch_reader().parquet(path)
+            except Exception:
+                continue
+            v = max(v, df.agg(F.max("version")).collect()[0][0] or 0)
         self._write_version(v)
         return v
 
@@ -333,22 +356,18 @@ class VersionedLogTable:
         manifest set together with the data it describes — a shared dir
         would leave a window where the pointer and the manifests
         disagree about which paths are committed."""
-        return os.path.join(
-            self.meta_path, "manifest", os.path.basename(self._resolve_data_path())
-        )
+        return os.path.join(self.meta_path, self._manifest_prefix)
 
     def _write_manifest(
         self, name: str, files: list[str], rows: dict[str, int] | None = None
     ) -> None:
-        """One "relpath\\trows\\tbytes" line per file; tmp + fsync +
-        replace (the same small-object durability discipline as the
-        watermark).  rows may be unknown (-1) for base manifests — GC
-        never needs it, only the inspector's report does.  bytes is the
-        file size at commit time (one stat per freshly-landed file, paid
-        once at write), so verify_files can detect TRUNCATED committed
-        files, not just missing ones; -1 when unknown.  Parsers take
-        leading fields only, so pre-size two-field manifests stay
-        readable (sizes read as unknown)."""
+        """Record `files` under manifest `name` (manifest.py format); tmp
+        + fsync + replace (the same small-object durability discipline
+        as the watermark).  rows may be unknown (-1) for base manifests
+        — GC never needs it, only the inspector's report does.  bytes is
+        the file size at commit time (one stat per freshly-landed file,
+        paid once at write), so verify_files can detect TRUNCATED
+        committed files, not just missing ones; -1 when unknown."""
 
         def _size(p: str) -> int:
             try:
@@ -356,92 +375,106 @@ class VersionedLogTable:
             except OSError:
                 return -1
 
-        payload = "".join(
-            f"{os.path.relpath(p, self.root)}\t{(rows or {}).get(p, -1)}"
-            f"\t{_size(p)}\n"
-            for p in sorted(files)
+        entries = {
+            os.path.relpath(p, self.root): ((rows or {}).get(p, -1), _size(p))
+            for p in files
+        }
+        self._backend.put(
+            f"{self._manifest_prefix}/{name}", manifest.format_lines(entries)
         )
-        self._backend.put(f"{self._manifest_prefix}/{name}", payload.encode())
 
     @property
     def _manifest_prefix(self) -> str:
         """Backend name prefix (relative to _meta) of the CURRENT
-        generation's manifests."""
-        return "manifest/" + os.path.basename(self._resolve_data_path())
+        generation's manifests — for the write paths, which hold the
+        writer lock; readers pin the generation through _walk."""
+        return manifest.prefix(os.path.basename(self._resolve_data_path()))
+
+    def _walk(self, lo: int, hi: int | None, *, bases: bool):
+        """The one manifest reader: (generation path, base floor,
+        {manifest name -> {root-relative path -> (rows, bytes)}}), or
+        None.
+
+        Reads the per-version manifests with lo < N <= hi (hi None: no
+        upper bound) and, when `bases`, every base manifest.  The
+        generation is resolved once and its manifest names listed once;
+        eligibility is decided from the NAME before any get, so a tail
+        poll reads only the versions it delivers.  The base floor is the
+        highest base watermark (0 when none) from the same listing:
+        versions at or below it were grandfathered or compacted and have
+        no per-version manifest, so a tail walk (bases=False) whose
+        cursor reaches under it reads nothing.
+
+        None: the generation has no manifests (legacy table, or the
+        compact flip -> base-manifest gap), or the generation pointer
+        moved during the walk twice.  The pointer is re-read after the
+        reads; a flip (old manifests partly swept, new base not yet
+        seen) retries once against the new generation.  Callers fall
+        back to the listing scan, whose grace-window semantics cover
+        every race."""
+        for _ in range(2):
+            gen_path = self._resolve_data_path()
+            listed = {
+                full: parsed
+                for full in self._backend.list_names(
+                    manifest.prefix(os.path.basename(gen_path))
+                )
+                if (parsed := manifest.parse_name(full)) is not None
+            }
+            if not listed:
+                return None
+            floor = max((n for is_base, n in listed.values() if is_base), default=0)
+            wanted = [
+                full
+                for full, (is_base, n) in listed.items()
+                if (bases if is_base else lo < n and (hi is None or n <= hi))
+            ]
+            if not bases and lo < floor:
+                wanted = []  # the tail caller answers from the floor alone
+            mans = {}
+            for full in wanted:
+                raw = self._backend.get(full)
+                if raw is None:
+                    break  # swept between list and get: a compact raced
+                mans[os.path.basename(full)] = manifest.parse_lines(raw)
+            else:
+                if self._resolve_data_path() == gen_path:
+                    return gen_path, floor, mans
+        return None
+
+    def _data_files(self, gen_path: str, entries: dict) -> dict[str, int]:
+        """{absolute path -> recorded rows} of the data files among one
+        manifest's entries (a delete's manifest names tombstones only)."""
+        gen = os.path.basename(gen_path)
+        return {
+            os.path.join(self.root, rel): rows
+            for rel, (rows, _) in entries.items()
+            if rel.split(os.sep, 1)[0] == gen
+        }
 
     def _manifests(self) -> dict[str, dict[str, int]] | None:
         """{manifest_name -> {root-relative path -> rows}} for the current
         generation, or None when the table predates manifests (legacy
         footer-resolution path applies)."""
-        out: dict[str, dict[str, int]] = {}
-        for full in self._backend.list_names(self._manifest_prefix):
-            name = os.path.basename(full)
-            if name.endswith(".tmp") or not name.endswith(".list"):
-                continue
-            raw = self._backend.get(full)
-            if raw is None:
-                continue
-            entries: dict[str, int] = {}
-            for line in raw.decode().splitlines():
-                if not line:
-                    continue
-                rel, _, r = line.partition("\t")
-                # r is "rows" or "rows\tbytes" — rows is the first field
-                entries[rel] = int(r.partition("\t")[0] or -1)
-            out[name] = entries
-        return out or None
-
-    @staticmethod
-    def _manifest_version(name: str) -> int | None:
-        """v{N}.list -> N; base_{W}.list -> None (committed at <= W by
-        construction, per-file versions unresolved)."""
-        if name.startswith("v"):
-            return int(name[1:].split(".")[0])
-        return None
+        walk = self._walk(0, None, bases=True)
+        if walk is None:
+            return None
+        return {
+            name: {rel: rows for rel, (rows, _) in entries.items()}
+            for name, entries in walk[2].items()
+        }
 
     def _committed_paths(self, committed: int) -> set[str] | None:
         """Union of root-relative paths in committed manifests, or None
         on a legacy (manifest-less) table."""
-        mans = self._manifests()
-        if mans is None:
+        walk = self._walk(0, committed, bases=True)
+        if walk is None:
             return None
-        out: set[str] = set()
-        for name, entries in mans.items():
-            v = self._manifest_version(name)
-            if v is None or v <= committed:
-                out.update(entries)
-        return out
+        return {rel for entries in walk[2].values() for rel in entries}
 
-    def _committed_sizes(self, committed: int) -> dict[str, int]:
-        """root-relative path -> bytes recorded at commit time, for
-        committed manifests; -1 for entries written before the size
-        column (two-field manifests) so old tables never false-positive
-        the truncation audit."""
-        sizes: dict[str, int] = {}
-        for full in self._backend.list_names(self._manifest_prefix):
-            name = os.path.basename(full)
-            if name.endswith(".tmp") or not name.endswith(".list"):
-                continue
-            v = self._manifest_version(name)
-            if v is not None and v > committed:
-                continue
-            raw = self._backend.get(full)
-            if raw is None:
-                continue
-            for line in raw.decode().splitlines():
-                if not line:
-                    continue
-                fields = line.split("\t")
-                sizes[fields[0]] = (
-                    int(fields[2]) if len(fields) > 2 and fields[2] else -1
-                )
-        return sizes
-
-    def _snapshot_paths(
-        self, watermark: int, *, kind: str, prune_to: int | None = None
-    ) -> tuple[str, list[str]] | None:
-        """Explicit committed file list for the snapshot at `watermark`,
-        planned from the write manifests — the query-path read planner.
+    def _snapshot(self, watermark: int, prune_to: int | None = None) -> Snapshot:
+        """The committed file plan of the snapshot at `watermark`, from
+        one manifest walk — the query-path read planner.
 
         At 100 TB this replaces the recursive directory listing that
         `spark.read.parquet(dir)` pays per query (an object-store LIST
@@ -452,86 +485,38 @@ class VersionedLogTable:
         never opened — no `ignoreMissingFiles` needed to tolerate its
         quarantine — and a vanished COMMITTED file fails the scan loudly
         instead of being silently skipped (the r9-advice truncation
-        hazard, closed structurally for manifest-bearing tables).
+        hazard, closed structurally for manifest-bearing tables).  Data
+        and tombstones come from the same walk, so both sides are
+        provably from one manifest snapshot, and the generation is
+        pinned WITH the plan so the scan's basePath can never disagree
+        with the planned paths across a racing compact.
 
-        kind: 'data' (rels under the current generation dir),
-        'tombstones', 'both' or 'snapshot' — 'both' plans data AND
-        tombstones from ONE manifest walk (half the plan IO of two
-        calls, and both sides provably from the same manifest
-        snapshot); 'snapshot' is 'both' plus the data files' summed
-        recorded row counts, how read() and log_store() plan.
-        prune_to: time-travel file pruning — per-version
-        manifests above it are skipped entirely (whole committed files
-        never scanned); base manifests stay in (their per-file versions
-        are unresolved) and the caller's row-level `version <=`
-        filter finishes the job.
+        prune_to: time-travel file pruning — per-version manifests above
+        it are skipped entirely (whole committed files never scanned);
+        base manifests stay in (their per-file versions are unresolved)
+        and the caller's row-level `version <=` filter finishes the job.
 
-        Returns (generation_path, sorted_paths) — for kind='both',
-        (generation_path, sorted_data_paths, sorted_tombstone_paths), and
-        for kind='snapshot' that triple plus the row bound (None when any
-        data file's count is unrecorded) —
-        the generation is pinned WITH the plan so the caller's basePath
-        can never disagree with the planned paths across a racing
-        compact — or None, in which case the caller falls back to the
-        listing scan, whose grace-window semantics cover every race:
-        the table is legacy (no manifests) or a compact raced the plan.
-        Race detection: the generation pointer is re-read after the
-        manifest walk; a flip mid-plan (old-gen manifests partially
-        swept, new base not yet seen) retries once against the new
-        generation, then gives up to the fallback."""
-        for _ in range(2):
-            gen_path = self._resolve_data_path()
-            gen = os.path.basename(gen_path)
-            prefix = "manifest/" + gen
-            names = [
-                n
-                for n in self._backend.list_names(prefix)
-                if n.endswith(".list")
-            ]
-            if not names:
-                return None  # legacy table, or the flip->base-manifest gap
-            data: dict[str, int] = {}  # path -> recorded rows (-1 unknown)
-            tombs: list[str] = []
-            complete = True
-            for full in names:
-                v = self._manifest_version(os.path.basename(full))
-                if v is not None and v > watermark:
-                    continue  # above the snapshot: not committed for us
-                if v is not None and prune_to is not None and v > prune_to:
-                    continue  # time travel: the whole version is pruned
-                raw = self._backend.get(full)
-                if raw is None:
-                    complete = False  # swept between list and get
-                    break
-                for line in raw.decode().splitlines():
-                    if not line:
-                        continue
-                    rel, _, rest = line.partition("\t")
-                    seg = rel.split(os.sep, 1)[0]
-                    if seg == gen and kind != "tombstones":
-                        # rest is "rows" or "rows\tbytes"; a rel recorded
-                        # twice carries the same file, so overwriting is exact
-                        data[os.path.join(self.root, rel)] = int(
-                            rest.partition("\t")[0] or -1
-                        )
-                    elif seg == "tombstones" and kind != "data":
-                        tombs.append(os.path.join(self.root, rel))
-            if complete and os.path.basename(self._resolve_data_path()) == gen:
-                # [] is a COMPLETE empty plan ("no committed files of this
-                # kind"), distinct from None ("no plan; use the scan"):
-                # _tombstones turns [] into "no tombstones" with zero IO.
-                # dict/set: a rel recorded twice (e.g. a re-adopted
-                # baseline) must not be scanned twice — the listing path
-                # reads each file once, and the explicit plan must match it
-                data_paths, tomb_paths = sorted(data), sorted(set(tombs))
-                if kind == "snapshot":
-                    rows = data.values()
-                    bound = None if any(r < 0 for r in rows) else sum(rows)
-                    return gen_path, data_paths, tomb_paths, bound
-                if kind == "both":
-                    return gen_path, data_paths, tomb_paths
-                return gen_path, data_paths if kind == "data" else tomb_paths
-        return None  # compacts raced the plan twice; scan path takes over
+        A walk that yields no plan (_walk's None) gives a snapshot whose
+        data and tombs are None: the scans list the directories."""
+        hi = watermark if prune_to is None else min(watermark, prune_to)
+        walk = self._walk(0, hi, bases=True)
+        if walk is None:
+            return Snapshot(watermark, self._resolve_data_path(), None, None, None)
+        gen_path, _, mans = walk
+        data: dict[str, int] = {}
+        tombs: set[str] = set()
+        for entries in mans.values():
+            # a rel recorded twice (e.g. a re-adopted baseline) is one
+            # file, scanned once — the listing path reads each file once
+            data.update(self._data_files(gen_path, entries))
+            tombs.update(
+                os.path.join(self.root, rel)
+                for rel in entries
+                if rel.split(os.sep, 1)[0] == "tombstones"
+            )
+        rows = data.values()
+        bound = None if any(r < 0 for r in rows) else sum(rows)
+        return Snapshot(watermark, gen_path, sorted(data), sorted(tombs), bound)
 
     def _ensure_manifest_baseline(self) -> None:
         """First manifest-bearing write on a legacy table: grandfather
@@ -541,18 +526,18 @@ class VersionedLogTable:
         everything still on disk is committed by construction.
 
         Runs on EVERY write, so the already-adopted check must be O(1):
-        a name listing for any '*.list', not a full _manifests() parse —
+        a name listing for any manifest, not a full _manifests() parse —
         parsing every per-version manifest here would cost O(versions
         since last compact) small-object reads per append."""
         if any(
-            n.endswith(".list")
+            manifest.parse_name(n) is not None
             for n in self._backend.list_names(self._manifest_prefix)
         ):
             return
         existing = self._list_data_files() + self._list_tombstone_files()
         if existing:
             self._write_manifest(
-                f"base_{self.committed_version():012d}.list",
+                manifest.base_name(self.committed_version()),
                 existing,
                 self._file_rows(existing),  # one-time footer pass at adoption
             )
@@ -603,23 +588,19 @@ class VersionedLogTable:
             return
         prefixes = tuple(r.rstrip(os.sep) + os.sep for r in rels)
         for full in self._backend.list_names(self._manifest_prefix):
-            if not full.endswith(".list"):
+            if manifest.parse_name(full) is None:
                 continue
             raw = self._backend.get(full)
             if raw is None:
                 continue
-            kept, dropped = [], False
-            for line in raw.decode().splitlines():
-                if not line:
-                    continue
-                rel = line.partition("\t")[0]
-                if rel in rels or rel.startswith(prefixes):
-                    dropped = True
-                    continue
-                kept.append(line)
-            if dropped:
-                payload = ("\n".join(kept) + "\n") if kept else ""
-                self._backend.put(full, payload.encode())
+            entries = manifest.parse_lines(raw)
+            kept = {
+                rel: e
+                for rel, e in entries.items()
+                if not (rel in rels or rel.startswith(prefixes))
+            }
+            if len(kept) < len(entries):
+                self._backend.put(full, manifest.format_lines(kept))
 
     def _gc_defer(self, paths: list[str]) -> None:
         """Schedule physical deletion of paths (files or whole dirs) at
@@ -759,9 +740,8 @@ class VersionedLogTable:
         # retire manifests recorded above the watermark (writer crashed
         # between its manifest write and its flip)
         for full in self._backend.list_names(self._manifest_prefix):
-            name = os.path.basename(full)
-            v = self._manifest_version(name) if name.endswith(".list") else None
-            if v is not None and v > committed:
+            parsed = manifest.parse_name(full)
+            if parsed is not None and not parsed[0] and parsed[1] > committed:
                 self._backend.delete(full)
         # leftover task-attempt dirs from the crashed Spark job
         for base in (self._resolve_data_path(), self.tombstones_path):
@@ -818,12 +798,6 @@ class VersionedLogTable:
         v = cur + 1
         self._write_version(v)
         return v
-
-    def _max_version(self, df: DataFrame | None) -> int | None:
-        if df is None:
-            return None
-        row = df.agg(F.max("version")).collect()[0]
-        return row[0]
 
     def _bucket_expr(self, col="producer"):
         """Deterministic producer -> bucket.  Used both as the write-side
@@ -904,7 +878,7 @@ class VersionedLogTable:
                 if p not in before
             ]
             self._write_manifest(
-                f"v{version:012d}.list", new_files, self._file_rows(new_files)
+                manifest.version_name(version), new_files, self._file_rows(new_files)
             )
             # files are fully landed: flip the watermark — only now does
             # this version become visible to any reader (atomic publish)
@@ -960,7 +934,7 @@ class VersionedLogTable:
                 p for p in self._list_tombstone_files() if p not in before
             ]
             self._write_manifest(
-                f"v{version:012d}.list", new_files, self._file_rows(new_files)
+                manifest.version_name(version), new_files, self._file_rows(new_files)
             )
             self._publish(version, expected_version=prev_committed)
             # a tombstone adds no data files: advance the index watermark
@@ -1003,100 +977,50 @@ class VersionedLogTable:
             r = r.option("ignoreMissingFiles", "true")
         return r
 
-    # sentinel distinguishing "caller supplied no plan: compute one"
-    # from "caller's plan was None: fall back to the listing scan"
-    _PLAN_UNSET = object()
+    def _data(self, snap: Snapshot) -> DataFrame | None:
+        """The committed data rows of `snap`: version <= its watermark,
+        so a reader racing an in-flight append never sees its partial
+        file set.
 
-    def _data(
-        self,
-        committed_only: bool = True,
-        watermark: int | None = None,
-        prune_to: int | None = None,
-        plan=_PLAN_UNSET,
-    ) -> DataFrame | None:
-        """committed_only (the default for every query path) hides any
-        version above the published watermark: a reader racing an
-        in-flight append never sees its partial file set.
-
-        Manifest-bearing tables plan the scan from the write manifests
-        (_snapshot_paths): an explicit committed file list instead of a
-        directory listing — O(versions since compact) small-object reads
-        at plan time rather than an object-store LIST over every file,
-        and strict by construction (a vanished committed file fails
-        loudly; an uncommitted file is never opened, so no
+        A manifest plan reads exactly its named files — no directory
+        listing, and strict by construction (a vanished committed file
+        fails loudly; an uncommitted file is never opened, so no
         ignoreMissingFiles).  The watermark row filter stays on as a
         belt-and-braces guard (parquet min/max makes it free).
 
-        Legacy tables — and any read whose plan a compact raced — fall
-        back to the listing scan, where the version predicate hides
-        unpublished files via row-group min/max and ignoreMissingFiles
-        covers the quarantine race (see _batch_reader).
-        committed_only=False exists solely for the version-counter
-        bootstrap scan and always lists.
+        Without a plan (legacy table, raced compact) — and for a plan
+        with no committed data files, so the legacy empty-table
+        semantics (None / empty frame) hold exactly — the listing scan
+        serves, where the version predicate hides unpublished files via
+        row-group min/max and ignoreMissingFiles covers the quarantine
+        race (see _batch_reader)."""
+        if snap.data:
+            df = self.spark.read.option("basePath", snap.gen).parquet(*snap.data)
+        else:
+            try:
+                df = self._batch_reader().parquet(snap.gen)
+            except Exception:
+                return None
+        return df.filter(F.col("version") <= F.lit(snap.watermark))
 
-        watermark: pass a pre-resolved committed version so a multi-part
-        read (data + tombstones) sees ONE snapshot — resolving twice
-        would let a concurrent publish land between the two reads and
-        apply a newer tombstone against older data.
-
-        prune_to: time-travel file pruning (see _snapshot_paths).
-        plan: a pre-computed (gen_path, paths) from a shared kind='both'
-        walk (read() plans data + tombstones in one pass); None forces
-        the listing fallback; unset computes a plan here."""
-        if committed_only:
-            w = self.committed_version() if watermark is None else watermark
-            if plan is VersionedLogTable._PLAN_UNSET:
-                plan = self._snapshot_paths(w, kind="data", prune_to=prune_to)
-            if plan is not None and plan[1]:
-                gen_path, paths = plan
-                df = self.spark.read.option("basePath", gen_path).parquet(
-                    *paths
-                )
-                return df.filter(F.col("version") <= F.lit(w))
-            # plan == (gen, []) — manifest-complete but no committed data
-            # files: fall through so the listing path preserves the
-            # legacy empty-table semantics (None / empty frame) exactly
-        try:
-            df = self._batch_reader().parquet(self._resolve_data_path())
-        except Exception:
-            return None
-        if committed_only:
-            w = self.committed_version() if watermark is None else watermark
-            df = df.filter(F.col("version") <= F.lit(w))
-        return df
-
-    def _tombstones(
-        self,
-        committed_only: bool = True,
-        watermark: int | None = None,
-        prune_to: int | None = None,
-        plan=_PLAN_UNSET,
-    ) -> DataFrame | None:
-        if committed_only:
-            w = self.committed_version() if watermark is None else watermark
-            if plan is VersionedLogTable._PLAN_UNSET:
-                plan = self._snapshot_paths(
-                    w, kind="tombstones", prune_to=prune_to
-                )
-            if plan is not None:
-                if not plan[1]:
-                    # manifest-complete, zero committed tombstones: the
-                    # common no-deletes table answers with ZERO IO (the
-                    # listing path would stat the dir per read)
-                    return None
-                df = self.spark.read.option(
-                    "basePath", self.tombstones_path
-                ).parquet(*plan[1])
-                return df.filter(F.col("version") <= F.lit(w))
-        try:
-            # same missing-file contract as _data()
-            df = self._batch_reader().parquet(self.tombstones_path)
-        except Exception:
-            return None
-        if committed_only:
-            w = self.committed_version() if watermark is None else watermark
-            df = df.filter(F.col("version") <= F.lit(w))
-        return df
+    def _tombstones(self, snap: Snapshot) -> DataFrame | None:
+        """The committed tombstones of `snap`; same plan/listing split as
+        _data.  A plan naming no tombstones — the common no-deletes table
+        — answers None with ZERO IO (the listing path would stat the dir
+        per read)."""
+        if snap.tombs is not None:
+            if not snap.tombs:
+                return None
+            df = self.spark.read.option(
+                "basePath", self.tombstones_path
+            ).parquet(*snap.tombs)
+        else:
+            try:
+                # same missing-file contract as _data()
+                df = self._batch_reader().parquet(self.tombstones_path)
+            except Exception:
+                return None
+        return df.filter(F.col("version") <= F.lit(snap.watermark))
 
     def _strip(self, df: DataFrame) -> DataFrame:
         """Drop the internal layout column from an outward-facing frame
@@ -1120,56 +1044,22 @@ class VersionedLogTable:
 
     def _read_at(
         self, watermark: int, as_of_version: int | None = None
-    ) -> tuple[DataFrame, tuple | None]:
-        """read() at a pre-resolved watermark -> (frame, plan).  plan is
-        the kind='snapshot' manifest plan (generation, data paths,
-        tombstone paths, row bound) when the data side was served from
-        it, else None (listing fallback: legacy table, the compact
-        flip->base-manifest gap, or no committed data files)."""
-        # as_of prunes whole per-version manifests out of the file plan;
-        # the row-level version filter in _apply_tombstones finishes the
-        # job for files under a base manifest (per-file versions there
-        # are unresolved).  ONE manifest walk plans data and tombstones
-        # together: half the plan IO, and both sides come from the same
-        # manifest snapshot by construction.
-        snap = self._snapshot_paths(
-            watermark, kind="snapshot", prune_to=as_of_version
-        )
-        dplan = tplan = None
-        if snap is not None:
-            gen_path, data_paths, tomb_paths, _ = snap
-            dplan, tplan = (gen_path, data_paths), (gen_path, tomb_paths)
-        df = self._data(watermark=watermark, prune_to=as_of_version, plan=dplan)
+    ) -> tuple[DataFrame, Snapshot]:
+        """read() at a pre-resolved watermark -> (frame, the snapshot it
+        was planned from).  as_of prunes whole per-version manifests out
+        of the file plan; the row-level version filter in
+        _apply_tombstones finishes the job for files under a base
+        manifest (per-file versions there are unresolved)."""
+        snap = self._snapshot(watermark, as_of_version)
+        df = self._data(snap)
         if df is None:
             raise FileNotFoundError(f"no data at {self.data_path}")
-        out = self._strip(
-            self._apply_tombstones(
-                df, as_of_version, watermark=watermark, plan=tplan
-            )
-        )
-        # _data serves an empty data plan from the listing path
-        return out, (snap if snap is not None and snap[1] else None)
-
-    def _plan_both(self, watermark: int, *, prune_to: int | None = None):
-        """One manifest walk -> ((gen, data_paths), (gen, tomb_paths)),
-        or (None, None) when the walk yields no plan (legacy table or a
-        twice-raced compact) — the callers' listing fallback."""
-        both = self._snapshot_paths(watermark, kind="both", prune_to=prune_to)
-        if both is None:
-            return None, None
-        gen_path, data_paths, tomb_paths = both
-        return (gen_path, data_paths), (gen_path, tomb_paths)
+        return self._strip(self._apply_tombstones(df, as_of_version, snap)), snap
 
     def _apply_tombstones(
-        self,
-        df: DataFrame,
-        as_of_version: int | None = None,
-        watermark: int | None = None,
-        plan=_PLAN_UNSET,
+        self, df: DataFrame, as_of_version: int | None, snap: Snapshot
     ) -> DataFrame:
-        ts = self._tombstones(
-            watermark=watermark, prune_to=as_of_version, plan=plan
-        )
+        ts = self._tombstones(snap)
         if as_of_version is not None:
             df = df.filter(F.col("version") <= as_of_version)
             if ts is not None:
@@ -1216,21 +1106,26 @@ class VersionedLogTable:
         is no committed-set source of truth to audit against.  Cost is
         one listing + the manifest set — an explicit audit call, never
         on the query path."""
-        w = self.committed_version()
-        committed = self._committed_paths(w)
-        if committed is None:
+        walk = self._walk(0, self.committed_version(), bases=True)
+        if walk is None:
             raise RuntimeError(
                 "verify_files needs write manifests; legacy table "
                 "(write once to adopt a baseline manifest)"
             )
+        # root-relative path -> bytes recorded at commit time (-1 for
+        # pre-size-column entries, which never false-positive the audit)
+        sizes = {
+            rel: size for entries in walk[2].values()
+            for rel, (_, size) in entries.items()
+        }
+        committed = set(sizes)
         live = {
             os.path.relpath(p, self.root)
             for p in self._list_data_files() + self._list_tombstone_files()
         }
-        sizes = self._committed_sizes(w)
         mismatch = []
         for rel in sorted(committed & live):
-            want = sizes.get(rel, -1)
+            want = sizes[rel]
             if want < 0:
                 continue  # pre-size manifest entry: unknown, not wrong
             try:
@@ -1250,43 +1145,25 @@ class VersionedLogTable:
         """Rows ingested after `from_version` — the export/tail polling
         loop (cli/cmd/tail.go:29-97).  `tail_stream` is the push-based
         upgrade."""
-        df = self._data()
+        df = self._data(self._snapshot(self.committed_version()))
         if df is None:
             raise FileNotFoundError(f"no data at {self.data_path}")
         return self._strip(df.filter(F.col("version") > from_version))
 
-    def read_manifest_slice(self, version: int) -> DataFrame | None:
-        """The DATA rows committed at exactly `version`, scanning only
-        the files that version's write manifest names — no directory
-        listing, no version-predicate scan over the table.  None when no
-        manifest exists for `version` (skipped counter value after a
-        crash, a legacy pre-manifest version, or a tombstone-only write
-        whose manifest names no data files).  basePath keeps the
-        dir-encoded partition columns on the explicit-file scan."""
-        paths = self._manifest_data_paths(version)
-        if not paths:
-            return None
-        df = (
-            self._batch_reader()
-            .option("basePath", self._resolve_data_path())
-            .parquet(*paths)
+    def _tail_walk(self, from_version: int, up_to: int | None):
+        """_walk over the committed versions in (from_version, up_to or
+        the watermark] -> (gen_path, base floor, manifests) or None."""
+        hi = self.committed_version()
+        return self._walk(
+            from_version, hi if up_to is None else min(up_to, hi), bases=False
         )
-        return self._strip(df)
 
-    def _manifest_base_floor(self) -> int:
-        """Highest base-manifest watermark in the current generation (0
-        when none): versions at or below it were grandfathered/compacted
-        into a base manifest and have NO per-version slice.  Name-only —
-        no object is read."""
-        floor = 0
-        for n in self._backend.list_names(self._manifest_prefix):
-            name = os.path.basename(n)
-            if name.startswith("base_") and name.endswith(".list"):
-                try:
-                    floor = max(floor, int(name[len("base_"):].split(".")[0]))
-                except ValueError:
-                    pass
-        return floor
+    def _slice(self, gen_path: str, paths: list[str], version: int) -> DataFrame:
+        """Manifest-named data files of versions <= `version` through the
+        strict committed-file scan (_data): a vanished committed file
+        fails the read instead of silently shrinking a tail body whose
+        cursor then advances past it."""
+        return self._strip(self._data(Snapshot(version, gen_path, paths, [], None)))
 
     def tail_version_counts(
         self, from_version: int = 0
@@ -1296,69 +1173,37 @@ class VersionedLogTable:
         counts — ZERO data IO, where the legacy derivation is a
         groupBy(version).count() scan over everything past the cursor on
         every poll.  None routes the caller to that legacy scan: table
-        predates manifests, a manifest carries an unknown (-1) count, or
-        the cursor reaches back into a base-grandfathered range whose
-        per-version split the manifests cannot resolve.
+        predates manifests, a compact raced the walk, a manifest carries
+        an unknown (-1) count, or the cursor reaches back into a
+        base-grandfathered range whose per-version split the manifests
+        cannot resolve.
 
-        Poll-cost discipline: version eligibility is decided from the
-        manifest NAME alone (v{N}.list / base_{W}.list), so the only
-        objects READ are the delivered versions' — per-poll cost is one
-        name listing plus O(delivered versions) small reads, never
+        Poll cost: one walk — one name listing plus the delivered
+        versions' manifests (eligibility is decided from the NAME), never
         O(versions since compact) parses."""
-        names = [
-            os.path.basename(n)
-            for n in self._backend.list_names(self._manifest_prefix)
-            if n.endswith(".list")
-        ]
-        if not names:
+        walk = self._tail_walk(from_version, None)
+        if walk is None or from_version < walk[1]:
             return None
-        committed = self.committed_version()
-        gen = os.path.basename(self._resolve_data_path())
+        gen_path, _, mans = walk
         out = []
-        for name in names:
-            v = self._manifest_version(name)
-            if v is None:
-                # base manifest: per-version rows below its watermark are
-                # unresolved — a cursor reaching under it falls back to
-                # the scan (name-only check; the base is never read here)
-                try:
-                    base_wm = int(name[len("base_"):].split(".")[0])
-                except ValueError:
-                    return None
-                if from_version < base_wm:
-                    return None
-                continue
-            if v <= from_version or v > committed:
-                continue
-            raw = self._backend.get(f"{self._manifest_prefix}/{name}")
-            if raw is None:
-                continue  # retired between listing and read
-            rows, has_data = 0, False
-            for line in raw.decode().splitlines():
-                if not line:
-                    continue
-                rel, _, r = line.partition("\t")
-                if rel.split(os.sep, 1)[0] != gen:
-                    continue  # a delete's manifest names tombstone files
-                has_data = True
-                n = int(r.partition("\t")[0] or -1)
-                if n < 0:
-                    return None  # unknown count: legacy scan decides
-                rows += n
-            if has_data:
-                out.append((v, rows))
+        for name, entries in mans.items():
+            rows = self._data_files(gen_path, entries).values()
+            if any(r < 0 for r in rows):
+                return None  # unknown count: legacy scan decides
+            if rows:
+                out.append((manifest.parse_name(name)[1], sum(rows)))
         return sorted(out)
 
     def tail_versions(self, from_version: int = 0, *, up_to: int | None = None):
         """Manifest-driven tail: yield (version, DataFrame) for every
         COMMITTED version in (from_version, up_to or current watermark]
-        whose manifest names data files.  Discovery cost is O(versions
-        delivered + their files) — one watermark read plus one small
-        manifest object per version, ZERO directory re-listing.  This is
-        the scale path the round-10 tail_stream probe pointed at: the
-        file-source tail_stream re-lists the whole data dir every
-        trigger (~25 us per live file, PLANS.md), while this tail's
-        per-poll cost is independent of how many files the table holds.
+        whose manifest names data files.  Discovery is one walk — one
+        name listing plus one small manifest object per delivered
+        version, ZERO directory re-listing.  This is the scale path the
+        round-10 tail_stream probe pointed at: the file-source
+        tail_stream re-lists the whole data dir every trigger (~25 us
+        per live file, PLANS.md), while this tail's per-poll cost is
+        independent of how many files the table holds.
 
         Snapshot semantics match the polling tail(): only versions at or
         below the publish watermark are delivered, so a crashed writer's
@@ -1374,9 +1219,8 @@ class VersionedLogTable:
         Versions may skip numbers (a crashed writer leaves its counter
         value unused) — skipped and tombstone-only versions are silently
         passed over, exactly like the reference's export-version cursor
-        (cli/cmd/tail.go:29-97).  Candidate versions come from ONE name
-        listing, not a get() per counter value — a fresh consumer on a
-        long history pays O(listed manifests), not O(counter range).
+        (cli/cmd/tail.go:29-97).  Nothing is yielded on a legacy table
+        or when compacts raced the walk twice; the next poll retries.
 
         Raises ValueError when `from_version` reaches under a base
         manifest's watermark: those versions were grandfathered or
@@ -1384,9 +1228,10 @@ class VersionedLogTable:
         yielding only the later ones would SILENTLY hand the consumer a
         partial history.  Use read()/tail() for the collapsed range and
         resume the cursor at the base watermark."""
-        committed = self.committed_version()
-        hi = committed if up_to is None else min(up_to, committed)
-        floor = self._manifest_base_floor()
+        walk = self._tail_walk(from_version, up_to)
+        if walk is None:
+            return
+        gen_path, floor, mans = walk
         if from_version < floor:
             raise ValueError(
                 f"tail_versions cursor {from_version} reaches under the "
@@ -1394,38 +1239,11 @@ class VersionedLogTable:
                 "grandfathered/compacted and has no per-version slices — "
                 f"read()/tail() it, then resume from {floor}"
             )
-        versions = sorted(
-            v
-            for v in (
-                self._manifest_version(os.path.basename(n))
-                for n in self._backend.list_names(self._manifest_prefix)
-                if n.endswith(".list")
-            )
-            if v is not None and from_version < v <= hi
-        )
-        for v in versions:
-            df = self.read_manifest_slice(v)
-            if df is not None:
-                yield v, df
-
-    def _manifest_data_paths(self, version: int) -> list[str]:
-        """Absolute data-file paths named by `version`'s manifest (empty
-        when the manifest is absent or names only tombstone files)."""
-        raw = self._backend.get(
-            f"{self._manifest_prefix}/v{version:012d}.list"
-        )
-        if raw is None:
-            return []
-        gen = os.path.basename(self._resolve_data_path())
-        return [
-            os.path.join(self.root, rel)
-            for rel in (
-                line.partition("\t")[0]
-                for line in raw.decode().splitlines()
-                if line
-            )
-            if rel.split(os.sep, 1)[0] == gen
-        ]
+        for name, entries in mans.items():  # listed in version order
+            paths = list(self._data_files(gen_path, entries))
+            if paths:
+                v = manifest.parse_name(name)[1]
+                yield v, self._slice(gen_path, paths, v)
 
     def read_manifest_range(
         self, from_version: int, up_to: int
@@ -1437,31 +1255,20 @@ class VersionedLogTable:
         instead of an N-deep Union plan.
 
         Returns None when the range reaches under a base manifest's
-        watermark — per-version slices don't exist there, and a compact
-        racing the caller's plan (tail_version_counts) lands exactly
-        here: the new generation's base covers the promised versions, so
-        the caller must fall back to the scan path rather than serve a
-        silently partial (or empty) body against an advanced cursor."""
-        committed = self.committed_version()
-        hi = min(up_to, committed)
-        if from_version < self._manifest_base_floor():
+        watermark, or when compacts raced the walk — per-version slices
+        don't exist there, and a compact racing the caller's plan
+        (tail_version_counts) lands exactly here: the new generation's
+        base covers the promised versions, so the caller must fall back
+        to the scan path rather than serve a silently partial (or empty)
+        body against an advanced cursor."""
+        walk = self._tail_walk(from_version, up_to)
+        if walk is None or from_version < walk[1]:
             return None
-        paths: list[str] = []
-        for n in self._backend.list_names(self._manifest_prefix):
-            name = os.path.basename(n)
-            if not name.endswith(".list"):
-                continue
-            v = self._manifest_version(name)
-            if v is not None and from_version < v <= hi:
-                paths += self._manifest_data_paths(v)
+        gen_path, _, mans = walk
+        paths = [p for e in mans.values() for p in self._data_files(gen_path, e)]
         if not paths:
             return None
-        df = (
-            self._batch_reader()
-            .option("basePath", self._resolve_data_path())
-            .parquet(*paths)
-        )
-        return self._strip(df)
+        return self._slice(gen_path, paths, up_to)
 
     def tail_stream(self, from_version: int = 0) -> DataFrame:
         """Push-based tail: a Structured Streaming file source over the
@@ -1492,7 +1299,7 @@ class VersionedLogTable:
         that is too hot, `tail_versions` discovers new data from the
         per-version manifests instead — per-poll cost independent of
         file count, committed-only semantics."""
-        df = self._data()
+        df = self._data(self._snapshot(self.committed_version()))
         if df is None:
             raise FileNotFoundError(f"no data at {self.data_path}")
         reader = self.spark.readStream.schema(df.schema)
@@ -1721,11 +1528,10 @@ class VersionedLogTable:
         file-list scan."""
         from dp3_spark.operators.trigram import probe_index
 
-        w = self.committed_version()  # one snapshot for every sub-read
-        # one kind='both' walk plans data + tombstones for every branch
-        # below (each branch applies tombstones exactly once)
-        dplan, tplan = self._plan_both(w, prune_to=as_of_version)
-        full = self._data(watermark=w, prune_to=as_of_version, plan=dplan)
+        # one snapshot (one walk) plans data + tombstones for every
+        # branch below (each branch applies tombstones exactly once)
+        snap = self._snapshot(self.committed_version(), as_of_version)
+        full = self._data(snap)
         if full is None:
             raise FileNotFoundError(f"no data at {self.data_path}")
         pred = (
@@ -1741,9 +1547,7 @@ class VersionedLogTable:
             )
         if not self.trigram_cols or column not in self.trigram_cols:
             return self._strip(
-                self._apply_tombstones(
-                    full, as_of_version, watermark=w, plan=tplan
-                ).filter(pred)
+                self._apply_tombstones(full, as_of_version, snap).filter(pred)
             )
         try:
             survivors, covered = probe_index(
@@ -1752,9 +1556,7 @@ class VersionedLogTable:
         except Exception:
             # sidecar missing or unreadable: correctness first, no pruning
             return self._strip(
-                self._apply_tombstones(
-                    full, as_of_version, watermark=w, plan=tplan
-                ).filter(pred)
+                self._apply_tombstones(full, as_of_version, snap).filter(pred)
             )
         live = {f"file://{p}" for p in self._list_data_files()}
         # unindexed data files can never be skipped; index rows for files
@@ -1770,12 +1572,10 @@ class VersionedLogTable:
             # the explicit file list bypasses _data(): re-apply the same
             # snapshot watermark so an in-flight append stays invisible
             # on this path too
-            .filter(F.col("version") <= F.lit(w))
+            .filter(F.col("version") <= F.lit(snap.watermark))
         )
         return self._strip(
-            self._apply_tombstones(
-                df, as_of_version, watermark=w, plan=tplan
-            ).filter(pred)
+            self._apply_tombstones(df, as_of_version, snap).filter(pred)
         )
 
     def log_store(self, *, payload_cols: tuple[str, ...] = ()):
@@ -1807,14 +1607,14 @@ class VersionedLogTable:
             memo = self._store_memo
             if memo is not None and memo[0] == (self._resolve_data_path(), w):
                 return memo[1]
-            store, plan = self._plan_log_store(w)
-            if plan is not None:
-                self._store_memo = ((plan[0], w), store)
+            store, snap = self._plan_log_store(w)
+            if snap.data:
+                self._store_memo = ((snap.gen, w), store)
             return store
 
     def _plan_log_store(self, watermark: int, payload_cols: tuple[str, ...] = ()):
-        """(LogStore of the snapshot at `watermark`, its kind='snapshot'
-        manifest plan or None when the listing path served it)."""
+        """(LogStore of the snapshot at `watermark`, the Snapshot it was
+        planned from; manifest-served iff its data list is non-empty)."""
         from dp3_spark.catalog import LogStore
 
         def probe(column: str, needle: str, mode: str):
@@ -1822,7 +1622,7 @@ class VersionedLogTable:
             # masking are applied by the probe read itself
             return self.read_string_probe(column, needle, mode=mode)
 
-        df, plan = self._read_at(watermark)
+        df, snap = self._read_at(watermark)
         if not payload_cols:
             # default: every non-canonical column is payload (version is
             # bookkeeping) — derived from THIS frame, no second read
@@ -1841,9 +1641,9 @@ class VersionedLogTable:
             payload_cols=payload_cols,
             string_probe=probe if self.trigram_cols else None,
             probe_columns=self.trigram_cols,
-            row_bound=plan[3] if plan is not None else None,
+            row_bound=snap.bound if snap.data else None,
         )
-        return store, plan
+        return store, snap
 
     # ---------------------------------------------------------- maintain
     def compact(self) -> None:
@@ -1923,14 +1723,14 @@ class VersionedLogTable:
         # path until the next write grandfathers it.
         new_gen_files = self._list_data_files() + old_tombstones
         self._write_manifest(
-            f"base_{self.committed_version():012d}.list",
+            manifest.base_name(self.committed_version()),
             new_gen_files,
             self._file_rows(new_gen_files),
         )
         import shutil
 
         old_mandir = os.path.join(
-            self.meta_path, "manifest", os.path.basename(old)
+            self.meta_path, manifest.prefix(os.path.basename(old))
         )
         self._gc_defer([old, old_mandir] + old_tombstones)
         # the sidecar keyed old-generation files; rebuild over the new one

@@ -107,7 +107,8 @@ def test_compact_applies_tombstones(spark, table):
     table.delete_range("dev1", "/a", 0, 25)
     table.compact()
     assert sorted(r["log_time"] for r in table.read().collect()) == [30]
-    assert table._tombstones() is None  # physically applied
+    # physically applied
+    assert table._tombstones(table._snapshot(table.committed_version())) is None
 
 
 def test_compact_swaps_pointer_and_stays_writable(spark, table):

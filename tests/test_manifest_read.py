@@ -1,7 +1,7 @@
 """Manifest-planned snapshot reads (round 10).
 
 `read()` on a manifest-bearing table plans its scan from the write
-manifests (`_snapshot_paths`): an explicit committed file list — the
+manifests (`_snapshot`): an explicit committed file list — the
 Delta/Iceberg planning shape — instead of a recursive directory listing.
 At 100 TB that swaps an object-store LIST over every file ever written
 for O(versions since compact) small-object reads, and it makes the
@@ -46,9 +46,7 @@ def _rows(df):
 
 def _force_listing(monkeypatch):
     monkeypatch.setattr(
-        VersionedLogTable,
-        "_snapshot_paths",
-        lambda self, w, *, kind, prune_to=None: None,
+        VersionedLogTable, "_walk", lambda self, lo, hi, *, bases: None
     )
 
 
@@ -86,12 +84,12 @@ def test_as_of_prunes_whole_files_from_plan(spark, root):
     whole committed files never enter the scan, not merely their rows."""
     t = _build(spark, root)
     w = t.committed_version()
-    full = t._snapshot_paths(w, kind="data")
-    pruned = t._snapshot_paths(w, kind="data", prune_to=1)
+    full = t._snapshot(w).data
+    pruned = t._snapshot(w, prune_to=1).data
     assert full is not None and pruned is not None
-    assert set(pruned[1]) < set(full[1])  # strictly fewer files planned
+    assert set(pruned) < set(full)  # strictly fewer files planned
     # the pruned plan is exactly version 1's manifest (fresh table: no base)
-    assert set(pruned[1]) == set(
+    assert set(pruned) == set(
         os.path.join(t.root, rel) for rel in t._manifests()["v" + "1".zfill(12) + ".list"]
     )
 
@@ -112,8 +110,7 @@ def test_uncommitted_file_never_planned(spark, root):
         .partitionBy("topic", "producer_bucket")
         .parquet(t._resolve_data_path())
     )
-    plan = t._snapshot_paths(t.committed_version(), kind="data")
-    assert plan is not None
+    assert t._snapshot(t.committed_version()).data is not None
     raw = spark.read.parquet(t._resolve_data_path())
     assert raw.count() == 3  # the partial IS on disk...
     assert _rows(t.read()) == [("/a", 10), ("/a", 20)]  # ...never planned
@@ -143,7 +140,7 @@ def test_no_tombstones_answered_with_zero_io(spark, root, monkeypatch):
         raise AssertionError("listing reader built despite a complete plan")
 
     monkeypatch.setattr(VersionedLogTable, "_batch_reader", boom)
-    assert t._tombstones() is None
+    assert t._tombstones(t._snapshot(t.committed_version())) is None
     assert _rows(t.read()) == [("/a", 10)]
 
 
@@ -166,9 +163,9 @@ def test_compact_race_retries_to_new_generation(spark, root, monkeypatch):
         return old_gen if calls["n"] == 1 else orig(self)
 
     monkeypatch.setattr(VersionedLogTable, "_resolve_data_path", flaky)
-    plan = t._snapshot_paths(t.committed_version(), kind="data")
-    assert plan is not None
-    gen_path, paths = plan
+    plan = t._snapshot(t.committed_version())
+    assert plan.data is not None
+    gen_path, paths = plan.gen, plan.data
     assert gen_path == new_gen
     assert all(p.startswith(new_gen + os.sep) for p in paths)
 
@@ -178,22 +175,8 @@ def test_legacy_table_falls_back_to_listing(spark, root):
     t = VersionedLogTable(spark, root, gc_grace_sec=0.0)
     t.append(mkbatch(spark, "/a", [10, 20]))
     shutil.rmtree(os.path.join(t.meta_path, "manifest"))  # simulate legacy
-    assert t._snapshot_paths(t.committed_version(), kind="data") is None
+    assert t._snapshot(t.committed_version()).data is None
     assert _rows(t.read()) == [("/a", 10), ("/a", 20)]
-
-
-def test_both_plan_matches_single_kind_plans(spark, root):
-    """kind='both' (read()'s one-walk planner) returns exactly the two
-    single-kind plans."""
-    t = _build(spark, root)
-    w = t.committed_version()
-    both = t._snapshot_paths(w, kind="both")
-    assert both is not None
-    gen, data, tombs = both
-    assert (gen, data) == t._snapshot_paths(w, kind="data")
-    assert (gen, tombs) == t._snapshot_paths(w, kind="tombstones")
-    dplan, tplan = t._plan_both(w)
-    assert dplan == (gen, data) and tplan == (gen, tombs)
 
 
 def test_read_plans_with_one_manifest_walk(spark, root):
@@ -201,6 +184,12 @@ def test_read_plans_with_one_manifest_walk(spark, root):
     manifest object is fetched exactly once and the listing runs once —
     at 100 TB the plan cost is O(versions), not 2x O(versions)."""
     t = _build(spark, root)
+    # the one walk yields both plans: every data and tombstone file
+    snap = t._snapshot(t.committed_version())
+    assert {os.path.relpath(p, t.root) for p in snap.data + snap.tombs} == set(
+        t._committed_paths(t.committed_version())
+    )
+    assert snap.tombs and all(p.startswith(snap.gen + os.sep) for p in snap.data)
     gets, lists = [], []
     real = t._backend
 

@@ -9,6 +9,7 @@ import tempfile
 import pytest
 from unittest.mock import MagicMock
 
+from dp3_spark.streaming import manifest
 from dp3_spark.streaming.lifecycle import VersionedLogTable
 
 
@@ -50,8 +51,14 @@ def test_manifest_roundtrip_and_committed_union(t):
 
 
 def test_manifest_version_parsing(t):
-    assert t._manifest_version("v000000000042.list") == 42
-    assert t._manifest_version("base_000000000007.list") is None
+    assert manifest.parse_name("v000000000042.list") == (False, 42)
+    assert manifest.parse_name("base_000000000007.list") == (True, 7)
+    assert manifest.parse_name("v000000000009.list.tmp") is None
+    assert manifest.parse_name("README") is None
+    # two-field (pre-size) lines still read, with bytes unknown
+    assert manifest.parse_lines(b"data/a.parquet\t3\n") == {"data/a.parquet": (3, -1)}
+    entries = {"data/a.parquet": (3, 120), "tombstones/t.parquet": (-1, 9)}
+    assert manifest.parse_lines(manifest.format_lines(entries)) == entries
 
 
 def test_quarantine_defers_then_sweeps(t):

@@ -622,6 +622,26 @@ def test_minhash_incremental_matches_full_run(spark, tmp_path, force_shuffle_ver
     assert got_sh == want
 
 
+def test_minhash_incremental_replayed_batch_pairs_distinct(spark, force_shuffle_verify):
+    """An at-least-once replay re-submits a batch whose id is already in
+    the index: both verify transports return each pair once."""
+    text = "the quick brown fox jumps over the lazy dog once again"
+    schema = "doc_id long, text string"
+    index_docs = spark.createDataFrame([(1, text), (3, text + " today")], schema)
+    replay = spark.createDataFrame([(3, text + " today")], schema)
+    kw = dict(n=3, num_hashes=64, bands=8, threshold=0.6)
+    index_sigs = DD.minhash_signatures(index_docs, "doc_id", "text", n=3, num_hashes=64)
+
+    def pairs():
+        inc = DD.minhash_lsh_pairs_incremental(replay, index_sigs, "doc_id", "text", **kw)
+        return sorted((r["id_a"], r["id_b"], round(r["jaccard"], 12)) for r in inc.collect())
+
+    default = pairs()
+    force_shuffle_verify()
+    assert pairs() == default
+    assert [(a, b) for a, b, _ in default] == [(1, 3)]
+
+
 def test_minhash_incremental_big_index_auto_slices(spark, tmp_path, monkeypatch):
     """Probe batch vs BIG index (simulated by shrinking the endpoint-slice
     threshold and the broadcast budget): the verify transport must be

@@ -67,9 +67,7 @@ def test_listing_fallback_skips_vanished_committed_file(spark, root, monkeypatch
     t.append(mkbatch(spark, [100, 110]))
     t.append(mkbatch(spark, [200, 210], topic="/b"))
     monkeypatch.setattr(
-        VersionedLogTable,
-        "_snapshot_paths",
-        lambda self, w, *, kind, prune_to=None: None,
+        VersionedLogTable, "_walk", lambda self, lo, hi, *, bases: None
     )
     df = t.read()  # listing happens here
     os.remove(_one_committed_file(t))

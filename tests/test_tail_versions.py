@@ -256,3 +256,82 @@ def test_service_tail_survives_compact_race(spark, root, monkeypatch):
         assert sorted(x["log_time"] for x in lines[1:]) == [100, 110, 200]
     finally:
         s.stop()
+
+
+def _count_backend_calls(monkeypatch, backend):
+    """Record every list_names / get the table's metadata backend serves."""
+    calls = {"list_names": [], "get": []}
+    cls = type(backend)
+    for meth in calls:
+        orig = getattr(cls, meth)
+
+        def wrapped(self, *a, _orig=orig, _log=calls[meth], **k):
+            _log.append(a[0] if a else k.get("name", k.get("prefix", "")))
+            return _orig(self, *a, **k)
+
+        monkeypatch.setattr(cls, meth, wrapped)
+    return calls
+
+
+def test_tail_poll_metadata_traffic(spark, root, monkeypatch):
+    """One /tail poll (counts + range read) pays one name listing per
+    call and a get per delivered manifest plus a constant few pointer
+    reads — not a re-resolution of the generation per manifest."""
+    t = VersionedLogTable(spark, root, gc_grace_sec=0.0)
+    for k in range(8):
+        t.append(mkbatch(spark, [100 * k], topic=f"/t{k % 3}"))
+    hi = t.committed_version()
+
+    for call in (
+        lambda: t.tail_version_counts(1),
+        lambda: t.read_manifest_range(1, hi),
+    ):
+        with monkeypatch.context() as m:
+            calls = _count_backend_calls(m, t._backend)
+            got = call()
+        manifests = [n for n in calls["get"] if n.endswith(".list")]
+        assert got is not None
+        assert len(manifests) == hi - 1  # the 7 delivered versions only
+        assert len(calls["list_names"]) == 1
+        assert len(calls["get"]) <= len(manifests) + 3
+
+
+def test_read_manifest_range_survives_generation_flip(spark, root, monkeypatch):
+    """A compact that flips the generation at any point of the range read
+    yields either None (the route falls back to the scan) or exactly the
+    promised rows — never a plan whose files and basePath disagree."""
+    t = VersionedLogTable(spark, root, gc_grace_sec=3600.0)
+    for k in range(3):
+        t.append(mkbatch(spark, [100 * k, 100 * k + 10], topic=f"/t{k}"))
+    promised = sum(n for _, n in t.tail_version_counts(0))
+    old_gen = t._resolve_data_path()
+    t.compact()  # grace window: the old generation stays on disk
+    hi = t.committed_version()
+    orig = VersionedLogTable._resolve_data_path
+
+    for flip_after in range(1, 12):
+        calls = {"n": 0}
+
+        def flipping(self, _after=flip_after):
+            calls["n"] += 1
+            return old_gen if calls["n"] <= _after else orig(self)
+
+        with monkeypatch.context() as m:
+            m.setattr(VersionedLogTable, "_resolve_data_path", flipping)
+            df = t.read_manifest_range(0, hi)
+            got = None if df is None else df.count()
+        assert got in (None, promised), flip_after
+
+
+def test_read_manifest_range_is_strict(spark, root):
+    """A committed file a delivered manifest names vanishes between the
+    range read's plan and its scan: the tail body must fail, not silently
+    shrink while the cursor advances past the lost rows."""
+    t = VersionedLogTable(spark, root, gc_grace_sec=0.0)
+    t.append(mkbatch(spark, [100, 110]))
+    v2 = t.append(mkbatch(spark, [200, 210], topic="/b"))
+    df = t.read_manifest_range(0, v2)
+    gone = next(iter(t._manifests()[f"v{v2:012d}.list"]))
+    os.remove(os.path.join(t.root, gone))
+    with pytest.raises(Exception, match="(?i)file|exist"):
+        df.count()

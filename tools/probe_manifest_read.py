@@ -1,14 +1,14 @@
 """Query-path read planning: manifest plan vs directory listing (round 10).
 
 `read()` on a manifest-bearing table plans its scan from the write
-manifests (`_snapshot_paths(kind='both')`): one manifest walk yields the
+manifests (`_snapshot`): one manifest walk (`_walk`) yields the
 explicit committed data + tombstone file lists, replacing the recursive
 directory listing `spark.read.parquet(dir)` pays per query.  This probe
 times both paths — plan construction (`t.read()`, the driver-side cost a
 100 TB deployment pays per query against an object-store LIST) and the
 full materialization (`.count()`) — against tables with 1x / 10x / 100x
 versions-and-files.  The listing path is forced by monkeypatching
-`_snapshot_paths` to decline (exactly the legacy-table fallback).
+`_walk` to decline (exactly the legacy-table fallback).
 
 Expectation: plan construction stays flat-ish and listing-free on the
 manifest path (small-object reads, O(versions)); results are identical
@@ -55,7 +55,7 @@ def timed(fn, reps=3):
 def main():
     spark = get_spark("manifest-read-probe")
     out = {}
-    no_plan = lambda self, w, *, kind, prune_to=None: None  # noqa: E731
+    no_plan = lambda self, lo, hi, *, bases: None  # noqa: E731
     for label, n_appends in [("1x", 3), ("10x", 30), ("100x", 300)]:
         root = os.path.join(ROOT, label)
         shutil.rmtree(root, ignore_errors=True)
@@ -70,13 +70,13 @@ def main():
         man_plan, _ = timed(lambda: t.read())
         man_cnt, man_n = timed(lambda: t.read().count())
 
-        orig = VersionedLogTable._snapshot_paths
-        VersionedLogTable._snapshot_paths = no_plan
+        orig = VersionedLogTable._walk
+        VersionedLogTable._walk = no_plan
         try:
             lst_plan, _ = timed(lambda: t.read())
             lst_cnt, lst_n = timed(lambda: t.read().count())
         finally:
-            VersionedLogTable._snapshot_paths = orig
+            VersionedLogTable._walk = orig
         assert man_n == lst_n, (man_n, lst_n)
 
         out[label] = {

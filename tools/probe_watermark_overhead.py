@@ -10,8 +10,8 @@ VersionedLogTable.
 
 Method: append scale_sf1 events in 8 version batches plus one tombstone
 (so read() exercises the full path), then alternate in ONE session:
-  A: _data(committed_only=True).count()   — watermark resolve + filter
-  B: _data(committed_only=False).count()  — the same scan, no filter
+  A: _data(_snapshot(committed)).count()  — watermark resolve + filter
+  B: spark.read.parquet(data dir).count()   — the table's files, no filter
 plus full read().count() for context.  Reports min/median of 5.
 """
 import json
@@ -51,10 +51,10 @@ t.delete_range(p0, "click", lo, lo + 60_000_000_000)
 a_times, b_times, r_times = [], [], []
 for rep in range(REPS):
     t0 = time.monotonic()
-    t._data(committed_only=True).count()
+    t._data(t._snapshot(t.committed_version())).count()
     a_times.append(time.monotonic() - t0)
     t0 = time.monotonic()
-    t._data(committed_only=False).count()
+    spark.read.parquet(t._resolve_data_path()).count()
     b_times.append(time.monotonic() - t0)
     t0 = time.monotonic()
     t.read().count()
