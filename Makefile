@@ -13,11 +13,15 @@ test:
 oracle-gate:
 	DP3_ORACLE_SF=/root/testdata/sf0.01 python -m pytest tests/test_oracle.py -q
 
-# the LSH-family rows of the gate sweep (every producer on the shared
-# band -> candidate -> verify core), at the same sf0.01
+# the LSH/ANN-family rows of the gate sweep, at the same sf0.01: every
+# pair producer on the shared band/bucket -> candidate -> verify core
+# (MinHash, hyperplane, k-means clusters) and every top-k search on the
+# shared rerank/_top_k core (LSH, IVF, brute cosine, kNN, PQ)
 LSH_ROWS = dedup_minhash_lsh or dedup_minhash_capped or dedup_incremental \
 	or dedup_clusters or dedup_keep_best or stream_corpus_dedup \
-	or decontam_fuzzy or sim_dup_pairs_lsh or sem_dedup
+	or decontam_fuzzy or sim_dup_pairs_lsh or sem_dedup \
+	or sim_lsh_topk or sim_lsh_recall or sim_ivf_topk or sim_ivf_recall \
+	or sim_cosine_topk or sim_knn_classify or sim_pq_topk or sim_pq_recall
 oracle-lsh:
 	PYTEST_ADDOPTS='-k "$(LSH_ROWS)"' $(MAKE) --no-print-directory oracle-gate
 

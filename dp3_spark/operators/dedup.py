@@ -295,10 +295,11 @@ def minhash_signatures(
 def _banded_frame(
     sigs: DataFrame, bands: int, rows: int, *, exact_vals: bool = False
 ) -> DataFrame:
-    """(id [, extra cols], band, band_key) — one row per (doc, band) via a
-    single explode; band key = xxhash64 of the band's minhash values (8-byte
-    join key; hashing can only merge buckets, and candidates are
-    exact-verified, so a collision can only add a true-positive pair).
+    """(id, band, band_key) — one row per (doc, band) via a single explode;
+    band key = xxhash64 of the band's minhash values (8-byte join key;
+    hashing can only merge buckets, and candidates are exact-verified, so
+    a collision can only add a true-positive pair).  This is also the
+    persisted `bands` layout of the streaming index.
 
     exact_vals=True adds `band_vals` (the band's raw minhash array): the
     capped-candidate rank must partition by the EXACT band tuple, not the
@@ -306,38 +307,38 @@ def _banded_frame(
     ranks and thus the capped set, diverging from any oracle that ranks by
     exact keys (collisions can then only ADD verified pairs, never change
     which pairs the cap keeps)."""
+
+    def band(bi: int) -> list:
+        return [F.col("mh").getItem(bi * rows + r) for r in range(rows)]
+
     band_structs = F.array(
         *[
             F.struct(
                 F.lit(bi).alias("band"),
-                F.xxhash64(
-                    *[F.col("mh").getItem(bi * rows + r) for r in range(rows)]
-                ).alias("band_key"),
-                *(
-                    [
-                        F.array(
-                            *[F.col("mh").getItem(bi * rows + r) for r in range(rows)]
-                        ).alias("band_vals")
-                    ]
-                    if exact_vals
-                    else []
-                ),
+                F.xxhash64(*band(bi)).alias("band_key"),
+                *([F.array(*band(bi)).alias("band_vals")] if exact_vals else []),
             )
             for bi in range(bands)
         ]
     )
-    extra = [c for c in sigs.columns if c not in ("id", "shingles", "card", "mh")]
-    val_cols = [F.col("bk.band_vals").alias("band_vals")] if exact_vals else []
     return (
         sigs.filter(F.col("mh").isNotNull())
-        .select("id", *extra, F.explode(band_structs).alias("bk"))
-        .select(
-            "id",
-            *extra,
-            F.col("bk.band").alias("band"),
-            F.col("bk.band_key").alias("band_key"),
-            *val_cols,
-        )
+        .select("id", F.explode(band_structs).alias("bk"))
+        .select("id", "bk.*")
+    )
+
+
+def _bucket_pairs(left: DataFrame, right: DataFrame, keys: list[str]) -> DataFrame:
+    """(id_a, id_b), id_a < id_b, for every left/right row pair sharing all
+    `keys` — the bucket join behind every banded or clustered candidate
+    generator (MinHash bands, hyperplane bands, k-means clusters).  A pair
+    sharing several buckets appears once per bucket; verify_pairs dedups.
+    A broadcast hint on either side survives the aliasing."""
+    return (
+        left.alias("x")
+        .join(right.alias("y"), keys)
+        .filter(F.col("x.id") < F.col("y.id"))
+        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
     )
 
 
@@ -591,12 +592,7 @@ def _minhash_sig_pairs(
     else:
         banded = _banded_frame(sigs, bands, rows)
         lhs = banded
-    cand = (
-        lhs.alias("x")
-        .join(banded.alias("y"), ["band", "band_key"])
-        .filter(F.col("x.id") < F.col("y.id"))
-        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-    )
+    cand = _bucket_pairs(lhs, banded, ["band", "band_key"])
     return verify_pairs(
         cand, sigs.select("id", "shingles"), n_rows, _jaccard_kernel, "jaccard", threshold
     )
@@ -627,11 +623,9 @@ def _probe_candidates(
     b_idx = (
         index_bands.select("id", "band", "band_key")
         if index_bands is not None
-        else _banded_frame(
-            index_sigs.select("id", "shingles", "card", "mh"), bands, rows
-        ).select("id", "band", "band_key")
+        else _banded_frame(index_sigs, bands, rows)
     )
-    b_new = _banded_frame(sigs_new, bands, rows).select("id", "band", "band_key")
+    b_new = _banded_frame(sigs_new, bands, rows)
     vs_index = (
         b_idx.join(hint(b_new.withColumnRenamed("id", "nid")), ["band", "band_key"])
         # an id present on BOTH sides (at-least-once reprocessing after
@@ -642,12 +636,7 @@ def _probe_candidates(
             F.greatest("id", "nid").alias("id_b"),
         )
     )
-    in_batch = (
-        b_new.alias("x")
-        .join(hint(b_new.alias("y")), ["band", "band_key"])
-        .filter(F.col("x.id") < F.col("y.id"))
-        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-    )
+    in_batch = _bucket_pairs(b_new, hint(b_new), ["band", "band_key"])
     return vs_index.unionByName(in_batch)
 
 

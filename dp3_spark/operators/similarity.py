@@ -6,10 +6,16 @@
   corpus with a per-query top-k — no shuffle of the corpus itself.
 - `lsh_topk`: random-hyperplane LSH bucketed search — the 100 TB path.
   Deterministic pseudo-hyperplanes derived from the polynomial-hash LCG, so
-  recall tests are reproducible.  Buckets bound the candidate set; the
-  fallback to exact rerank happens only within matching buckets.
+  recall tests are reproducible.  Corpus and queries are banded by one
+  numpy pass (`_banded_signature`, bit-identical to the SQL reference
+  `hyperplane_lsh_signature`); buckets bound the candidate set and the
+  exact rerank runs only on it.
+- `ivf_topk`: k-means inverted lists; candidates are the query's `nprobe`
+  nearest lists.  LSH and IVF share one exact cosine rerank
+  (`_cosine_rerank`), and every top-k here ranks through `_top_k`.
 - `embedding_dup_pairs`: all-pairs near-duplicate detection by cosine
   threshold via the same broadcast pattern (or bucketed at scale).
+  Banded and clustered pair mining share dedup's bucket join and verify.
 """
 
 from __future__ import annotations
@@ -66,6 +72,64 @@ def _with_norm(df: DataFrame, vec_col: str) -> DataFrame:
     return df.withColumn("__norm__", F.expr(n_s))
 
 
+def _cosine_sides(
+    corpus: DataFrame, queries: DataFrame, id_col: str, vec_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The two sides of a cosine score: corpus (neighbor_id, c_vec,
+    c_norm) and queries (query_id, q_vec, q_norm)."""
+    c = _with_norm(corpus, vec_col).select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("c_vec"),
+        F.col("__norm__").alias("c_norm"),
+    )
+    q = _with_norm(queries, vec_col).select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("q_vec"),
+        F.col("__norm__").alias("q_norm"),
+    )
+    return c, q
+
+
+def _cosine(pairs: DataFrame) -> DataFrame:
+    """Adds `cosine` to joined (q_vec, q_norm, c_vec, c_norm) rows — the
+    sequential-fold dot over the product of norms, null on a zero norm."""
+    dot_s, _ = VEC.dot("q_vec", "c_vec")
+    return pairs.withColumn(
+        "cosine", F.expr(dot_s) / F.nullif(F.col("q_norm") * F.col("c_norm"), F.lit(0.0))
+    )
+
+
+def _top_k(scored: DataFrame, score_col: str, k: int) -> DataFrame:
+    """(query_id, neighbor_id, score_col, rank): the k best neighbors per
+    query by (score desc, neighbor_id asc) — the one deterministic tie
+    rule of every top-k search here."""
+    w = Window.partitionBy("query_id").orderBy(F.col(score_col).desc(), F.col("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", score_col, "rank")
+    )
+
+
+def _cosine_rerank(
+    cand: DataFrame, corpus: DataFrame, queries: DataFrame, id_col: str, vec_col: str, k: int
+) -> DataFrame:
+    """Exact cosine top-k over (query_id, neighbor_id) candidates — the
+    rerank of every bucketed search (LSH bands, IVF lists).  Candidates
+    are deduped first (a neighbor sharing several buckets with a query is
+    scored once); the corpus side joins by id, the query side is
+    broadcast, so only candidate ids ride the shuffle, never vectors."""
+    c, q = _cosine_sides(corpus, queries, id_col, vec_col)
+    cand = (
+        cand.distinct()
+        # AQE coalesces the byte-small candidate shuffle to 1-2 partitions,
+        # but the rerank does a per-candidate cosine fold — re-spread it
+        .repartition(2 * corpus.sparkSession.sparkContext.defaultParallelism)
+    )
+    scored = _cosine(cand.join(c, "neighbor_id").join(F.broadcast(q), "query_id"))
+    return _top_k(scored, "cosine", k)
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -78,27 +142,9 @@ def cosine_topk(
 
     Output: (query_id, neighbor_id, cosine, rank), rank 1..k, excluding
     self-matches.  Ties break by neighbor_id ascending (deterministic)."""
-    dot_s, _ = VEC.dot("q_vec", "c_vec")
-    c = _with_norm(corpus, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.col("__norm__").alias("c_norm"),
-    )
-    q = _with_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.col("__norm__").alias("q_norm"),
-    )
-    scored = (
-        c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", F.expr(dot_s) / F.nullif(F.col("q_norm") * F.col("c_norm"), F.lit(0.0)))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    c, q = _cosine_sides(corpus, queries, id_col, vec_col)
+    scored = _cosine(c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")))
+    return _top_k(scored, "cosine", k)
 
 
 def knn_classify(
@@ -154,7 +200,11 @@ def knn_classify(
 
 
 def hyperplane_lsh_signature(df: DataFrame, vec_col: str, *, planes: int = 16) -> DataFrame:
-    """Sign-bit signature under `planes` deterministic pseudo-hyperplanes.
+    """Sign-bit signature under `planes` deterministic pseudo-hyperplanes
+    (bit p = projection on plane p > 0; a null vector signs as 0) — the
+    Spark-SQL reference definition, mirrored in DuckDB by the registry
+    oracles.  The search paths band with `_banded_signature`, whose keys
+    equal this signature's bit slices (pinned in tests).
 
     Plane p's component for dimension i is derived from an LCG of (p, i),
     mapped to [-1, 1) — computed inline with built-ins, no UDF: the plane
@@ -186,52 +236,19 @@ def lsh_topk(
     """Approximate top-k: candidates = corpus vectors sharing at least one
     LSH band with the query, exact cosine rerank within candidates.
 
-    At 100 TB the banded join replaces the full-corpus broadcast loop: corpus
-    signatures are computed once (and can be persisted), the join is
-    hash-partitioned on (band, key)."""
-    rows = planes // bands
-    mask = (1 << rows) - 1
-
-    def banded(df: DataFrame, role: str) -> DataFrame:
-        parts = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    ((F.col("lsh_sig") / F.lit(1 << (b * rows))).cast("long") % F.lit(mask + 1)).alias("key"),
-                )
-                for b in range(bands)
-            ]
-        )
-        return (
-            df.select(
-                F.col(id_col).alias(f"{role}_id"),
-                F.col(vec_col).alias(f"{role}_vec"),
-                F.explode(parts).alias("bk"),
-            )
-            .select(f"{role}_id", f"{role}_vec", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-        )
-
-    c = banded(hyperplane_lsh_signature(corpus, vec_col, planes=planes), "c")
-    q = banded(hyperplane_lsh_signature(queries, vec_col, planes=planes), "q")
+    At 100 TB the banded join replaces the full-corpus broadcast loop:
+    both sides are banded by one numpy pass (corpus signatures can be
+    persisted), the join is hash-partitioned on (band, band_key) and
+    carries ids only; vectors enter at the rerank (_cosine_rerank)."""
+    c = _banded_signature(corpus, id_col, vec_col, planes=planes, bands=bands)
+    q = _banded_signature(queries, id_col, vec_col, planes=planes, bands=bands)
     cand = (
-        c.join(q, ["band", "key"])
-        .filter(F.col("q_id") != F.col("c_id"))
-        .select("q_id", "c_id", "q_vec", "c_vec")
-        .distinct()
-        # keep the per-candidate cosine fold spread (see
-        # embedding_dup_pairs_lsh: AQE coalesces byte-small shuffles)
-        .repartition(2 * corpus.sparkSession.sparkContext.defaultParallelism)
+        q.withColumnRenamed("id", "query_id")
+        .join(c.withColumnRenamed("id", "neighbor_id"), ["band", "band_key"])
+        .filter(F.col("query_id") != F.col("neighbor_id"))
+        .select("query_id", "neighbor_id")
     )
-    dot_s, _ = VEC.dot("q_vec", "c_vec")
-    nq_s, _ = VEC.norm("q_vec")
-    nc_s, _ = VEC.norm("c_vec")
-    scored = cand.withColumn("cosine", F.expr(dot_s) / F.nullif(F.expr(nq_s) * F.expr(nc_s), F.lit(0.0)))
-    w = Window.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(F.col("q_id").alias("query_id"), F.col("c_id").alias("neighbor_id"), "cosine", "rank")
-    )
+    return _cosine_rerank(cand, corpus, queries, id_col, vec_col, k)
 
 
 def _np_plane_weights(planes: int, dim: int):
@@ -268,52 +285,17 @@ def _np_proj_bits(V, W):
     return acc > 0
 
 
-def _np_sig_batch(V, W):
-    """Packed int64 signatures — requires planes <= 63 (the oracle-locked
-    geometries); wider geometries use per-band keys (_np_band_keys)."""
-    import numpy as np
-
-    planes = W.shape[0]
-    bits = np.int64(1) << np.arange(planes, dtype=np.int64)
-    return (_np_proj_bits(V, W) * bits).sum(axis=1, dtype=np.int64)
-
-
-def np_lsh_signatures(df: DataFrame, id_col: str, vec_col: str, *, planes: int = 16) -> DataFrame:
-    """(id, lsh_sig) via one Arrow-batched numpy pass — value-identical to
-    hyperplane_lsh_signature (pinned in tests) but a matrix op per batch
-    instead of `planes` interpreted SQL folds per vector (~100×)."""
-    import numpy as np
-    import pandas as pd
-
-    def gen(batches):
-        cache: dict[int, object] = {}
-        for pdf in batches:
-            ids = pdf[id_col].values
-            vecs = pdf[vec_col].values
-            dims = np.array([len(v) for v in vecs])
-            sig = np.zeros(len(pdf), dtype=np.int64)
-            for d in np.unique(dims):
-                m = dims == d
-                W = cache.get(int(d))
-                if W is None:
-                    W = cache[int(d)] = _np_plane_weights(planes, int(d))
-                V = np.stack([np.asarray(v, dtype=np.float32) for v, k in zip(vecs, m) if k])
-                sig[m] = _np_sig_batch(V, W)
-            yield pd.DataFrame({"id": ids, "lsh_sig": sig})
-
-    return df.select(F.col(id_col).alias(id_col), F.col(vec_col)).mapInPandas(
-        gen, "id long, lsh_sig long"
-    )
-
-
 def _banded_signature(df: DataFrame, id_col: str, vec_col: str, *, planes: int, bands: int) -> DataFrame:
-    """(id, band, key) rows: one per document per LSH band.
+    """(id, band, band_key) rows: one per document per LSH band, from one
+    Arrow-batched numpy pass — a matrix op per batch instead of `planes`
+    interpreted SQL folds per vector.
 
     Band keys are packed per band inside the numpy kernel (rows <= 63
     bits each), so total planes is unbounded — required since
     lsh_geometry grows planes with corpus size (e.g. 90 planes at 20k
-    vectors).  For planes <= 63 the keys are bit-identical to slicing the
-    packed single-long signature (pinned in tests)."""
+    vectors).  For planes <= 63 the keys are bit-identical to slicing
+    hyperplane_lsh_signature (pinned in tests); like it, a null vector
+    signs as 0, so its key is 0 in every band."""
     import numpy as np
     import pandas as pd
 
@@ -323,29 +305,28 @@ def _banded_signature(df: DataFrame, id_col: str, vec_col: str, *, planes: int, 
         cache: dict[int, object] = {}
         key_w = np.int64(1) << np.arange(rows, dtype=np.int64)
         for pdf in batches:
-            ids = pdf["id"].values
             vecs = pdf["vec"].values
-            dims = np.array([len(v) for v in vecs])
+            dims = np.array([-1 if v is None else len(v) for v in vecs])
             keys = np.zeros((len(pdf), bands), dtype=np.int64)
-            for d in np.unique(dims):
+            for d in np.unique(dims[dims >= 0]):
                 m = dims == d
                 W = cache.get(int(d))
                 if W is None:
                     W = cache[int(d)] = _np_plane_weights(planes, int(d))
                 V = np.stack(
-                    [np.asarray(v, dtype=np.float32) for v, k in zip(vecs, m) if k]
+                    [np.asarray(v, dtype=np.float32) for v in vecs[m]]
                 )
                 bits = _np_proj_bits(V, W)  # (n, planes)
                 for b in range(bands):
                     keys[m, b] = (
                         bits[:, b * rows : (b + 1) * rows] * key_w
                     ).sum(axis=1, dtype=np.int64)
-            yield pd.DataFrame({"id": ids, "keys": list(keys)})
+            yield pd.DataFrame({"id": pdf["id"].values, "keys": list(keys)})
 
     sig = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")).mapInPandas(
         gen, "id long, keys array<long>"
     )
-    return sig.select("id", F.posexplode("keys").alias("band", "key"))
+    return sig.select("id", F.posexplode("keys").alias("band", "band_key"))
 
 
 def _np_cosine_batch(A, B, thr):
@@ -453,15 +434,10 @@ def embedding_dup_pairs_lsh(
         bands = bands if bands is not None else auto_bands
     # materialize signatures once: the self-join would otherwise compute
     # the projection pass twice per vector (signature rows are
-    # (id, band, key) — bytes per vector)
+    # (id, band, band_key) — bytes per vector)
     banded = _banded_signature(df, id_col, vec_col, planes=planes, bands=bands).cache()
     banded.count()
-    cand = (
-        banded.alias("x")
-        .join(banded.alias("y"), ["band", "key"])
-        .filter(F.col("x.id") < F.col("y.id"))
-        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-    )
+    cand = DD._bucket_pairs(banded, banded, ["band", "band_key"])
     vecs = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     return DD.verify_pairs(cand, vecs, n_corpus, _np_cosine_batch, "cosine", threshold)
 
@@ -582,33 +558,12 @@ def ivf_topk(
     q_assign = assign_fn(queries, cents, id_col, vec_col, nprobe=nprobe).withColumnRenamed(
         "id", "query_id"
     )
-    base = _with_norm(corpus, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec"), F.col("__norm__").alias("c_norm")
-    )
-    qbase = _with_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"), F.col("__norm__").alias("q_norm")
-    )
     cand = (
         q_assign.join(c_assign, "cluster")
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id")
-        .distinct()
-        # keep the per-candidate cosine fold spread (see
-        # embedding_dup_pairs_lsh: AQE coalesces byte-small shuffles)
-        .repartition(2 * corpus.sparkSession.sparkContext.defaultParallelism)
     )
-    dot_s, _ = VEC.dot("q_vec", "c_vec")
-    scored = (
-        cand.join(base, "neighbor_id")
-        .join(F.broadcast(qbase), "query_id")
-        .withColumn("cosine", F.expr(dot_s) / F.nullif(F.col("q_norm") * F.col("c_norm"), F.lit(0.0)))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _cosine_rerank(cand, corpus, queries, id_col, vec_col, k)
 
 
 def topk_recall(exact: DataFrame, approx: DataFrame, *, k: int) -> DataFrame:
@@ -642,15 +597,16 @@ def embedding_dup_pairs(
     vec_col: str = "embedding",
     threshold: float = 0.95,
     method: str = "auto",
-    planes: int = 24,
-    bands: int = 4,
+    planes: int | None = None,
+    bands: int | None = None,
 ) -> DataFrame:
     """All pairs (a < b) with cosine >= threshold.
 
     method='brute': exact O(n²) broadcast self-join — the oracle baseline,
     only sane below ~BRUTE_MAX_ROWS rows.
     method='lsh': banded candidates + exact cosine (see
-    embedding_dup_pairs_lsh) — the at-scale path, ~95% recall at 0.9.
+    embedding_dup_pairs_lsh) — the at-scale path, ~95% recall at 0.9;
+    planes/bands default to lsh_geometry(corpus rows) there.
     method='auto' (default): count the corpus (parquet footer metadata —
     no data scan) and pick."""
     if method == "auto":
@@ -767,12 +723,7 @@ def semantic_dedup(
     # and the final rejoin, and checkpoint blocks are released with the
     # DataFrame reference instead of pinning a CacheManager entry per call
     assigned = assigned.localCheckpoint(eager=True)
-    cand = (
-        assigned.alias("x")
-        .join(assigned.alias("y"), "cluster")
-        .filter(F.col("x.id") < F.col("y.id"))
-        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-    )
+    cand = DD._bucket_pairs(assigned, assigned, ["cluster"])
     pairs = DD.verify_pairs(
         cand, base, base.count(), _np_cosine_batch, "cosine", threshold
     )
@@ -816,12 +767,7 @@ def ip_topk(
     scored = c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id")).withColumn(
         "ip", F.expr(dot_s)
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("ip").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "ip", "rank")
-    )
+    return _top_k(scored, "ip", k)
 
 
 def pq_fit_codebooks(
@@ -1032,14 +978,7 @@ def pq_topk(
             .groupBy("query_id", "neighbor_id")
             .agg(F.sum("micro").alias("score_micro"))
         )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("score_micro").desc(), F.col("neighbor_id")
-        )
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "score_micro", "rank")
-        )
+        return _top_k(scored, "score_micro", k)
     # numpy ADC scan: distance tables from the collected query side (small
     # by contract — same broadcast-queries shape as cosine_topk)
     import numpy as np
@@ -1101,11 +1040,4 @@ def pq_topk(
         .select(F.col(id_col).alias(id_col), F.col(vec_col))
         .mapInPandas(gen, "query_id long, neighbor_id long, score_micro long")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score_micro").desc(), F.col("neighbor_id")
-    )
-    return (
-        partial.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "score_micro", "rank")
-    )
+    return _top_k(partial, "score_micro", k)

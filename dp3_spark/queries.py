@@ -3244,9 +3244,9 @@ def stream_corpus_dedup(spark, sf_dir):
             DD._spread_text(index_docs), "doc_id", "text", n=3, num_hashes=128
         ).write.mode("overwrite").parquet(os.path.join(seed, "sigs"))
         sigs = spark.read.parquet(os.path.join(seed, "sigs"))
-        DD._banded_frame(sigs, 16, 128 // 16).select(
-            "id", "band", "band_key"
-        ).write.mode("overwrite").parquet(os.path.join(seed, "bands"))
+        DD._banded_frame(sigs, 16, 128 // 16).write.mode("overwrite").parquet(
+            os.path.join(seed, "bands")
+        )
         index_docs.write.mode("overwrite").parquet(os.path.join(seed, "corpus"))
         batch_docs.write.mode("overwrite").parquet(os.path.join(seed, "incoming"))
         with open(marker, "w") as f:
@@ -5728,9 +5728,9 @@ def decontam_fuzzy(spark, sf_dir):
             DD._spread_text(train), "doc_id", "text", n=3, num_hashes=128
         ).write.mode("overwrite").parquet(os.path.join(root, "sigs"))
         sigs = spark.read.parquet(os.path.join(root, "sigs"))
-        DD._banded_frame(sigs, 16, 128 // 16).select(
-            "id", "band", "band_key"
-        ).write.mode("overwrite").parquet(os.path.join(root, "bands"))
+        DD._banded_frame(sigs, 16, 128 // 16).write.mode("overwrite").parquet(
+            os.path.join(root, "bands")
+        )
 
     seed = _derived_fixture(
         "dp3_decontam_sigs", "decontam-v2", sf_dir, "documents.parquet", build

@@ -94,9 +94,9 @@ class StreamingCorpusDedup:
         if index is None:
             return None
         rows = self.num_hashes // self.bands
-        DD._banded_frame(index, self.bands, rows).select(
-            "id", "band", "band_key"
-        ).write.mode("overwrite").parquet(self.bands_path)
+        DD._banded_frame(index, self.bands, rows).write.mode(
+            "overwrite"
+        ).parquet(self.bands_path)
         return self.spark.read.parquet(self.bands_path)
 
     def _index(self) -> DataFrame | None:
@@ -223,7 +223,7 @@ class StreamingCorpusDedup:
         # whose bands landed but sigs did not reaches the same decisions)
         kept_bands = DD._banded_frame(
             kept_sigs, self.bands, self.num_hashes // self.bands
-        ).select("id", "band", "band_key")
+        )
         if index_bands is not None:
             kept_bands = kept_bands.join(
                 index_bands.select("id"), "id", "left_anti"

@@ -201,6 +201,45 @@ def test_embedding_dup_pairs_auto_dispatch(spark):
         SIM.embedding_dup_pairs(emb, method="nope")
 
 
+def test_embedding_dup_pairs_passes_geometry_through(monkeypatch):
+    """method='lsh' leaves planes/bands to embedding_dup_pairs_lsh's
+    lsh_geometry (None) unless the caller pins them — a fixed default
+    geometry makes candidate pairs grow quadratically with corpus size."""
+    seen = []
+
+    def spy(df, **kw):
+        seen.append((kw["planes"], kw["bands"]))
+        return df
+
+    monkeypatch.setattr(SIM, "embedding_dup_pairs_lsh", spy)
+    SIM.embedding_dup_pairs(None, method="lsh")
+    SIM.embedding_dup_pairs(None, method="lsh", planes=48, bands=12)
+    assert seen == [(None, None), (48, 12)]
+
+
+def test_lsh_paths_tolerate_null_embeddings(spark):
+    """A null vector signs as 0 (key 0 in every band), as the SQL
+    reference does: LSH pair mining keeps working and matches brute, and
+    lsh_topk keeps its rows (here equal to the exact cosine_topk's)."""
+    emb = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.99, 0.01]), (3, None), (4, [0.0, 1.0])],
+        "vec_id long, embedding array<float>",
+    )
+
+    def pairs(df):
+        return sorted((r["id_a"], r["id_b"], r["cosine"]) for r in df.collect())
+
+    lsh = pairs(SIM.embedding_dup_pairs_lsh(emb, threshold=0.9))
+    assert lsh == pairs(SIM.embedding_dup_pairs(emb, threshold=0.9, method="brute"))
+    assert [(a, b) for a, b, _ in lsh] == [(1, 2)]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    got = rows(SIM.lsh_topk(emb, emb, k=3, planes=16, bands=8))
+    assert got == rows(SIM.cosine_topk(emb, emb, k=3))
+
+
 def test_simhash_identical_for_dups(docs):
     sig = {r["id"]: r["simhash"] for r in DD.simhash(docs, "doc_id", "text", bits=24).collect()}
     assert sig[0] == sig[1] == sig[4]
@@ -250,25 +289,35 @@ def test_cosine_topk_exact(spark):
     assert ranked == [(1, 1), (2, 2)]
 
 
-def test_np_lsh_signatures_bit_parity(spark):
-    """The numpy signature path must be BIT-identical to the SQL fold: it
+def test_banded_signature_bit_parity(spark):
+    """_banded_signature's numpy band keys must be BIT-identical to the bit
+    slices of the SQL reference signature (hyperplane_lsh_signature): it
     accumulates projections sequentially across dims precisely so that
-    float non-associativity can't flip a sign bit vs the DuckDB oracle."""
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    sql_sig = SIM.hyperplane_lsh_signature(
-        emb.select(F.col("vec_id").alias("id"), F.col("embedding").alias("vec")),
-        "vec",
-        planes=24,
-    ).select("id", "lsh_sig")
-    np_sig = SIM.np_lsh_signatures(emb, "vec_id", "embedding", planes=24)
-    diff = (
-        sql_sig.alias("s")
-        .join(np_sig.alias("n"), "id")
-        .filter(F.col("s.lsh_sig") != F.col("n.lsh_sig"))
-        .count()
+    float non-associativity can't flip a sign bit vs the DuckDB oracle.
+    A null vector signs as 0 on both paths — key 0 in every band."""
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select(
+        F.col("vec_id").alias("id"), F.col("embedding").alias("vec")
     )
-    assert diff == 0
-    assert np_sig.count() == sql_sig.count()
+    null_id = 10**9
+    emb = emb.unionByName(spark.createDataFrame([(null_id, None)], emb.schema))
+    n = emb.count()
+    for planes, bands in ((48, 12), (24, 4), (16, 8)):
+        rows = planes // bands
+        mask = (1 << rows) - 1
+        sql_keys = {
+            (r["id"], b, (r["lsh_sig"] >> (b * rows)) & mask)
+            for r in SIM.hyperplane_lsh_signature(emb, "vec", planes=planes).collect()
+            for b in range(bands)
+        }
+        np_keys = [
+            tuple(r)
+            for r in SIM._banded_signature(
+                emb, "id", "vec", planes=planes, bands=bands
+            ).collect()
+        ]
+        assert len(np_keys) == len(sql_keys) == n * bands
+        assert set(np_keys) == sql_keys, (planes, bands)
+        assert {k for i, _, k in np_keys if i == null_id} == {0}
 
 
 def test_minhash_verify_modes_agree(spark, force_shuffle_verify):

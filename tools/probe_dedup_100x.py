@@ -90,9 +90,7 @@ def build_index(label: str, sf_dir: str) -> str:
     sigs = spark.read.parquet(f"{out}/sigs.parquet")
     DD._banded_frame(
         sigs, KW["bands"], KW["num_hashes"] // KW["bands"]
-    ).select("id", "band", "band_key").write.mode("overwrite").parquet(
-        f"{out}/bands.parquet"
-    )
+    ).write.mode("overwrite").parquet(f"{out}/bands.parquet")
     n = sigs.count()
     open(marker, "w").write(str(n))
     print(f"indexed {label}: {n} docs", flush=True)
