@@ -2,7 +2,7 @@
 # recorded count is copy-paste reproducible (r8 verdict ask on the
 # gate-scale oracle sweep's env var).
 
-.PHONY: test oracle-gate oracle-lsh oracle-lifecycle oracle-sf1 bench
+.PHONY: test oracle-gate oracle-lsh oracle-lifecycle oracle-layout oracle-sf1 bench
 
 # full suite (what "686 passed"-style ledger lines run)
 test:
@@ -31,6 +31,21 @@ LIFECYCLE_ROWS = lifecycle_delete_versions or lifecycle_tail_versions \
 	or ql_where_trigram_pruned
 oracle-lifecycle:
 	PYTEST_ADDOPTS='-k "$(LIFECYCLE_ROWS)"' $(MAKE) --no-print-directory oracle-gate
+
+# the rows of the gate sweep whose plans pass through a layout.py decision
+# (spread, fan_out, plan_bytes, drain_conf, and the sort_rows of the stats
+# routes), at the same sf0.01; `search_bm25` also selects
+# `search_bm25_indexed`
+LAYOUT_ROWS = dsir_sample or dsir_select or bpe_encode_counts \
+	or bpe_encode_tokens or bpe_train_merges or bpe_vocab_topk \
+	or text_lm_score or search_bm25 or dedup_minhash_lsh \
+	or dedup_minhash_capped or dedup_incremental or dedup_substring_flags \
+	or decontam_check or decontam_fuzzy or stream_corpus_dedup \
+	or stream_sessionize_gap or stream_interval_attrib or stream_ingest_dedup \
+	or sim_lsh_topk or sim_ivf_topk or sim_pq_topk or sim_pq_recall \
+	or stat_range_served or stat_quantiles_served or stat_sketch_daily
+oracle-layout:
+	PYTEST_ADDOPTS='-k "$(LAYOUT_ROWS)"' $(MAKE) --no-print-directory oracle-gate
 
 # the 10x-rows answer sweep (opt-in; ~35 min)
 oracle-sf1:

@@ -217,9 +217,10 @@ class DP3Engine:
         if producer is not None:
             ev = ev.filter(F.col("producer") == producer)
         sk = SK.sketch_summarize(ev, keys=["bucket_start"], field=field)
-        return SK.sketch_quantiles(
+        out = SK.sketch_quantiles(
             sk, keys=["bucket_start"], quantiles=quantiles, values=values
-        ).orderBy("bucket_start")
+        )
+        return STAT.sort_buckets(out, start_ns, end_ns, granularity_ns)
 
     def available_statistics(self) -> DataFrame:
         from dp3_spark.operators import stats as STAT

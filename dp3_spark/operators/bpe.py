@@ -51,6 +51,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dp3_spark.layout import spread
+
 # non-capturing split; lowercase first.  [a-z0-9]+ keeps the symbol
 # alphabet closed under ASCII so binary-collation tie-breaks are
 # engine-independent.
@@ -70,16 +72,9 @@ _SYMS_EXPR = "filter(transform(split(state, ','), x -> ltrim(x)), x -> x <> '')"
 def word_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(w, freq): the single corpus pass.  Map-combinable groupBy — the
     shuffle carries one row per distinct word per task, not per
-    occurrence."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    # spread only UNDER-PARALLEL inputs (a small fixture arrives as one
-    # split); a corpus already in many input splits must NOT be
-    # repartitioned — that would shuffle the full text bytes before the
-    # explode, doubling ingest I/O at the 100 TB design point
-    if df.rdd.getNumPartitions() < max(2, par // 2):
-        df = df.repartition(par)
+    occurrence.  A single-split input is spread first (layout.spread)."""
     return (
-        df.select(
+        spread(df).select(
             F.explode(F.split(F.lower(F.col(text_col)), WORD_SPLIT_RE)).alias("w")
         )
         .filter(F.col("w") != "")

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dp3_spark.functions import text as TXT
+from dp3_spark.layout import SPREAD_TEXT_BYTES, fan_out, spread
 
 POLY_MOD = TXT.POLY_MOD
 
@@ -50,23 +51,6 @@ VERIFY_BROADCAST_MAX_ROWS = 200_000
 # fan-out where the endpoint set is no longer a small fraction of the
 # index), the verify takes the whole table.
 ENDPOINT_SLICE_MAX_BROADCAST_IDS = 2_000_000
-
-
-def _spread_text(df: DataFrame) -> DataFrame:
-    """Conditional input spread before fat per-row text work (shingling /
-    window fingerprints): a small fixture parquet arrives as ONE split,
-    serializing the whole pass on one core, but an input already in many
-    splits must NOT be reshuffled — the previous unconditional
-    repartition(defaultParallelism) moved the full corpus text before
-    every signature pass, pure overhead at the 100 TB design point
-    (guide §2.3/§2.5).  dsir._spread with a 16 KiB/partition target:
-    shingling does 128 hash folds per shingle, so its per-byte work is
-    ~4x DSIR's md5 bigrams — the smaller target keeps the spread near
-    session parallelism at fixture scale (A/B'd: identical floors to the
-    old repartition(par) locally)."""
-    from dp3_spark.operators.dsir import _spread
-
-    return _spread(df, bytes_per_partition=16 << 10)
 
 
 def minhash_coeffs(num: int) -> list[tuple[int, int]]:
@@ -125,7 +109,7 @@ def ngram_jaccard_pairs(
     `max_shingle_freq` drops shingles appearing in more than that many docs
     (stopword-shingle fan-out cap for the 100 TB path)."""
     sh = (
-        shingle_hash_df(_spread_text(df), id_col, text_col, n)
+        shingle_hash_df(spread(df, SPREAD_TEXT_BYTES), id_col, text_col, n)
         .withColumn("card", F.size("shingles"))
     )
     exploded = sh.select("id", "card", F.explode("shingles").alias("h"))
@@ -429,9 +413,7 @@ def verify_pairs(
     # a pair once per row on the shuffle transport.
     if not broadcast:
         cand = cand.distinct()
-    # AQE coalesces the byte-small candidate shuffle to 1-2 partitions, but
-    # verify does per-pair numpy work — re-spread it across the cores
-    cand = cand.repartition(2 * cand.sparkSession.sparkContext.defaultParallelism)
+    cand = fan_out(cand)  # per-pair numpy work on a byte-small shuffle
 
     def scored(ia, ib, pa, pb):
         keep, score = kernel(pa, pb, thr)
@@ -535,14 +517,14 @@ def minhash_lsh_pairs(
         raise ValueError(f"unknown candidates mode {candidates!r}")
     # a small parquet reads as few partitions; the signature work is
     # CPU-bound per row, so spread under-parallel inputs first (see
-    # _spread_text — many-split inputs are left alone)
+    # layout.spread — many-split inputs are left alone)
     # cache + eager materialization: the signature pass is CPU-heavy but
     # byte-small, so AQE would coalesce any recomputation of it down to one
     # task, and lazy cache timing makes runtimes vary run-to-run.  At true
     # cluster scale this becomes a persisted signatures table, which is how
     # repeated dedup runs anyway.
     sigs = minhash_signatures(
-        _spread_text(df), id_col, text_col, n=n, num_hashes=num_hashes
+        spread(df, SPREAD_TEXT_BYTES), id_col, text_col, n=n, num_hashes=num_hashes
     ).cache()
     return _minhash_sig_pairs(
         sigs, sigs.count(), num_hashes=num_hashes, bands=bands,
@@ -694,7 +676,7 @@ def minhash_lsh_pairs_incremental(
         precomputed_sigs.select("id", "shingles", "card", "mh")
         if precomputed_sigs is not None
         else minhash_signatures(
-            _spread_text(new_df), id_col, text_col, n=n, num_hashes=num_hashes
+            spread(new_df, SPREAD_TEXT_BYTES), id_col, text_col, n=n, num_hashes=num_hashes
         ).localCheckpoint(eager=True)
     )
     # counted per side — a parquet-backed index answers count() from
@@ -850,7 +832,7 @@ def duplicated_window_flags(
     ubiquitous boilerplate; the per-doc rollup is map-combinable.
     Nothing corpus-sized is collected or broadcast."""
     toks_s, _ = TXT.tokens(text_col)
-    t = _spread_text(docs).select(
+    t = spread(docs, SPREAD_TEXT_BYTES).select(
         F.col(id_col).alias("id"), F.expr(toks_s).alias("toks")
     ).withColumn("nw", F.greatest(F.size("toks") - F.lit(w) + 1, F.lit(0)))
     wins = t.filter(F.col("nw") > 0).select(

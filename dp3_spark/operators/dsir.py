@@ -42,6 +42,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dp3_spark.layout import spread
 from dp3_spark.operators.sampling import _bucket_exprs
 
 # words -> uni+bigram array, Spark SQL (lowercased, [a-z0-9]+ tokens —
@@ -49,28 +50,6 @@ from dp3_spark.operators.sampling import _bucket_exprs
 _NGRAMS_SPARK = (
     "filter(split(lower({text}), '[^a-z0-9]+'), x -> x <> '')"
 )
-
-
-def _spread(df: DataFrame, *, bytes_per_partition: int = 64 << 10) -> DataFrame:
-    """Spread UNDER-PARALLEL inputs before the corpus-wide n-gram explode
-    (the bpe.word_counts idiom): a small fixture parquet arrives as ONE
-    split, serializing the explode + per-ngram md5 on one core.  A corpus
-    already in many input splits is left alone — repartitioning would
-    shuffle the full text bytes before the explode, doubling ingest I/O
-    at the 100 TB design point.  The target partition count derives from
-    the INPUT SIZE (bytes_per_partition of scan bytes each, capped at the
-    session's parallelism), never from the core count alone: measured at
-    sf0.1, 8 data-sized partitions run the DSIR explode 2.5x faster than
-    32 (per-task overhead swamps 60k-ngram tasks).  Callers with heavier
-    per-byte work (minhash shingling: 128 hash folds per shingle) pass a
-    smaller bytes_per_partition so their spread stays near the session
-    parallelism at fixture scale."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= max(2, par // 2):
-        return df
-    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    n = min(par, max(2, -(-size // bytes_per_partition)))
-    return df.repartition(n)
 
 
 def _ngram_explode(
@@ -106,7 +85,7 @@ def hashed_ngram_profile(
     map-combinable pass; at most `buckets` output rows."""
     b_s, _ = _bucket_exprs("ngram", "dsir", buckets)
     return (
-        _ngram_explode(_spread(df), text_col, None)
+        _ngram_explode(spread(df), text_col, None)
         .select(F.expr(b_s).alias("bucket"))
         .groupBy("bucket")
         .agg(F.count("*").alias("cnt"))
@@ -183,7 +162,7 @@ def dsir_log_weights(
     The bucket table broadcasts either way."""
     if (target is None) == (target_pred is None):
         raise ValueError("pass exactly one of target / target_pred")
-    docs = _spread(docs)
+    docs = spread(docs)
     if target_pred is not None:
         b_s1, _ = _bucket_exprs("ngram", "dsir", buckets)
         prof = (

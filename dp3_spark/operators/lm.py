@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dp3_spark.layout import spread
+
 
 def _trigrams(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, tri) — one row per char-trigram occurrence (docs shorter than
@@ -41,16 +43,9 @@ def _trigrams(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # evaluation.  slice() on the materialized array is O(3).
     # sequence(1, 0) is DESCENDING in Spark, not empty — docs under
     # 3 chars take the explicit empty branch.
-    # fat-per-row work: spread UNDER-PARALLEL inputs across the cluster
-    # first (a small parquet arrives as one input split; the explode
-    # multiplies each row ~300x).  dsir._spread is conditional: a corpus
-    # already in many splits is left alone — the previous unconditional
-    # repartition(defaultParallelism) shuffled the full corpus TEXT
-    # before each of the two trigram passes, doubling ingest I/O at the
-    # 100 TB design point for zero benefit.
-    from dp3_spark.operators.dsir import _spread
-
-    chars = _spread(df).select(
+    # fat-per-row work (the explode multiplies each row ~300x): spread
+    # under-parallel inputs first
+    chars = spread(df).select(
         F.col(id_col).alias("id"),
         F.expr(f"split({text_col}, '')").alias("__ch"),
     )

@@ -10,6 +10,7 @@ The union is free (each scan is pruned by partition/row-group stats); the
 final sort is the only wide stage and it is the output contract.  Which
 sort runs depends on what is known of its input (`sort_rows`):
 
+- a proven row bound of at most 1: none.
 - a proven row bound within ONE_TASK_SORT_MAX_ROWS and a Catalyst size
   estimate within ONE_TASK_SORT_MAX_BYTES: `repartition(1)` +
   `sortWithinPartitions` — one exchange into one task, no range-sampling
@@ -29,6 +30,8 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
+
+from dp3_spark.layout import plan_bytes
 
 ORDER_COLS = ("log_time", "__child__", "sequence")
 
@@ -71,14 +74,13 @@ def sort_rows(df: DataFrame, order: Sequence[Column | str], row_bound: int | Non
     rows (None = unknown).  Within both one-task ceilings (read at call
     time, so tests can move them) the rows sort in one task behind one
     exchange; otherwise a range-partitioned `orderBy`.  The size estimate
-    is the analyzed plan's (driver metadata, no job and no optimizer
-    pass); a leaf with no statistics reports Long.MaxValue, so it sorts
-    with orderBy."""
-    if (
-        row_bound is not None
-        and row_bound <= ONE_TASK_SORT_MAX_ROWS
-        and int(df._jdf.queryExecution().analyzed().stats().sizeInBytes())
-        <= ONE_TASK_SORT_MAX_BYTES
-    ):
-        return df.repartition(1).sortWithinPartitions(*order)
+    is `layout.plan_bytes`; a frame of unknown size sorts with orderBy.
+    A frame of at most one row is returned as is: AQE drops an orderBy
+    over one row at run time, but not the one-task sort's exchange."""
+    if row_bound is not None and row_bound <= 1:
+        return df
+    if row_bound is not None and row_bound <= ONE_TASK_SORT_MAX_ROWS:
+        size = plan_bytes(df)  # unknown size: orderBy
+        if size is not None and size <= ONE_TASK_SORT_MAX_BYTES:
+            return df.repartition(1).sortWithinPartitions(*order)
     return df.orderBy(*order)

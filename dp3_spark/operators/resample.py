@@ -13,8 +13,10 @@ Spark-first plan — NO join: the grid rows are unioned with the data and
 one running `last(value, ignorenulls)` window per partition resolves
 every tick, i.e. O(n log n) sort instead of a range join (Catalyst would
 otherwise plan point-in-interval as broadcast-nested-loop).  At 100 TB
-the window partitions by (producer, topic) — the same key the store is
-bucketed/sorted on (layout.py), so the sort is partial — and grid
+the window partitions by (producer, topic) — the key a versioned table
+writes its files by, sorted by (producer, log_time) within each
+(topic, producer_bucket) directory (streaming/lifecycle.py), so the sort
+is partial — and grid
 cardinality is partitions x ticks, independent of data volume.  A
 single-partition skew case takes the same time-slice treatment as asof
 (operators/asof.py _asof_time_sliced) if ever needed; the window here is

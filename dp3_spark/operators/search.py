@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dp3_spark.layout import plan_bytes
+
 # Okapi BM25 defaults (Robertson et al., TREC-3)
 K1 = 1.2
 B = 0.75
@@ -57,23 +59,20 @@ def tokens_duck(col: str) -> str:
 # lazy 3-subtree plan wins — its three corpus tokenizations (postings,
 # df-reuse, scalars) schedule CONCURRENTLY inside one action and the
 # corpus is too small for pass count to matter, while the single-pass
-# plan pays a fixed eager-checkpoint + observation round trip (~0.3 s).
-# The gate reads Catalyst's optimizedPlan stats (pure driver metadata,
-# the dsir._spread idiom) — the r10 `docs.count()` gate scheduled a
-# footer-served but REAL Spark job on every call, charging the fixed
-# cost it was meant to avoid to both regimes (r10 verdict, What's wrong
-# #2).  Threshold: the r10 crossover was 20k docs; at the fixture's
-# measured density (~119 B/doc of zstd parquet) that is ~2.4 MB of scan
-# bytes.  UNVERIFIED in bytes: no A/B of the byte gate is recorded
-# (PLANS.md has no r11 entry) — re-measuring it is open (ROADMAP item
-# 5).  At corpus scale pass count is the whole cost —
-# cores are saturated, so "concurrent" passes still triple CPU + I/O.
+# plan pays a fixed eager-checkpoint + observation round trip.  The gate
+# reads layout.plan_bytes (driver metadata, no job; a `docs.count()` gate
+# would schedule a real job on every call, charging the fixed cost it is
+# meant to avoid to both regimes).  Measured with the gate forced each way
+# (`bench.py --one search_bm25`, 4 cores, fresh JVM, min of 2 timed runs
+# after 2 warm-ups, median of 3 interleaved runs), one pass vs lazy:
+#   sf0.01  (65 KB estimate)  1.49 vs 0.97 s
+#   sf0.1  (595 KB)           1.53 vs 1.09 s
+#   sf1   (5.9 MB in 10 files, scale_gen)  1.65 vs 2.40 s
+# so the crossover lies between 0.6 and 5.9 MB, where this threshold (the
+# r10 20k-doc crossover at ~119 B/doc of zstd parquet) sits.  At corpus
+# scale pass count is the whole cost — cores are saturated, so
+# "concurrent" passes still triple CPU + I/O.
 BM25_ONE_PASS_MIN_BYTES = 2_400_000
-
-
-def _plan_bytes(df: DataFrame) -> int:
-    """Catalyst size estimate of a frame — no job, driver metadata only."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
 
 
 def bm25_topk(
@@ -125,7 +124,8 @@ def bm25_topk(
         .agg(F.count(F.lit(1)).alias("tf"))
     )
     scal = None
-    if _plan_bytes(docs) >= BM25_ONE_PASS_MIN_BYTES:
+    size = plan_bytes(docs)  # unknown size: one pass
+    if size is None or size >= BM25_ONE_PASS_MIN_BYTES:
         from pyspark.sql import Observation
 
         obs = Observation()

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dp3_spark.functions import vectors as VEC
+from dp3_spark.layout import fan_out
 from dp3_spark.operators import dedup as DD
 
 # 31-bit LCG + xorshift mixing: all intermediates < 2^62, safe under ANSI
@@ -120,12 +121,7 @@ def _cosine_rerank(
     scored once); the corpus side joins by id, the query side is
     broadcast, so only candidate ids ride the shuffle, never vectors."""
     c, q = _cosine_sides(corpus, queries, id_col, vec_col)
-    cand = (
-        cand.distinct()
-        # AQE coalesces the byte-small candidate shuffle to 1-2 partitions,
-        # but the rerank does a per-candidate cosine fold — re-spread it
-        .repartition(2 * corpus.sparkSession.sparkContext.defaultParallelism)
-    )
+    cand = fan_out(cand.distinct())  # per-candidate cosine fold
     scored = _cosine(cand.join(c, "neighbor_id").join(F.broadcast(q), "query_id"))
     return _top_k(scored, "cosine", k)
 
@@ -839,7 +835,14 @@ def _pq_encode_sql(
     not hash-aggregable, so it planned as Sort + SortAggregate twice
     around an Exchange of the n_vec*(m*k) crossJoin output (driver 2.68
     -> 6.09 s).  This shape keeps the plan KB-small AND the pipeline
-    map-only."""
+    map-only.
+
+    Single-split tradeoff: a corpus read as one split (one parquet file
+    under spark.sql.files.maxPartitionBytes) encodes in one task.
+    `layout.spread` ahead of the encode was measured on the benchmark's
+    curate corpus (300 vectors, 5 interleaved traced pairs, 4-core host):
+    +1 job, +2 tasks, twice the shuffle bytes, and a slower `pq` stage
+    (median 2.32 vs 2.26 s) — so the input is not spread."""
     m = len(books)
     d = len(books[0][0])
     spark = df.sparkSession

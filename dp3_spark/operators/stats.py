@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from dp3_spark.catalog import LogStore, time_range_filter
+from dp3_spark.operators.merge import sort_rows
 
 DEFAULT_GRANULARITY_NS = 60 * 1_000_000_000  # reference leaf width: 60 s
 
@@ -171,6 +172,19 @@ def aligned_granularity_ns(granularity_ns: int) -> int:
     return width
 
 
+def sort_buckets(
+    out: DataFrame, start_ns: int, end_ns: int, granularity_ns: int,
+    per_producer: bool = False,
+) -> DataFrame:
+    """A per-bucket result over [start, end) sorted by bucket_start
+    (merge.sort_rows).  Its row bound is the number of granularity
+    buckets the window touches (log times are non-negative), or unknown
+    with a row per producer and bucket (the producer count is not
+    known)."""
+    bound = (end_ns - 1) // granularity_ns - start_ns // granularity_ns + 1
+    return sort_rows(out, ["bucket_start"], None if per_producer else max(0, bound))
+
+
 def stat_range(
     store: LogStore,
     *,
@@ -218,7 +232,9 @@ def stat_range(
     out = df.groupBy(*keys).agg(*aggs)
     for f in numeric_fields:
         out = out.withColumn(f"{f}_mean", F.col(f"{f}_sum") / F.col(f"{f}_count"))
-    return out.orderBy("bucket_start")
+    return sort_buckets(
+        out, start_ns, end_ns, granularity_ns, group_by_producer and producer is None
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -566,7 +582,9 @@ class SummaryStore:
         out = df.groupBy(*keys).agg(*aggs)
         for f in numeric_fields:
             out = out.withColumn(f"{f}_mean", F.col(f"{f}_sum") / F.col(f"{f}_count"))
-        return out.orderBy("bucket_start")
+        return sort_buckets(
+            out, start_ns, end_ns, granularity_ns, group_by_producer and producer is None
+        )
 
     def can_serve_quantiles(
         self,
@@ -647,9 +665,10 @@ class SummaryStore:
             F.col(f"{field}_sketch_n").alias("sketch_n"),
         )
         merged = SK.sketch_merge(sk, keys=["bucket_start"])
-        return SK.sketch_quantiles(
+        out = SK.sketch_quantiles(
             merged, keys=["bucket_start"], quantiles=quantiles, values=values
-        ).orderBy("bucket_start")
+        )
+        return sort_buckets(out, start_ns, end_ns, granularity_ns)
 
     def summarize(
         self,
@@ -725,7 +744,7 @@ def quantiles_exact(
     out = df.groupBy(bucket).agg(*aggs)
     for i, q in enumerate(quantiles):
         out = out.withColumn(f"p{int(q * 100)}", F.col("qs").getItem(i))
-    return out.drop("qs").orderBy("bucket_start")
+    return sort_buckets(out.drop("qs"), start_ns, end_ns, granularity_ns)
 
 
 def quantiles_sketch(
@@ -753,7 +772,7 @@ def quantiles_sketch(
     )
     for i, q in enumerate(quantiles):
         out = out.withColumn(f"p{int(q * 100)}", F.col("qs").getItem(i))
-    return out.drop("qs").orderBy("bucket_start")
+    return sort_buckets(out.drop("qs"), start_ns, end_ns, granularity_ns)
 
 
 def available_statistics(store: LogStore) -> DataFrame:

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from dp3_spark.catalog import LogStore, events_log_store, register_views
 from dp3_spark.functions import text as TXT
 from dp3_spark.functions import vectors as VEC
+from dp3_spark.layout import SPREAD_TEXT_BYTES, drain_conf, spread
 from dp3_spark.operators import dedup as DD
 from dp3_spark.operators import lm as LM
 from dp3_spark.operators import similarity as SIM
@@ -1204,38 +1205,16 @@ def stream_sessionize_gap(spark, sf_dir):
     )
     sessions = sessionize_stream(ev, gap_ns=30 * 60 * NS, idle_timeout_ms=None)
     name = f"stream_sessions_{_uuid.uuid4().hex[:8]}"
-    # state partitions sized to stream volume (the stream_interval_attrib
-    # sizing): each applyInPandasWithState partition pays a state-store
-    # checkpoint plus a Python worker round per micro-batch, so a
-    # fixture-scale stream over 32 partitions is mostly that overhead;
-    # ~25k rows per state partition, capped at session parallelism for
-    # real volumes.  Per-key session emission is independent of how keys
-    # hash across partitions, so the drained row set cannot change.
-    n_rows = batch.count()
-    parts = min(
-        spark.sparkContext.defaultParallelism, max(4, n_rows // 25_000)
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    # the drain runs the sessionizer with NoTimeout (idle_timeout_ms=None),
-    # so sessions are emitted ONLY when a later data row closes a gap —
-    # the trailing no-data micro-batch services timeouts that cannot fire
-    # and emits nothing (the stream_interval_attrib measurement: ~0.5-1 s
-    # of per-partition state-store commits + replanning).  Scoped to this
-    # start(); a timeout-emitting caller keeps the default.
-    prev_nd = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
+    # per-key session emission is independent of how keys hash across
+    # state partitions, so the drained row set cannot change; with
+    # NoTimeout (idle_timeout_ms=None) sessions are emitted only when a
+    # later data row closes a gap, so the drain needs no no-data batch
+    with drain_conf(spark, batch.count()):
         q = (
             sessions.writeStream.format("memory")
             .queryName(name)
             .trigger(availableNow=True)
             .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nd
         )
     q.awaitTermination()
     return spark.table(name).select(
@@ -1318,37 +1297,14 @@ def stream_interval_attrib(spark, sf_dir):
         "inc_id", "act_ts", "value_c"
     )
     name = f"stream_attrib_{_uuid.uuid4().hex[:8]}"
-    # state partitions sized to stream volume: every stateful stage pays
-    # per-partition checkpoint/state-store overhead each micro-batch, so
-    # a fixture-scale stream over 32 partitions is mostly overhead
-    # (measured 5.8 -> 2.2 s at sf0.1); ~25k rows per state partition,
-    # capped at session parallelism for real volumes.  The conf is bound
-    # at stream start and restored right after.
-    n_rows = batch.count()
-    parts = min(
-        spark.sparkContext.defaultParallelism, max(4, n_rows // 25_000)
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     # an INNER stream-stream join emits every matched row in the data
-    # batch itself; the trailing no-data micro-batch only evicts state,
-    # which a drain that terminates right after never reads again —
-    # measured ~0.5-1.0 s of pure state-store/commit overhead per drain
-    # (half the steady-state batches).  Scoped to this query: timeout- or
-    # watermark-EMITTING drains (sessionize) need the no-data batch.
-    prev_nd = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
+    # batch itself, so the drain needs no no-data batch
+    with drain_conf(spark, batch.count()):
         q = (
             joined.writeStream.format("memory")
             .queryName(name)
             .trigger(availableNow=True)
             .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nd
         )
     q.awaitTermination()
     t_ns = F.unix_micros(F.col("act_ts")) * F.lit(1000)
@@ -1549,39 +1505,18 @@ def stream_ingest_dedup(spark, sf_dir):
     # stream_interval_attrib determinism construction)
     dd = deduped_stream(sdf, watermark_delay="3650 days").drop("event_time")
     out = os.path.join(run, "out")
-    # state partitions sized to stream volume (the stream_interval_attrib
-    # sizing): the dedup state store pays per-partition checkpoint +
-    # maintenance per micro-batch, so fixture-scale streams over 32
-    # partitions are mostly state-store overhead; ~25k rows per state
-    # partition, capped at session parallelism for real volumes.  The
-    # winner row per dedup key is byte-identical to every duplicate it
-    # shadows (the overlap re-ships whole rows), so partitioning cannot
-    # change the drained row set.
-    n_rows = reader.count()
-    parts = min(
-        spark.sparkContext.defaultParallelism, max(4, n_rows // 25_000)
-    )
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    # dropDuplicatesWithinWatermark emits each surviving row in the data
-    # batch that first sees it; the trailing no-data micro-batch only
-    # expires state a terminating drain never reads — suppress it (the
-    # stream_interval_attrib measurement: ~0.5-1 s of state-store/commit
-    # overhead per drain).  Scoped: restored right after start().
-    prev_nd = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
+    # the winner row per dedup key is byte-identical to every duplicate it
+    # shadows (the overlap re-ships whole rows), so state partitioning
+    # cannot change the drained row set; dropDuplicatesWithinWatermark
+    # emits each surviving row in the data batch that first sees it, so
+    # the drain needs no no-data batch
+    with drain_conf(spark, reader.count()):
         q = (
             dd.writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", os.path.join(run, f"ckpt_{_uuid.uuid4().hex[:8]}"))
             .trigger(availableNow=True)
             .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nd
         )
     q.awaitTermination()
     return spark.read.parquet(out).select(
@@ -3177,7 +3112,7 @@ def dedup_incremental(spark, sf_dir):
     # signature table (the deployment shape this query models); without it
     # the index plan re-shingles per consumer (banding, count, verify)
     index_sigs = DD.minhash_signatures(
-        DD._spread_text(index_docs), "doc_id", "text", n=3, num_hashes=128
+        spread(index_docs, SPREAD_TEXT_BYTES), "doc_id", "text", n=3, num_hashes=128
     ).localCheckpoint(eager=True)
     return DD.minhash_lsh_pairs_incremental(
         new_docs, index_sigs, "doc_id", "text",
@@ -3241,7 +3176,7 @@ def stream_corpus_dedup(spark, sf_dir):
         index_docs = docs.filter(F.col("doc_id") % 5 != 0)
         batch_docs = docs.filter(F.col("doc_id") % 5 == 0)
         DD.minhash_signatures(
-            DD._spread_text(index_docs), "doc_id", "text", n=3, num_hashes=128
+            spread(index_docs, SPREAD_TEXT_BYTES), "doc_id", "text", n=3, num_hashes=128
         ).write.mode("overwrite").parquet(os.path.join(seed, "sigs"))
         sigs = spark.read.parquet(os.path.join(seed, "sigs"))
         DD._banded_frame(sigs, 16, 128 // 16).write.mode("overwrite").parquet(
@@ -5725,7 +5660,7 @@ def decontam_fuzzy(spark, sf_dir):
 
     def build(root):
         DD.minhash_signatures(
-            DD._spread_text(train), "doc_id", "text", n=3, num_hashes=128
+            spread(train, SPREAD_TEXT_BYTES), "doc_id", "text", n=3, num_hashes=128
         ).write.mode("overwrite").parquet(os.path.join(root, "sigs"))
         sigs = spark.read.parquet(os.path.join(root, "sigs"))
         DD._banded_frame(sigs, 16, 128 // 16).write.mode("overwrite").parquet(

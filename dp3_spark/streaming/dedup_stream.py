@@ -46,6 +46,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dp3_spark.layout import SPREAD_TEXT_BYTES, spread
 from dp3_spark.operators import dedup as DD
 
 
@@ -136,7 +137,7 @@ class StreamingCorpusDedup:
     def process_batch(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
         n_in = batch_df.count()
         sigs_new = DD.minhash_signatures(
-            DD._spread_text(batch_df),
+            spread(batch_df, SPREAD_TEXT_BYTES),
             self.id_col,
             self.text_col,
             n=self.n,

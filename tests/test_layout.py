@@ -1,86 +1,103 @@
-"""Bucketed-layout plan guards (dp3_spark/layout.py): co-bucketed tables
-must join and aggregate WITHOUT a shuffle — the at-rest analog of the
-reference's per-(producer, topic) tree co-location (treemgr.go:29-33).
-These are plan-string assertions: the win is the absent Exchange."""
+"""Partition-count and size-estimate decisions (dp3_spark/layout.py) and the
+sorts that read them: `spread` sizes only single-split inputs, by bytes;
+`plan_bytes` reports an unknown size as None; `drain_conf` is scoped; a
+summary-served stat_range sorts its few buckets in one task."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from dp3_spark import layout
+from dp3_spark.catalog import LogStore
+from dp3_spark.operators import stats as ST
+
+MIN_NS = 60 * 10**9
+DRAIN_CONFS = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.noDataMicroBatches.enabled",
+)
 
 
-def plan_of(df) -> str:
+def physical_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
 @pytest.fixture()
-def log_frames(spark):
-    rows1 = [(f"p{i % 4}", "imu", 1000 + i, i, float(i)) for i in range(64)]
-    rows2 = [(f"p{i % 4}", "gps", 1000 + i, i, float(i * 2)) for i in range(64)]
-    ddl = "producer string, topic string, log_time long, sequence long, value double"
-    return (
-        spark.createDataFrame(rows1, ddl),
-        spark.createDataFrame(rows2, ddl),
+def one_split_parquet(spark, tmp_path):
+    path = str(tmp_path / "docs")
+    spark.range(2000).selectExpr("id", "repeat('x', 200) as text").coalesce(1).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert df.rdd.getNumPartitions() == 1
+    return df
+
+
+def test_spread_leaves_multi_split_frame_alone(spark):
+    par = spark.sparkContext.defaultParallelism
+    df = spark.range(0, 1000, numPartitions=max(2, par))
+    assert layout.spread(df) is df
+
+
+def test_spread_sizes_single_split_parquet_by_bytes(spark, one_split_parquet):
+    df = one_split_parquet
+    par = spark.sparkContext.defaultParallelism
+    size = layout.plan_bytes(df)
+    assert size > 0
+    # a target of a third of the input asks for 3 partitions
+    out = layout.spread(df, bytes_per_partition=-(-size // 3))
+    assert f"RoundRobinPartitioning({min(par, 3)})" in physical_plan(out)
+    # a target above the input size still spreads over at least 2
+    out = layout.spread(df, bytes_per_partition=size * 10)
+    assert f"RoundRobinPartitioning({min(par, 2)})" in physical_plan(out)
+
+
+def test_plan_bytes_unknown_on_created_frames(spark):
+    rows = [(1, "a"), (2, "b")]
+    listed = spark.createDataFrame(rows, "id long, t string")
+    from_rdd = spark.createDataFrame(spark.sparkContext.parallelize(rows), "id long, t string")
+    assert layout.plan_bytes(listed) is None
+    assert layout.plan_bytes(from_rdd) is None
+    # a single-split frame of unknown size is left alone
+    one = listed.coalesce(1)
+    assert layout.spread(one) is one
+
+
+def test_plan_bytes_is_an_int_on_parquet(one_split_parquet):
+    size = layout.plan_bytes(one_split_parquet)
+    assert isinstance(size, int) and 0 < size < 10 << 20
+
+
+def test_drain_conf_restores_both_confs_when_body_raises(spark):
+    before = {k: spark.conf.get(k) for k in DRAIN_CONFS}
+    with pytest.raises(RuntimeError, match="drain failed"):
+        with layout.drain_conf(spark, 200_000) as parts:
+            assert parts == min(spark.sparkContext.defaultParallelism, 8)
+            assert spark.conf.get(DRAIN_CONFS[0]) == str(parts)
+            assert spark.conf.get(DRAIN_CONFS[1]) == "false"
+            raise RuntimeError("drain failed")
+    assert {k: spark.conf.get(k) for k in DRAIN_CONFS} == before
+
+
+def test_summary_served_stat_range_has_no_range_sort(spark, tmp_path):
+    rows = [
+        (f"p{p}", "/a", i * MIN_NS + p, i, float(i % 7))
+        for p in range(2)
+        for i in range(240)
+    ]
+    df = spark.createDataFrame(
+        rows, "producer string, topic string, log_time long, sequence long, value double"
     )
-
-
-def test_cobucketed_join_has_no_exchange(spark, tmp_path, log_frames):
-    left, right = log_frames
-    tabs = layout.cobucket_log_tables(
-        spark,
-        {"bkt_imu": left, "bkt_gps": right},
-        buckets=4,
-        base_path=str(tmp_path),
+    store = LogStore(df, "producer", "topic", "log_time", "sequence", ("value",))
+    path = str(tmp_path / "summary")
+    ST.write_summary_store(
+        store, path, granularity_ns=MIN_NS, numeric_fields=["value"], text_fields=[]
     )
-    joined = (
-        tabs["bkt_imu"].alias("l")
-        .hint("merge")  # force SMJ so the assertion is about partitioning
-        .join(tabs["bkt_gps"].alias("r"), "producer")
-        .select("producer", F.col("l.value"), F.col("r.value"))
+    req = dict(
+        topic="/a", start_ns=0, end_ns=4 * 3600 * 10**9,
+        granularity_ns=3600 * 10**9, numeric_fields=["value"],
     )
-    plan = plan_of(joined)
-    assert "SortMergeJoin" in plan
-    assert "Exchange" not in plan, plan
-    # same data as a plain (unbucketed) join DOES shuffle — the layout is
-    # what removed it
-    plain = left.hint("merge").join(right, "producer")
-    assert "Exchange" in plan_of(plain)
-    for t in ("bkt_imu", "bkt_gps"):
-        spark.sql(f"drop table if exists {t}")
-
-
-def test_bucketed_aggregation_has_no_exchange(spark, tmp_path, log_frames):
-    left, _ = log_frames
-    tab = layout.write_bucketed(
-        left,
-        "bkt_agg",
-        buckets=4,
-        bucket_cols=("producer",),
-        sort_cols=("producer", "log_time"),
-        path=str(tmp_path / "bkt_agg"),
-    )
-    agg = tab.groupBy("producer").agg(F.count("*").alias("n"), F.max("log_time").alias("mx"))
-    plan = plan_of(agg)
-    assert "Exchange" not in plan, plan
-    assert [r["n"] for r in agg.orderBy("producer").collect()] == [16, 16, 16, 16]
-    spark.sql("drop table if exists bkt_agg")
-
-
-def test_bucketed_asof_join_no_fact_exchange(spark, tmp_path, log_frames):
-    """The producer-bucketed layout pre-satisfies dp3_asof_join's window
-    partitioning: the union of two co-bucketed topic scans feeds the asof
-    window chain with at most one lightweight repartition of the union —
-    crucially there is no per-side shuffle."""
-    from dp3_spark.operators.asof import dp3_asof_join
-
-    left, right = log_frames
-    tabs = layout.cobucket_log_tables(
-        spark,
-        {"bkt_l": left, "bkt_r": right},
-        buckets=4,
-        base_path=str(tmp_path),
-    )
-    out = dp3_asof_join(tabs["bkt_l"], tabs["bkt_r"], threshold_ns=10**12)
-    assert out.count() > 0
-    for t in ("bkt_l", "bkt_r"):
-        spark.sql(f"drop table if exists {t}")
+    served = ST.SummaryStore(spark, path).stat_range(**req)
+    assert "rangepartitioning" not in physical_plan(served).lower()
+    # the raw frame's size is unknown (createDataFrame), so it range-sorts;
+    # both come back in bucket order with the same rows
+    raw = ST.stat_range(store, **req)
+    assert "rangepartitioning" in physical_plan(raw).lower()
+    cols = sorted(raw.columns)
+    assert served.select(cols).collect() == raw.select(cols).collect()
