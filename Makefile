@@ -2,7 +2,7 @@
 # recorded count is copy-paste reproducible (r8 verdict ask on the
 # gate-scale oracle sweep's env var).
 
-.PHONY: test oracle-gate oracle-lsh oracle-lifecycle oracle-layout oracle-sf1 bench
+.PHONY: test oracle-gate oracle-lsh oracle-lifecycle oracle-layout oracle-stats oracle-sf1 bench
 
 # full suite (what "686 passed"-style ledger lines run)
 test:
@@ -46,6 +46,16 @@ LAYOUT_ROWS = dsir_sample or dsir_select or bpe_encode_counts \
 	or stat_range_served or stat_quantiles_served or stat_sketch_daily
 oracle-layout:
 	PYTEST_ADDOPTS='-k "$(LAYOUT_ROWS)"' $(MAKE) --no-print-directory oracle-gate
+
+# the statistics rows of the gate sweep, at the same sf0.01: raw, served,
+# rolled-up and stream-maintained statistics and quantiles, all built on
+# the one partial/merge core of operators/stats.py
+STATS_ROWS = stat_range_hourly or stat_range_served or stat_quantiles_served \
+	or stat_rollup_daily or stat_quantiles_hourly or stat_range_by_producer \
+	or stat_range_by_producer_served or stat_sketch_daily \
+	or stream_stats_rollup or stat_by_schema
+oracle-stats:
+	PYTEST_ADDOPTS='-k "$(STATS_ROWS)"' $(MAKE) --no-print-directory oracle-gate
 
 # the 10x-rows answer sweep (opt-in; ~35 min)
 oracle-sf1:

@@ -19,7 +19,6 @@ import dataclasses
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from dp3_spark.catalog import LogStore
 from dp3_spark.output import to_json_lines, to_json_shape
@@ -44,6 +43,7 @@ class DP3Engine:
         self.table = table
         self._explicit_store = store
         self._summary = None  # SummaryStore when attached (serve-from-summary)
+        self._summary_of = None  # the LogStore that summary describes
 
     def _store(self) -> LogStore:
         if self._explicit_store is not None:
@@ -130,16 +130,31 @@ class DP3Engine:
         attach_summary_store."""
         from dp3_spark.operators import stats as STAT
 
-        self._summary = STAT.write_summary_store(self._store(), path, **kwargs)
+        store = self._store()
+        self._summary = STAT.write_summary_store(store, path, **kwargs)
+        self._summary_of = store
         return self._summary
 
     def attach_summary_store(self, path: str, **kwargs):
         """Attach an existing summary store (written by build_summary_store
-        or appended by a summary_maintainer drain) for serving."""
+        or appended by a summary_maintainer drain) for serving.  It is
+        taken to describe the rows the engine reads now."""
         from dp3_spark.operators.stats import SummaryStore
 
         self._summary = SummaryStore(self.spark, path, **kwargs)
+        self._summary_of = self._store()
         return self._summary
+
+    def _stat_sources(self):
+        """(the LogStore requests read now, the attached summary store
+        while it still describes that store, else None).  A summary
+        describes the store `_store()` returned at build/attach.  A table
+        write moves log_store's memo to a new store, and a listing-fallback
+        table store is never memoized, so after any append, delete,
+        truncate or compact every request is derived from raw rows until a
+        summary is rebuilt.  An explicit LogStore never changes."""
+        store = self._store()
+        return store, (self._summary if store is self._summary_of else None)
 
     def summarize(self, **kwargs) -> DataFrame:
         """Base statistics summary (routes/statrange.go family).  Served by
@@ -147,13 +162,13 @@ class DP3Engine:
         are maintained there; full-corpus aggregation only as fallback."""
         from dp3_spark.operators import stats as STAT
 
-        if self._summary is not None:
-            g = kwargs.get("granularity_ns", STAT.DEFAULT_GRANULARITY_NS)
+        store, s = self._stat_sources()
+        if s is not None:
             try:
-                return self._summary.summarize(**{**kwargs, "granularity_ns": g})
+                return s.summarize(**kwargs)
             except ValueError:
                 pass  # unmaintained axis/field/granularity: fall back to raw
-        return STAT.summarize(self._store(), **kwargs)
+        return STAT.summarize(store, **kwargs)
 
     def stat_range(self, **kwargs) -> DataFrame:
         """GET /statrange analog — binned stats for one topic.  Serves from
@@ -163,9 +178,10 @@ class DP3Engine:
         stat_range_served driver row."""
         from dp3_spark.operators import stats as STAT
 
-        if self._summary is not None and self._summary.can_serve(**kwargs):
-            return self._summary.stat_range(**kwargs)
-        return STAT.stat_range(self._store(), **kwargs)
+        store, s = self._stat_sources()
+        if s is not None and s.can_serve(**kwargs):
+            return s.stat_range(**kwargs)
+        return STAT.stat_range(store, **kwargs)
 
     def stat_quantiles(
         self,
@@ -189,34 +205,21 @@ class DP3Engine:
         from dp3_spark.operators import sketch as SK
         from dp3_spark.operators import stats as STAT
 
-        if granularity_ns < STAT.TREE_LEAF_WIDTH_NS:
-            raise STAT.TooGranularError("sorry, too granular")
-        s = self._summary
+        STAT.aligned_granularity_ns(granularity_ns)  # raises below the 60 s leaf
+        store, s = self._stat_sources()
         if s is not None and s.can_serve_quantiles(
-            start_ns=start_ns,
-            end_ns=end_ns,
-            granularity_ns=granularity_ns,
-            field=field,
-            producer=producer,
+            start_ns=start_ns, end_ns=end_ns, granularity_ns=granularity_ns,
+            field=field, producer=producer,
         ):
             return s.quantiles(
                 topic=topic, start_ns=start_ns, end_ns=end_ns,
                 granularity_ns=granularity_ns, field=field,
                 quantiles=quantiles, producer=producer, values=values,
             )
-        ev = (
-            self._store()
-            .normalized()
-            .filter(F.col("topic") == topic)
-            .filter((F.col("log_time") >= start_ns) & (F.col("log_time") < end_ns))
-            .withColumn(
-                "bucket_start",
-                F.col("log_time") - F.col("log_time") % granularity_ns,
-            )
+        rows = STAT._window(store, topic, start_ns, end_ns, producer).withColumn(
+            "bucket_start", STAT._bucket("log_time", granularity_ns)
         )
-        if producer is not None:
-            ev = ev.filter(F.col("producer") == producer)
-        sk = SK.sketch_summarize(ev, keys=["bucket_start"], field=field)
+        sk = SK.sketch_summarize(rows, keys=["bucket_start"], field=field)
         out = SK.sketch_quantiles(
             sk, keys=["bucket_start"], quantiles=quantiles, values=values
         )

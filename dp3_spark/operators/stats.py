@@ -6,14 +6,18 @@ three read APIs: StatRange, Statistics (binned series), ListStatistics
 (SURVEY.md §2.4; nodestore/statistics.go:98-179, treemgr/treemgr.go:376-501,
 tree/tree.go:209-258).
 
-Spark design: a summary TABLE at a base granularity (default 60 s like the
-reference's leaf width, treemgr/treemgr.go:61-68), built by one map-side-
-combinable groupBy; coarser granularities re-aggregate the summary, never
-the raw data — all stats are associative by construction (the reference's
-"we are limited to associative statistics", nodestore/statistics.go:22-28).
-Quantiles: `percentile` (exact) for oracle-checked query-time results,
-`approx_percentile` (t-digest, mergeable — the DDSketch analog, accuracy
-documented 0.01) for the scale path.
+Spark design: one partial and one merge.  `_partials` is the only raw ->
+base-bucket aggregate (60 s by default, the reference's leaf width,
+treemgr/treemgr.go:61-68) and `_merge` the only re-bucketing of partials —
+the inner-node merge (nodestore/statistics.go:400-433), associative by
+construction ("we are limited to associative statistics",
+nodestore/statistics.go:22-28).  A merged partial is again a partial, so a
+batch build, a foreachBatch maintainer, a compaction and every serve-time
+roll-up emit the same rows by construction; `_finish` turns partials into
+API rows.  Quantiles: `percentile` (exact) for oracle-checked query-time
+results; the mergeable DDSketch map columns (operators/sketch.py, relative
+accuracy 0.01) for the scale path, persisted and merged like every other
+partial.
 
 NaN/Inf are skipped in numeric stats, matching nodestore/statistics.go:108-127.
 """
@@ -27,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from dp3_spark.catalog import LogStore, time_range_filter
+from dp3_spark.operators import sketch as SK
 from dp3_spark.operators.merge import sort_rows
 
 DEFAULT_GRANULARITY_NS = 60 * 1_000_000_000  # reference leaf width: 60 s
@@ -40,19 +45,151 @@ def _clean(field: str):
     return F.when(~(F.isnan(c) | c.isin(float("inf"), float("-inf"))), c)
 
 
-def _sum_exact(field: str, *, exact: bool = False):
-    """Exact (order-independent) sum: decimal accumulation, cast back to
-    double for API output.  Float sums depend on partition order — at 1000
-    executors the same query would return different last bits run-to-run;
-    decimal sums are associative AND exact, which also makes them
-    oracle-comparable.
+def _bucket(col: str, granularity_ns: int):
+    """bucket_start of a time (or of a finer bucket start): floor to the
+    granularity, int64 ns."""
+    return (F.col(col) - F.col(col) % granularity_ns).alias("bucket_start")
 
-    exact=True keeps the decimal(25,6) (for PERSISTED summary partials: a
-    double bucket sum loses the 6th decimal past ~4.5e9, so re-merging
-    double partials would diverge from the raw decimal path exactly at the
-    scale the store exists for)."""
-    s = F.sum(_clean(field).cast("decimal(25,6)"))
-    return s.cast("decimal(25,6)") if exact else s.cast("double")
+
+def _partials(
+    rows: DataFrame, keys: Sequence[str], granularity_ns: int,
+    numeric: Sequence[str], text: Sequence[str], sketch: Sequence[str],
+) -> DataFrame:
+    """The only raw -> base-partial aggregate: one row per (keys,
+    bucket_start) with message_count, the observed time range, per numeric
+    field a count, sum, min and max, per text field min/max, and per
+    sketch field a DDSketch map.  One shuffle, partial aggregation
+    map-side.
+
+    Sums are decimal(25,6): exact and order-independent (a float sum
+    depends on partition order, so at 1000 executors the same query would
+    differ run to run in the last bits), and a persisted partial that a
+    later merge re-sums never round-trips double (which loses the 6th
+    decimal past ~4.5e9, exactly the scale the store exists for)."""
+    aggs = [
+        F.count("*").alias("message_count"),
+        F.min("log_time").alias("min_observed_time"),
+        F.max("log_time").alias("max_observed_time"),
+    ]
+    for f in numeric:
+        c = _clean(f)
+        aggs += [
+            F.count(c).alias(f"{f}_count"),
+            F.sum(c.cast("decimal(25,6)")).cast("decimal(25,6)").alias(f"{f}_sum"),
+            F.min(c).alias(f"{f}_min"),
+            F.max(c).alias(f"{f}_max"),
+        ]
+    for f in text:
+        aggs += [F.min(f).alias(f"{f}_text_min"), F.max(f).alias(f"{f}_text_max")]
+    out = rows.groupBy(*keys, _bucket("log_time", granularity_ns)).agg(*aggs)
+    bucketed = rows.withColumn("bucket_start", _bucket("log_time", granularity_ns))
+    return _attach_sketches(out, keys, {
+        f: SK.sketch_summarize(bucketed, keys=[*keys, "bucket_start"], field=f)
+        for f in sketch
+    })
+
+
+def _merge(
+    partials: DataFrame, keys: Sequence[str], granularity_ns: int,
+    numeric: Sequence[str], text: Sequence[str], sketch: Sequence[str],
+) -> DataFrame:
+    """The only re-bucketing of partials: group them to (keys, bucket at
+    `granularity_ns`), summing counts and decimal sums, taking min/max
+    and merging sketch maps (SK.sketch_merge).  Any number of partial rows
+    per bucket, in any order, merge to the same row; the output is a
+    partial again.  Input sums may be double (API summaries) or decimal
+    (persisted partials)."""
+    aggs = [
+        F.sum("message_count").alias("message_count"),
+        F.min("min_observed_time").alias("min_observed_time"),
+        F.max("max_observed_time").alias("max_observed_time"),
+    ]
+    for f in numeric:
+        aggs += [
+            F.sum(f"{f}_count").alias(f"{f}_count"),
+            F.sum(F.col(f"{f}_sum").cast("decimal(25,6)"))
+            .cast("decimal(25,6)")
+            .alias(f"{f}_sum"),
+            F.min(f"{f}_min").alias(f"{f}_min"),
+            F.max(f"{f}_max").alias(f"{f}_max"),
+        ]
+    for f in text:
+        aggs += [
+            F.min(f"{f}_text_min").alias(f"{f}_text_min"),
+            F.max(f"{f}_text_max").alias(f"{f}_text_max"),
+        ]
+    bucket = _bucket("bucket_start", granularity_ns)
+    out = partials.groupBy(*keys, bucket).agg(*aggs)
+    return _attach_sketches(out, keys, {
+        f: SK.sketch_merge(
+            partials.filter(F.col(f"{f}_sketch").isNotNull()).select(
+                *keys, bucket, F.col(f"{f}_sketch").alias("sketch")
+            ),
+            keys=[*keys, "bucket_start"],
+        )
+        for f in sketch
+    })
+
+
+def _attach_sketches(
+    partials: DataFrame, keys: Sequence[str], sketches: dict[str, DataFrame]
+) -> DataFrame:
+    """Left-join each field's per-(keys, bucket) sketch frame onto the
+    partials as `{f}_sketch`/`{f}_sketch_n`.  A bucket with no finite
+    values for a field keeps NULL maps (the serve path skips them)."""
+    for f, sk in sketches.items():
+        sk = sk.withColumnRenamed("sketch", f"{f}_sketch").withColumnRenamed(
+            "sketch_n", f"{f}_sketch_n"
+        )
+        partials = partials.join(sk, [*keys, "bucket_start"], "left")
+    return partials
+
+
+def _finish(
+    partials: DataFrame, numeric: Sequence[str], *, persisted: bool = False
+) -> DataFrame:
+    """Add each `{f}_mean` (before any sketch maps: the persisted column
+    order) and, unless the rows are persisted partials that keep the exact
+    decimal, cast each `{f}_sum` to the API's double."""
+    sums = set() if persisted else {f"{f}_sum" for f in numeric}
+    maps = [c for c in partials.columns if c.endswith(("_sketch", "_sketch_n"))]
+    return partials.select(
+        *(
+            F.col(c).cast("double").alias(c) if c in sums else F.col(c)
+            for c in partials.columns
+            if c not in maps
+        ),
+        *(
+            (F.col(f"{f}_sum").cast("double") / F.col(f"{f}_count")).alias(f"{f}_mean")
+            for f in numeric
+        ),
+        *maps,
+    )
+
+
+def _ranged(
+    partials: DataFrame, keys: Sequence[str], numeric: Sequence[str],
+    start_ns: int, end_ns: int, granularity_ns: int, per_producer: bool,
+) -> DataFrame:
+    """StatRange rows from partials over [start, end), sorted by bucket."""
+    cols = [*keys, "bucket_start", "message_count"]
+    cols += [f"{f}_{s}" for f in numeric for s in ("count", "sum", "min", "max")]
+    cols += [f"{f}_mean" for f in numeric]
+    out = _finish(partials, numeric).select(*cols)
+    return sort_buckets(out, start_ns, end_ns, granularity_ns, per_producer)
+
+
+def _window(
+    store: LogStore, topic: str, start_ns: int, end_ns: int, producer: str | None = None
+) -> DataFrame:
+    """One topic's raw rows in [start, end) (time_range_filter: the raw
+    time column's bound reaches the scan), optionally one producer's."""
+    df = time_range_filter(
+        store.normalized().filter(F.col("topic") == topic), start_ns, end_ns
+    )
+    if producer is not None:
+        df = df.filter(F.col("producer") == producer)
+    return df
 
 
 def summarize(
@@ -63,53 +200,24 @@ def summarize(
     text_fields: Sequence[str] = (),
     group_by_producer: bool = True,
     schema_hash_col: str | None = None,
-    exact_sums: bool = False,
 ) -> DataFrame:
     """Base summary table: one row per (producer?, topic[, schema_hash],
-    bucket) with associative stats per field.
-
-    exact_sums=True keeps `{f}_sum` as decimal(25,6) instead of double —
-    required when the output is PERSISTED as summary partials that later
-    merges re-sum (see _sum_exact); the serving layer casts to double at
-    output.  API callers keep the double schema.
-
-    bucket_start = floor(log_time / granularity) * granularity (int64 ns).
-    One shuffle, partial aggregation map-side; at 100 TB this is the table
-    you'd maintain incrementally with Structured Streaming foreachBatch.
+    bucket) with associative stats per field.  At 100 TB this is the table
+    you'd maintain incrementally with Structured Streaming foreachBatch
+    (streaming/ingest.summary_maintainer emits the same partials).
 
     schema_hash_col: group additionally by the row's schema generation —
     the reference keys every statistics map by schema hash
     (nodestore/statistics.go:304-313, inner_node.go:32-46), so a
     mixed-schema topic (legal: treemgr_test.go:394-456) never merges stats
     across generations whose fields differ."""
-    df = store.normalized()
-    keys = ["topic"]
+    rows = store.normalized()
+    keys = (["producer"] if group_by_producer else []) + ["topic"]
     if schema_hash_col is not None:
-        keys.append(F.col(schema_hash_col).alias("schema_hash"))
-    keys.append((F.col("log_time") - F.col("log_time") % granularity_ns).alias("bucket_start"))
-    if group_by_producer:
-        keys.insert(0, "producer")
-    aggs = [
-        F.count("*").alias("message_count"),
-        F.min("log_time").alias("min_observed_time"),
-        F.max("log_time").alias("max_observed_time"),
-    ]
-    for f in numeric_fields:
-        c = _clean(f)
-        aggs += [
-            F.count(c).alias(f"{f}_count"),
-            _sum_exact(f, exact=exact_sums).alias(f"{f}_sum"),
-            F.min(c).alias(f"{f}_min"),
-            F.max(c).alias(f"{f}_max"),
-        ]
-    for f in text_fields:
-        aggs += [F.min(f).alias(f"{f}_text_min"), F.max(f).alias(f"{f}_text_max")]
-    out = df.groupBy(*keys).agg(*aggs)
-    for f in numeric_fields:
-        out = out.withColumn(
-            f"{f}_mean", F.col(f"{f}_sum").cast("double") / F.col(f"{f}_count")
-        )
-    return out
+        rows = rows.withColumn("schema_hash", F.col(schema_hash_col))
+        keys.append("schema_hash")
+    parts = _partials(rows, keys, granularity_ns, numeric_fields, text_fields, ())
+    return _finish(parts, numeric_fields)
 
 
 def rollup_summary(
@@ -122,30 +230,8 @@ def rollup_summary(
     if to_granularity_ns % from_granularity_ns != 0:
         raise ValueError("target granularity must be a multiple of the base")
     keys = [c for c in ("producer", "topic", "schema_hash") if c in summary.columns]
-    bucket = (F.col("bucket_start") - F.col("bucket_start") % to_granularity_ns).alias(
-        "bucket_start"
-    )
-    aggs = [
-        F.sum("message_count").alias("message_count"),
-        F.min("min_observed_time").alias("min_observed_time"),
-        F.max("max_observed_time").alias("max_observed_time"),
-    ]
-    for f in numeric_fields:
-        aggs += [
-            F.sum(f"{f}_count").alias(f"{f}_count"),
-            F.sum(F.col(f"{f}_sum").cast("decimal(25,6)")).cast("double").alias(f"{f}_sum"),
-            F.min(f"{f}_min").alias(f"{f}_min"),
-            F.max(f"{f}_max").alias(f"{f}_max"),
-        ]
-    for f in text_fields:
-        aggs += [
-            F.min(f"{f}_text_min").alias(f"{f}_text_min"),
-            F.max(f"{f}_text_max").alias(f"{f}_text_max"),
-        ]
-    out = summary.groupBy(*keys, bucket).agg(*aggs)
-    for f in numeric_fields:
-        out = out.withColumn(f"{f}_mean", F.col(f"{f}_sum") / F.col(f"{f}_count"))
-    return out
+    parts = _merge(summary, keys, to_granularity_ns, numeric_fields, text_fields, ())
+    return _finish(parts, numeric_fields)
 
 
 # the reference tree stores statistics at leaf buckets of 60 s, with inner
@@ -210,30 +296,13 @@ def stat_range(
     reference's "sorry, too granular" error (tree.go:252-254), and
     aligned_granularity_ns() reports what bucket width the reference would
     have returned for a given request."""
-    if granularity_ns < TREE_LEAF_WIDTH_NS:
-        raise TooGranularError("sorry, too granular")
-    df = time_range_filter(
-        store.normalized().filter(F.col("topic") == topic), start_ns, end_ns
-    )
-    if producer is not None:
-        df = df.filter(F.col("producer") == producer)
-    keys = [(F.col("log_time") - F.col("log_time") % granularity_ns).alias("bucket_start")]
-    if group_by_producer:
-        keys.insert(0, F.col("producer"))
-    aggs = [F.count("*").alias("message_count")]
-    for f in numeric_fields:
-        c = _clean(f)
-        aggs += [
-            F.count(c).alias(f"{f}_count"),
-            _sum_exact(f).alias(f"{f}_sum"),
-            F.min(c).alias(f"{f}_min"),
-            F.max(c).alias(f"{f}_max"),
-        ]
-    out = df.groupBy(*keys).agg(*aggs)
-    for f in numeric_fields:
-        out = out.withColumn(f"{f}_mean", F.col(f"{f}_sum") / F.col(f"{f}_count"))
-    return sort_buckets(
-        out, start_ns, end_ns, granularity_ns, group_by_producer and producer is None
+    aligned_granularity_ns(granularity_ns)  # raises below the 60 s leaf
+    keys = ["producer"] if group_by_producer else []
+    rows = _window(store, topic, start_ns, end_ns, producer)
+    return _ranged(
+        _partials(rows, keys, granularity_ns, numeric_fields, (), ()),
+        keys, numeric_fields, start_ns, end_ns, granularity_ns,
+        group_by_producer and producer is None,
     )
 
 
@@ -264,11 +333,9 @@ def write_summary_store(
     group_by_producer: bool = True,
     sketch_fields: Sequence[str] = (),
 ) -> "SummaryStore":
-    """Build and persist the base summary table, laid out for serving:
-    partitioned by topic (directory pruning per serve) and sorted by
-    bucket_start within files (row-group min/max pruning of the time
-    window).  The partition column must LEAD the sort order or
-    FileFormatWriter re-sorts and silently destroys the clustering.
+    """Build and persist the base summary table (SummaryStore._write lays
+    it out for serving), with a meta sidecar naming its granularity and
+    fields.
 
     sketch_fields: additionally maintain a mergeable DDSketch-style
     quantile sketch per field as a `{f}_sketch` map<bin,count> column
@@ -278,26 +345,12 @@ def write_summary_store(
     import json
     import os
 
-    s = summarize(
-        store,
-        granularity_ns=granularity_ns,
-        numeric_fields=numeric_fields,
-        text_fields=text_fields,
-        group_by_producer=group_by_producer,
-        exact_sums=True,  # persisted partials must not round-trip double
+    keys = (["producer"] if group_by_producer else []) + ["topic"]
+    parts = _partials(
+        store.normalized(), keys, granularity_ns, numeric_fields, text_fields,
+        sketch_fields,
     )
-    if sketch_fields:
-        s = _attach_sketches(
-            store.normalized(), s, granularity_ns=granularity_ns,
-            sketch_fields=sketch_fields, group_by_producer=group_by_producer,
-        )
-    (
-        s.repartition("topic")
-        .sortWithinPartitions("topic", "bucket_start")
-        .write.mode("overwrite")
-        .partitionBy("topic")
-        .parquet(path)
-    )
+    SummaryStore._write(_finish(parts, numeric_fields, persisted=True), path)
     meta = {
         "granularity_ns": granularity_ns,
         "numeric_fields": list(numeric_fields),
@@ -309,34 +362,6 @@ def write_summary_store(
         json.dump(meta, f)
     spark = store.df.sparkSession
     return SummaryStore(spark, path)
-
-
-def _attach_sketches(
-    df: DataFrame,
-    base: DataFrame,
-    *,
-    granularity_ns: int,
-    sketch_fields: Sequence[str],
-    group_by_producer: bool,
-) -> DataFrame:
-    """Left-join per-(keys, bucket) DDSketch map columns onto the base
-    summary frame.  A bucket with no finite values for a field keeps a
-    NULL sketch (the serve path skips NULL maps before exploding)."""
-    from dp3_spark.operators import sketch as SK
-
-    keys = (["producer"] if group_by_producer else []) + ["topic"]
-    bucketed = df.withColumn(
-        "bucket_start", F.col("log_time") - F.col("log_time") % granularity_ns
-    )
-    out = base
-    for f in sketch_fields:
-        sk = SK.sketch_summarize(
-            bucketed, keys=[*keys, "bucket_start"], field=f
-        ).withColumnRenamed("sketch", f"{f}_sketch").withColumnRenamed(
-            "sketch_n", f"{f}_sketch_n"
-        )
-        out = out.join(sk, [*keys, "bucket_start"], "left")
-    return out
 
 
 class SummaryStore:
@@ -389,6 +414,21 @@ class SummaryStore:
         )
         self._schema: StructType | None = None
 
+    @staticmethod
+    def _write(frame: DataFrame, path: str) -> None:
+        """Persist partials laid out for serving: partitioned by topic
+        (directory pruning per serve) and sorted by bucket_start within
+        files (row-group min/max pruning of the time window).  The
+        partition column must LEAD the sort order or FileFormatWriter
+        re-sorts and silently destroys the clustering."""
+        (
+            frame.repartition("topic")
+            .sortWithinPartitions("topic", "bucket_start")
+            .write.mode("overwrite")
+            .partitionBy("topic")
+            .parquet(path)
+        )
+
     def _read(self) -> DataFrame:
         """The store's rows.  The directory is listed on every read (a
         streaming sink grows it, and a cached listing would serve stale
@@ -400,6 +440,49 @@ class SummaryStore:
         df = self.spark.read.parquet(self.path)
         self._schema = df.schema
         return df
+
+    def _slice(
+        self, topic: str, start_ns: int, end_ns: int, producer: str | None
+    ) -> DataFrame:
+        """One topic's partials with bucket_start in [start, end) — the
+        topic directory and the row groups of the window — optionally one
+        producer's."""
+        df = self._read().filter(F.col("topic") == topic)
+        df = df.filter(
+            (F.col("bucket_start") >= start_ns) & (F.col("bucket_start") < end_ns)
+        )
+        if producer is not None:
+            df = df.filter(F.col("producer") == producer)
+        return df
+
+    def _servable(
+        self, granularity_ns: int, start_ns: int = 0, end_ns: int = 0, *,
+        numeric: Sequence[str] = (), text: Sequence[str] = (),
+        sketch: Sequence[str] = (), producer: bool = False, schema_hash: bool = False,
+    ) -> bool:
+        """The one servability rule: a request is served iff it merges
+        whole base buckets — the granularity a multiple of the base and
+        the window base-aligned (a misaligned edge would need a partial
+        bucket only raw rows can split) — of statistics this store
+        maintains: its fields, sketches, and any producer or schema-hash
+        axis.  A request finer than the 60 s leaf raises the reference's
+        "sorry, too granular" error first."""
+        aligned_granularity_ns(granularity_ns)
+        b = self.granularity_ns
+        return (
+            not (granularity_ns % b or start_ns % b or end_ns % b)
+            and set(numeric) <= set(self.numeric_fields)
+            and set(text) <= set(self.text_fields)
+            and set(sketch) <= set(self.sketch_fields)
+            and (self.group_by_producer or not producer)
+            and (not schema_hash or "schema_hash" in self._read().columns)
+        )
+
+    def _unservable(self) -> ValueError:
+        return ValueError(
+            f"not servable from {self.path}: needs whole base buckets and "
+            "maintained fields, sketches and producer or schema-hash axes"
+        )
 
     def compact(self) -> int:
         """Merge partial rows back to ONE row per (keys, bucket) — the
@@ -418,10 +501,7 @@ class SummaryStore:
         Crash safety: a crash between the two renames leaves the store
         path missing with the full pre-compact data intact at
         '<path>._old' — recover by renaming it back (the staging dir is
-        complete too; either is a valid store).
-
-        Sketch map columns merge with the same explode+re-sum the serve
-        path uses; sums stay decimal (never round-trip double)."""
+        complete too; either is a valid store)."""
         import os
         import shutil
 
@@ -441,61 +521,16 @@ class SummaryStore:
 
         df = self._read()
         keys = [c for c in ("producer", "topic", "schema_hash") if c in df.columns]
-        aggs = [
-            F.sum("message_count").alias("message_count"),
-            F.min("min_observed_time").alias("min_observed_time"),
-            F.max("max_observed_time").alias("max_observed_time"),
-        ]
-        for f in self.numeric_fields:
-            aggs += [
-                F.sum(f"{f}_count").alias(f"{f}_count"),
-                F.sum(F.col(f"{f}_sum").cast("decimal(25,6)"))
-                .cast("decimal(25,6)")
-                .alias(f"{f}_sum"),
-                F.min(f"{f}_min").alias(f"{f}_min"),
-                F.max(f"{f}_max").alias(f"{f}_max"),
-            ]
-        for f in self.text_fields:
-            aggs += [
-                F.min(f"{f}_text_min").alias(f"{f}_text_min"),
-                F.max(f"{f}_text_max").alias(f"{f}_text_max"),
-            ]
-        out = df.groupBy(*keys, "bucket_start").agg(*aggs)
-        for f in self.numeric_fields:
-            out = out.withColumn(
-                f"{f}_mean", F.col(f"{f}_sum").cast("double") / F.col(f"{f}_count")
-            )
-        for f in self.sketch_fields:
-            sk = (
-                df.filter(F.col(f"{f}_sketch").isNotNull())
-                .select(*keys, "bucket_start", F.explode(f"{f}_sketch").alias("bin", "cnt"))
-                .groupBy(*keys, "bucket_start", "bin")
-                .agg(F.sum("cnt").alias("cnt"))
-                .groupBy(*keys, "bucket_start")
-                .agg(
-                    F.map_from_entries(
-                        F.collect_list(F.struct("bin", "cnt"))
-                    ).alias(f"{f}_sketch"),
-                    F.sum("cnt").alias(f"{f}_sketch_n"),
-                )
-            )
-            out = out.join(sk, [*keys, "bucket_start"], "left")
+        parts = _merge(
+            df, keys, self.granularity_ns, self.numeric_fields, self.text_fields,
+            self.sketch_fields,
+        )
         staging = self.path.rstrip("/") + "._compact"
-        writer = out
-        if "topic" in keys:
-            writer = out.repartition("topic").sortWithinPartitions(
-                "topic", "bucket_start"
-            )
-            writer.write.mode("overwrite").partitionBy("topic").parquet(staging)
-        else:
-            writer.sortWithinPartitions("bucket_start").write.mode(
-                "overwrite"
-            ).parquet(staging)
+        self._write(_finish(parts, self.numeric_fields, persisted=True), staging)
         n = self.spark.read.parquet(staging).count()
         meta_src = os.path.join(self.path, SUMMARY_META_FILE)
         if os.path.exists(meta_src):
             shutil.copy2(meta_src, os.path.join(staging, SUMMARY_META_FILE))
-        old = self.path.rstrip("/") + "._old"
         os.rename(self.path, old)
         os.rename(staging, self.path)
         shutil.rmtree(old, ignore_errors=True)
@@ -503,31 +538,15 @@ class SummaryStore:
         return n
 
     def can_serve(
-        self,
-        *,
-        start_ns: int,
-        end_ns: int,
-        granularity_ns: int,
-        numeric_fields: Sequence[str],
-        producer: str | None = None,
-        group_by_producer: bool = False,
-        **_ignored,
+        self, *, start_ns: int, end_ns: int, granularity_ns: int,
+        numeric_fields: Sequence[str], producer: str | None = None,
+        group_by_producer: bool = False, **_ignored,
     ) -> bool:
-        """A request is summary-servable iff it merges whole base buckets:
-        the requested granularity is a multiple of the base AND the window
-        is base-bucket-aligned (a misaligned edge would need a partial
-        bucket only raw rows can split), the fields are a subset of the
-        maintained ones, and any producer axis was kept at build time."""
-        b = self.granularity_ns
-        if granularity_ns < TREE_LEAF_WIDTH_NS:
-            return True  # serve() raises the reference's too-granular error
-        if granularity_ns % b or start_ns % b or end_ns % b:
-            return False
-        if not set(numeric_fields) <= set(self.numeric_fields):
-            return False
-        if (producer is not None or group_by_producer) and not self.group_by_producer:
-            return False
-        return True
+        """StatRange servability (`_servable`)."""
+        return self._servable(
+            granularity_ns, start_ns, end_ns, numeric=numeric_fields,
+            producer=producer is not None or group_by_producer,
+        )
 
     def stat_range(
         self,
@@ -544,71 +563,29 @@ class SummaryStore:
         (and, for servable requests, hash-identical results: gated by the
         stat_range_served driver row) as stats.stat_range over raw, while
         reading only the topic's summary slice."""
-        if granularity_ns < TREE_LEAF_WIDTH_NS:
-            raise TooGranularError("sorry, too granular")
         if not self.can_serve(
-            start_ns=start_ns,
-            end_ns=end_ns,
-            granularity_ns=granularity_ns,
-            numeric_fields=numeric_fields,
-            producer=producer,
+            start_ns=start_ns, end_ns=end_ns, granularity_ns=granularity_ns,
+            numeric_fields=numeric_fields, producer=producer,
             group_by_producer=group_by_producer,
         ):
-            raise ValueError(
-                "request is not summary-servable (misaligned window, "
-                "non-multiple granularity, or unmaintained field/axis)"
-            )
-        df = self._read().filter(F.col("topic") == topic)
-        df = df.filter(
-            (F.col("bucket_start") >= start_ns) & (F.col("bucket_start") < end_ns)
-        )
-        if producer is not None:
-            df = df.filter(F.col("producer") == producer)
-        keys = [
-            (F.col("bucket_start") - F.col("bucket_start") % granularity_ns).alias(
-                "bucket_start"
-            )
-        ]
-        if group_by_producer:
-            keys.insert(0, F.col("producer"))
-        aggs = [F.sum("message_count").alias("message_count")]
-        for f in numeric_fields:
-            aggs += [
-                F.sum(f"{f}_count").alias(f"{f}_count"),
-                F.sum(F.col(f"{f}_sum").cast("decimal(25,6)")).cast("double").alias(f"{f}_sum"),
-                F.min(f"{f}_min").alias(f"{f}_min"),
-                F.max(f"{f}_max").alias(f"{f}_max"),
-            ]
-        out = df.groupBy(*keys).agg(*aggs)
-        for f in numeric_fields:
-            out = out.withColumn(f"{f}_mean", F.col(f"{f}_sum") / F.col(f"{f}_count"))
-        return sort_buckets(
-            out, start_ns, end_ns, granularity_ns, group_by_producer and producer is None
+            raise self._unservable()
+        keys = ["producer"] if group_by_producer else []
+        rows = self._slice(topic, start_ns, end_ns, producer)
+        return _ranged(
+            _merge(rows, keys, granularity_ns, numeric_fields, (), ()),
+            keys, numeric_fields, start_ns, end_ns, granularity_ns,
+            group_by_producer and producer is None,
         )
 
     def can_serve_quantiles(
-        self,
-        *,
-        start_ns: int,
-        end_ns: int,
-        granularity_ns: int,
-        field: str,
+        self, *, start_ns: int, end_ns: int, granularity_ns: int, field: str,
         producer: str | None = None,
     ) -> bool:
-        """Single source of truth for quantile servability (shared by
-        SummaryStore.quantiles and engine.stat_quantiles' dispatch —
-        duplicated inline predicates drift): whole-base-bucket assembly
-        plus a maintained sketch for the field."""
-        b = self.granularity_ns
-        if granularity_ns < TREE_LEAF_WIDTH_NS:
-            return True  # quantiles() raises the reference's error itself
-        if granularity_ns % b or start_ns % b or end_ns % b:
-            return False
-        if field not in self.sketch_fields:
-            return False
-        if producer is not None and not self.group_by_producer:
-            return False
-        return True
+        """Sketch-quantile servability (`_servable`)."""
+        return self._servable(
+            granularity_ns, start_ns, end_ns, sketch=(field,),
+            producer=producer is not None,
+        )
 
     def quantiles(
         self,
@@ -635,36 +612,18 @@ class SummaryStore:
         values=False emits covering-bin indices (p{N}_bin, the
         cross-engine-exact surface); values=True emits representative
         float values (relative error <= the sketch accuracy)."""
-        from dp3_spark.operators import sketch as SK
-
-        if granularity_ns < TREE_LEAF_WIDTH_NS:
-            raise TooGranularError("sorry, too granular")
         if not self.can_serve_quantiles(
-            start_ns=start_ns,
-            end_ns=end_ns,
-            granularity_ns=granularity_ns,
-            field=field,
-            producer=producer,
+            start_ns=start_ns, end_ns=end_ns, granularity_ns=granularity_ns,
+            field=field, producer=producer,
         ):
-            raise ValueError(
-                "request is not sketch-servable (misaligned window, "
-                "non-multiple granularity, unmaintained sketch field, or "
-                "missing producer axis)"
-            )
-        df = self._read().filter(F.col("topic") == topic)
-        df = df.filter(
-            (F.col("bucket_start") >= start_ns) & (F.col("bucket_start") < end_ns)
-        )
-        if producer is not None:
-            df = df.filter(F.col("producer") == producer)
-        sk = df.filter(F.col(f"{field}_sketch").isNotNull()).select(
-            (
-                F.col("bucket_start") - F.col("bucket_start") % granularity_ns
-            ).alias("bucket_start"),
+            raise self._unservable()
+        maps = self._slice(topic, start_ns, end_ns, producer).filter(
+            F.col(f"{field}_sketch").isNotNull()
+        ).select(
+            _bucket("bucket_start", granularity_ns),
             F.col(f"{field}_sketch").alias("sketch"),
-            F.col(f"{field}_sketch_n").alias("sketch_n"),
         )
-        merged = SK.sketch_merge(sk, keys=["bucket_start"])
+        merged = SK.sketch_merge(maps, keys=["bucket_start"])
         out = SK.sketch_quantiles(
             merged, keys=["bucket_start"], quantiles=quantiles, values=values
         )
@@ -673,50 +632,31 @@ class SummaryStore:
     def summarize(
         self,
         *,
-        granularity_ns: int,
+        granularity_ns: int = DEFAULT_GRANULARITY_NS,
         numeric_fields: Sequence[str] = (),
         text_fields: Sequence[str] = (),
         group_by_producer: bool = True,
         schema_hash_col: str | None = None,
     ) -> DataFrame:
         """Statistics endpoint served from the store: merge partials and
-        re-bucket via rollup_summary (never touches raw).  Requires the
-        requested axes/fields to be maintained; every unservable request
-        raises ValueError so engine.summarize falls back to raw — an axis
-        the store lacks must NEVER be silently dropped (a schema_hash axis
+        re-bucket (never touches raw).  Every unservable request raises
+        ValueError so engine.summarize falls back to raw — an axis the
+        store lacks must NEVER be silently dropped (a schema_hash axis
         dropped here would merge stats across schema generations, exactly
-        what the per-generation keying exists to prevent)."""
-        if granularity_ns % self.granularity_ns:
-            raise ValueError("granularity must be a multiple of the store base")
-        if not set(numeric_fields) <= set(self.numeric_fields):
-            raise ValueError("field not maintained in the summary store")
-        if not set(text_fields) <= set(self.text_fields):
-            raise ValueError("text field not maintained in the summary store")
-        if group_by_producer and not self.group_by_producer:
-            raise ValueError("store was built without the producer axis")
-        base = self._read()
-        if schema_hash_col is not None and "schema_hash" not in base.columns:
-            raise ValueError("store was built without the schema-hash axis")
-        if schema_hash_col is None and "schema_hash" in base.columns:
-            # axis maintained but not requested: merge generations away
-            # (associative stats), matching raw summarize's output shape
-            base = base.drop("schema_hash")
-        if not group_by_producer and self.group_by_producer:
-            base = base.drop("producer")
-        keep = ["message_count", "min_observed_time", "max_observed_time"]
-        for f in numeric_fields:
-            keep += [f"{f}_count", f"{f}_sum", f"{f}_min", f"{f}_max"]
-        for f in text_fields:
-            keep += [f"{f}_text_min", f"{f}_text_max"]
-        keys = [c for c in ("producer", "topic", "schema_hash") if c in base.columns]
-        base = base.select(*keys, "bucket_start", *keep)
-        return rollup_summary(
-            base,
-            from_granularity_ns=self.granularity_ns,
-            to_granularity_ns=granularity_ns,
-            numeric_fields=numeric_fields,
-            text_fields=text_fields,
+        what the per-generation keying exists to prevent).  A stored axis
+        the request leaves out is merged away."""
+        schema_hash = schema_hash_col is not None
+        if not self._servable(
+            granularity_ns, numeric=numeric_fields, text=text_fields,
+            producer=group_by_producer, schema_hash=schema_hash,
+        ):
+            raise self._unservable()
+        keys = (["producer"] if group_by_producer else []) + ["topic"]
+        keys += ["schema_hash"] if schema_hash else []
+        parts = _merge(
+            self._read(), keys, granularity_ns, numeric_fields, text_fields, ()
         )
+        return _finish(parts, numeric_fields)
 
 
 def quantiles_exact(
@@ -731,43 +671,12 @@ def quantiles_exact(
 ) -> DataFrame:
     """Exact per-bucket quantiles via `percentile` (linear interpolation,
     matches DuckDB quantile_cont bit-for-bit on identical input sets).
-    Correctness baseline for the sketch path."""
-    df = time_range_filter(
-        store.normalized().filter(F.col("topic") == topic), start_ns, end_ns
-    )
-    bucket = (F.col("log_time") - F.col("log_time") % granularity_ns).alias("bucket_start")
+    Correctness baseline for the DDSketch path."""
     qlist = ", ".join(str(q) for q in quantiles)
-    aggs = [
+    out = _window(store, topic, start_ns, end_ns).groupBy(
+        _bucket("log_time", granularity_ns)
+    ).agg(
         F.expr(f"percentile({field}, array({qlist}))").alias("qs"),
-        F.count(F.col(field)).alias("n"),
-    ]
-    out = df.groupBy(bucket).agg(*aggs)
-    for i, q in enumerate(quantiles):
-        out = out.withColumn(f"p{int(q * 100)}", F.col("qs").getItem(i))
-    return sort_buckets(out.drop("qs"), start_ns, end_ns, granularity_ns)
-
-
-def quantiles_sketch(
-    store: LogStore,
-    *,
-    topic: str,
-    field: str,
-    start_ns: int,
-    end_ns: int,
-    granularity_ns: int,
-    quantiles: Sequence[float] = QUANTILES,
-    accuracy: int = 10000,
-) -> DataFrame:
-    """Mergeable-sketch quantiles via approx_percentile — the scale path
-    (t-digest-style, the DDSketch-0.01 analog; accuracy=10000 ≈ 1e-4 rank
-    error)."""
-    df = time_range_filter(
-        store.normalized().filter(F.col("topic") == topic), start_ns, end_ns
-    )
-    bucket = (F.col("log_time") - F.col("log_time") % granularity_ns).alias("bucket_start")
-    qlist = ", ".join(str(q) for q in quantiles)
-    out = df.groupBy(bucket).agg(
-        F.expr(f"approx_percentile({field}, array({qlist}), {accuracy})").alias("qs"),
         F.count(F.col(field)).alias("n"),
     )
     for i, q in enumerate(quantiles):

@@ -465,8 +465,9 @@ _QUANT_MICRO_COLS = ", ".join(
     """,
 )
 def stat_quantiles_hourly(spark, sf_dir):
-    """P25..P99 per bucket — exact `percentile` (DDSketch analog is
-    quantiles_sketch; quantile list nodestore/statistics.go:204-206).
+    """P25..P99 per bucket — exact `percentile` (the DDSketch path is
+    engine.stat_quantiles over the summary store's sketch columns;
+    quantile list nodestore/statistics.go:204-206).
 
     The gate emits int64 MICRO-unit quantiles (floor(x*1e6+0.5), the
     millicosine discipline): Spark `percentile` and DuckDB `quantile_cont`

@@ -144,47 +144,20 @@ def summary_maintainer(
     numeric_fields: list[str],
     sketch_fields: list[str] = (),
 ):
-    """foreachBatch summary maintenance: each micro-batch computes partial
-    aggregates at the base granularity; merging into the summary store is
-    associative (stats.rollup_summary) so batches can land in any order.
-
-    Sums are persisted as decimal(25,6) (see stats._sum_exact).  Serving
-    casts on read, so stores written before this change stay readable —
-    but do not APPEND decimal partials into an old double-sum store
-    directory (mixed parquet column types break the read); rebuild via
-    write_summary_store instead.
-
-    sketch_fields: additionally maintain per-bucket DDSketch quantile maps
-    ({f}_sketch) — partial maps per micro-batch; serving merges them
-    (SummaryStore.quantiles), so this too is batch-order-independent."""
-    from dp3_spark.operators.stats import _attach_sketches, _clean, _sum_exact
+    """foreachBatch summary maintenance: each micro-batch emits its
+    base-granularity partials through stats._partials, the same
+    aggregate write_summary_store builds from (exact decimal sums, and
+    per-bucket DDSketch maps for sketch_fields).  Partials land in any
+    order and any number per bucket: every serve (SummaryStore) and
+    rollup_summary merges them associatively, and SummaryStore.compact
+    folds them back to one row per bucket.  `df` is the stream's source
+    frame; each batch supplies its own rows."""
+    from dp3_spark.operators.stats import _partials
 
     def update(batch: DataFrame, _epoch: int) -> DataFrame:
-        keys = [
-            "producer",
-            "topic",
-            (F.col("log_time") - F.col("log_time") % granularity_ns).alias("bucket_start"),
-        ]
-        aggs = [
-            F.count("*").alias("message_count"),
-            F.min("log_time").alias("min_observed_time"),
-            F.max("log_time").alias("max_observed_time"),
-        ]
-        for f in numeric_fields:
-            aggs += [
-                F.count(_clean(f)).alias(f"{f}_count"),
-                # exact=True: these partials are persisted and re-merged;
-                # a double round-trip loses the 6th decimal past ~4.5e9
-                _sum_exact(f, exact=True).alias(f"{f}_sum"),
-                F.min(_clean(f)).alias(f"{f}_min"),
-                F.max(_clean(f)).alias(f"{f}_max"),
-            ]
-        out = batch.groupBy(*keys).agg(*aggs)
-        if sketch_fields:
-            out = _attach_sketches(
-                batch, out, granularity_ns=granularity_ns,
-                sketch_fields=list(sketch_fields), group_by_producer=True,
-            )
-        return out
+        return _partials(
+            batch, ["producer", "topic"], granularity_ns, numeric_fields, (),
+            sketch_fields,
+        )
 
     return update

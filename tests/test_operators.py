@@ -434,13 +434,16 @@ def test_stat_rollup_associativity(spark):
 
 
 def test_quantiles_sketch_close_to_exact(spark):
+    from dp3_spark.engine import DP3Engine
+
     store = events_log_store(spark, SF, us_truncate=True)
     day = 24 * 3600 * 10**9
     lo, hi = 1704067200 * 10**9, 1706745600 * 10**9
-    ex = ST.quantiles_exact(store, topic="click", field="value", start_ns=lo, end_ns=hi,
-                            granularity_ns=day * 40).collect()
-    sk = ST.quantiles_sketch(store, topic="click", field="value", start_ns=lo, end_ns=hi,
-                             granularity_ns=day * 40).collect()
+    req = dict(topic="click", field="value", start_ns=lo, end_ns=hi, granularity_ns=day * 40)
+    ex = ST.quantiles_exact(store, **req).collect()
+    sk = DP3Engine(spark, store=store).stat_quantiles(
+        **req, quantiles=ST.QUANTILES, values=True
+    ).collect()
     assert len(ex) == len(sk) == 1
     for q in ("p25", "p50", "p75", "p90", "p95", "p99"):
         rel = abs(ex[0][q] - sk[0][q]) / max(abs(ex[0][q]), 1e-9)

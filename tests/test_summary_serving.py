@@ -485,3 +485,73 @@ def test_partial_appended_between_serves_is_counted(spark, summary_path, tmp_pat
     after = s.stat_range(**REQ).agg(F.sum("message_count")).collect()[0][0]
     assert added > 0
     assert after == before + added
+
+
+def test_table_summary_serves_only_while_fresh(spark, tmp_path):
+    """A summary built on a table engine describes the snapshot it was
+    built from.  After each append, delete_range, QL truncate and compact
+    the engine's stat_range, stat_quantiles and summarize must equal the
+    raw derivation over the current rows (a stale summary keeps answering
+    with the old ones); a rebuilt summary serves again."""
+    from dp3_spark.streaming.lifecycle import VersionedLogTable
+
+    table = VersionedLogTable(spark, str(tmp_path / "table"))
+
+    def batch(lo, hi):
+        return spark.createDataFrame(
+            [(f"p{i % 2}", "/a", i * 10**9, i, float(i % 37) - 5.5) for i in range(lo, hi)],
+            "producer string, topic string, log_time long, sequence long, value double",
+        )
+
+    table.append(batch(0, 600))
+    eng = DP3Engine(spark, table=table)
+    build = dict(granularity_ns=MIN_NS, numeric_fields=["value"], sketch_fields=["value"])
+    eng.build_summary_store(str(tmp_path / "summary_0"), **build)
+    win = dict(topic="/a", start_ns=0, end_ns=40 * MIN_NS, granularity_ns=10 * MIN_NS)
+    rng = dict(win, numeric_fields=["value"])
+    summ = dict(granularity_ns=10 * MIN_NS, numeric_fields=["value"])
+
+    def check(served):
+        store = table.log_store()
+        got = eng.stat_range(**rng)
+        read = got._jdf.queryExecution().toString().split("ReadSchema")[1]
+        assert ("message_count:" in read) == served  # summary partials, not rows
+        assert _collect_sorted(got) == _collect_sorted(ST.stat_range(store, **rng))
+        assert _collect_sorted(eng.stat_quantiles(**win, values=False)) == _collect_sorted(
+            _raw_quantile_bins(store, **win, qs=[0.5, 0.9, 0.99])
+        )
+        assert _collect_sorted(eng.summarize(**summ)) == _collect_sorted(
+            ST.summarize(store, **summ)
+        )
+
+    check(served=True)
+    table.append(batch(600, 1200))
+    check(served=False)
+    eng.delete("p0", "/a", 0, 300 * 10**9)
+    check(served=False)
+    eng.execute(f"truncate p1 /a {120 * 10**9};")
+    check(served=False)
+    table.compact()
+    check(served=False)
+    eng.build_summary_store(str(tmp_path / "summary_1"), **build)
+    check(served=True)
+
+
+def test_raw_quantiles_push_time_bound_into_scan(spark):
+    """The raw quantile branch filters through time_range_filter: the
+    events scan is pruned on the raw `ts` column, not only on the derived
+    log_time, and the bins equal a derivation filtered on log_time."""
+    from conftest import SF_SMOKE
+    from dp3_spark.catalog import events_log_store
+
+    store = events_log_store(spark, SF_SMOKE, us_truncate=True)
+    req = dict(
+        topic="click", start_ns=1704067200 * 10**9, end_ns=1706745600 * 10**9,
+        granularity_ns=24 * 3600 * 10**9,
+    )
+    got = DP3Engine(spark, store=store).stat_quantiles(**req, values=False)
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "GreaterThanOrEqual(ts," in plan.split("PushedFilters")[1], plan
+    assert _collect_sorted(got) == _collect_sorted(
+        _raw_quantile_bins(store, **req, qs=[0.5, 0.9, 0.99])
+    )
