@@ -2,7 +2,7 @@
 # recorded count is copy-paste reproducible (r8 verdict ask on the
 # gate-scale oracle sweep's env var).
 
-.PHONY: test oracle-gate oracle-lsh oracle-lifecycle oracle-layout oracle-stats oracle-sf1 bench
+.PHONY: test oracle-gate oracle-lsh oracle-lifecycle oracle-layout oracle-stats oracle-sf1 plan-budget bench
 
 # full suite (what "686 passed"-style ledger lines run)
 test:
@@ -56,6 +56,12 @@ STATS_ROWS = stat_range_hourly or stat_range_served or stat_quantiles_served \
 	or stream_stats_rollup or stat_by_schema
 oracle-stats:
 	PYTEST_ADDOPTS='-k "$(STATS_ROWS)"' $(MAKE) --no-print-directory oracle-gate
+
+# py4j round trips per plan build: the session's call-site capture stays
+# off, and MinHash banding and a QL as-of compile stay under their counted
+# send_command budgets; the one-expression banding keeps the persisted keys
+plan-budget:
+	python -m pytest tests/test_plan_budget.py -q
 
 # the 10x-rows answer sweep (opt-in; ~35 min)
 oracle-sf1:

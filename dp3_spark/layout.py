@@ -34,17 +34,20 @@ SPREAD_TEXT_BYTES = 16 << 10
 def plan_bytes(df: DataFrame) -> int | None:
     """Catalyst's size estimate of df, from the analyzed plan: driver
     metadata, no job and no optimizer pass.  None when the size is
-    unknown: a leaf with no statistics (a `createDataFrame` frame, list-
-    or RDD-backed) reports spark.sql.defaultSizeInBytes (Long.MaxValue),
-    and filters, aggregates and joins over one report that or more.  A
-    projection over such a leaf scales it by the row-width ratio (~4e18
-    for one column of two); that stays above every caller's ceiling or
-    threshold, and `spread` sizes it at the session's parallelism."""
+    unknown: when any leaf of the plan has no statistics.  Such a leaf
+    (a `createDataFrame` frame, list- or RDD-backed) reports
+    spark.sql.defaultSizeInBytes (Long.MaxValue), and a projection over
+    it scales that by the row-width ratio (~4e18 for one column of two),
+    which no threshold can tell from a real size."""
     jdf = df._jdf
-    size = int(jdf.queryExecution().analyzed().stats().sizeInBytes())
-    if size >= jdf.sparkSession().sessionState().conf().defaultSizeInBytes():
-        return None
-    return size
+    plan = jdf.queryExecution().analyzed()
+    unknown = jdf.sparkSession().sessionState().conf().defaultSizeInBytes()
+    leaves = plan.collectLeaves()
+    for i in range(leaves.size()):
+        if int(leaves.apply(i).stats().sizeInBytes()) >= unknown:
+            return None
+    size = int(plan.stats().sizeInBytes())
+    return None if size >= unknown else size
 
 
 def spread(df: DataFrame, bytes_per_partition: int = SPREAD_BYTES) -> DataFrame:

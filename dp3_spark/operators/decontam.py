@@ -25,7 +25,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dp3_spark.functions import text as TXT
-from dp3_spark.layout import SPREAD_TEXT_BYTES, spread
 
 
 def ngram_contamination(
@@ -127,7 +126,7 @@ def minhash_contamination(
 
     if train_sigs is None:
         train_sigs = DD.minhash_signatures(
-            spread(train, SPREAD_TEXT_BYTES), id_col, text_col, n=n, num_hashes=num_hashes
+            train, id_col, text_col, n=n, num_hashes=num_hashes
         ).localCheckpoint(eager=True)
     pairs = DD.minhash_lsh_pairs_incremental(
         eval_df,

@@ -271,8 +271,12 @@ def minhash_signatures(
                 {"id": pdf[id_col].values, "shingles": shs, "card": cards, "mh": mhs}
             )
 
-    return df.select(F.col(id_col).alias(id_col), F.col(text_col)).mapInPandas(
-        gen, "id long, shingles array<bigint>, card int, mh array<bigint>"
+    # the pass is CPU-bound per row: a single-split input is spread first
+    # (layout.spread; many-split inputs are left alone)
+    return (
+        spread(df, SPREAD_TEXT_BYTES)
+        .select(F.col(id_col).alias(id_col), F.col(text_col))
+        .mapInPandas(gen, "id long, shingles array<bigint>, card int, mh array<bigint>")
     )
 
 
@@ -292,18 +296,15 @@ def _banded_frame(
     exact keys (collisions can then only ADD verified pairs, never change
     which pairs the cap keeps)."""
 
-    def band(bi: int) -> list:
-        return [F.col("mh").getItem(bi * rows + r) for r in range(rows)]
-
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.xxhash64(*band(bi)).alias("band_key"),
-                *([F.array(*band(bi)).alias("band_vals")] if exact_vals else []),
-            )
-            for bi in range(bands)
-        ]
+    # one SQL expression: one py4j round trip to build.  xxhash64 of an
+    # array chains its elements (nulls skipped) like the variadic
+    # xxhash64(mh[0], ..., mh[rows-1]) that persisted `bands` tables hold
+    vals = f"slice(mh, b * {rows} + 1, {rows})"
+    band_structs = F.expr(
+        f"transform(sequence(0, {bands - 1}), b -> named_struct("
+        f"'band', b, 'band_key', xxhash64({vals})"
+        + (f", 'band_vals', {vals}" if exact_vals else "")
+        + "))"
     )
     return (
         sigs.filter(F.col("mh").isNotNull())
@@ -515,17 +516,12 @@ def minhash_lsh_pairs(
         raise ValueError("num_hashes must divide into equal bands")
     if candidates not in ("all", "capped"):
         raise ValueError(f"unknown candidates mode {candidates!r}")
-    # a small parquet reads as few partitions; the signature work is
-    # CPU-bound per row, so spread under-parallel inputs first (see
-    # layout.spread — many-split inputs are left alone)
     # cache + eager materialization: the signature pass is CPU-heavy but
     # byte-small, so AQE would coalesce any recomputation of it down to one
     # task, and lazy cache timing makes runtimes vary run-to-run.  At true
     # cluster scale this becomes a persisted signatures table, which is how
     # repeated dedup runs anyway.
-    sigs = minhash_signatures(
-        spread(df, SPREAD_TEXT_BYTES), id_col, text_col, n=n, num_hashes=num_hashes
-    ).cache()
+    sigs = minhash_signatures(df, id_col, text_col, n=n, num_hashes=num_hashes).cache()
     return _minhash_sig_pairs(
         sigs, sigs.count(), num_hashes=num_hashes, bands=bands,
         threshold=threshold, candidates=candidates, bucket_cap=bucket_cap,
@@ -676,7 +672,7 @@ def minhash_lsh_pairs_incremental(
         precomputed_sigs.select("id", "shingles", "card", "mh")
         if precomputed_sigs is not None
         else minhash_signatures(
-            spread(new_df, SPREAD_TEXT_BYTES), id_col, text_col, n=n, num_hashes=num_hashes
+            new_df, id_col, text_col, n=n, num_hashes=num_hashes
         ).localCheckpoint(eager=True)
     )
     # counted per side — a parquet-backed index answers count() from

@@ -24,11 +24,10 @@ def nanos_decimal(col: str):
     Seconds use exact integer division (`div`), matching the reference's
     integer arithmetic: a double-rounded `/` misplaces the second for ns
     values within ~128 ns of a boundary (int64 ~1.7e18 exceeds double's
-    53-bit mantissa)."""
-    return F.concat_ws(
-        ".",
-        F.expr(f"`{col}` div 1000000000").cast("string"),
-        F.lpad((F.col(col) % F.lit(10**9)).cast("string"), 9, "0"),
+    53-bit mantissa).  One SQL expression: one py4j round trip to build."""
+    return F.expr(
+        f"concat_ws('.', cast(`{col}` div 1000000000 as string), "
+        f"lpad(cast(`{col}` % 1000000000 as string), 9, '0'))"
     )
 
 
@@ -44,14 +43,10 @@ def to_json_shape(df: DataFrame, *, skeleton: bool = False) -> DataFrame:
         for c in df.columns
         if c not in META_COLS and c != "version" and not c.startswith("__")
     ]
-    cols = [
-        F.col("topic"),
-        F.col("sequence"),
-        nanos_decimal("log_time").alias("log_time"),
-        nanos_decimal("log_time").alias("publish_time"),
-    ]
+    stamp = nanos_decimal("log_time")
+    cols = ["topic", "sequence", stamp.alias("log_time"), stamp.alias("publish_time")]
     if not skeleton and payload:
-        cols.append(F.struct(*[F.col(c) for c in payload]).alias("data"))
+        cols.append(F.struct(*payload).alias("data"))
     return df.select(*cols)
 
 

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from dp3_spark.catalog import LogStore, events_log_store, register_views
 from dp3_spark.functions import text as TXT
 from dp3_spark.functions import vectors as VEC
-from dp3_spark.layout import SPREAD_TEXT_BYTES, drain_conf, spread
+from dp3_spark.layout import drain_conf
 from dp3_spark.operators import dedup as DD
 from dp3_spark.operators import lm as LM
 from dp3_spark.operators import similarity as SIM
@@ -3113,7 +3113,7 @@ def dedup_incremental(spark, sf_dir):
     # signature table (the deployment shape this query models); without it
     # the index plan re-shingles per consumer (banding, count, verify)
     index_sigs = DD.minhash_signatures(
-        spread(index_docs, SPREAD_TEXT_BYTES), "doc_id", "text", n=3, num_hashes=128
+        index_docs, "doc_id", "text", n=3, num_hashes=128
     ).localCheckpoint(eager=True)
     return DD.minhash_lsh_pairs_incremental(
         new_docs, index_sigs, "doc_id", "text",
@@ -3177,7 +3177,7 @@ def stream_corpus_dedup(spark, sf_dir):
         index_docs = docs.filter(F.col("doc_id") % 5 != 0)
         batch_docs = docs.filter(F.col("doc_id") % 5 == 0)
         DD.minhash_signatures(
-            spread(index_docs, SPREAD_TEXT_BYTES), "doc_id", "text", n=3, num_hashes=128
+            index_docs, "doc_id", "text", n=3, num_hashes=128
         ).write.mode("overwrite").parquet(os.path.join(seed, "sigs"))
         sigs = spark.read.parquet(os.path.join(seed, "sigs"))
         DD._banded_frame(sigs, 16, 128 // 16).write.mode("overwrite").parquet(
@@ -5661,7 +5661,7 @@ def decontam_fuzzy(spark, sf_dir):
 
     def build(root):
         DD.minhash_signatures(
-            spread(train, SPREAD_TEXT_BYTES), "doc_id", "text", n=3, num_hashes=128
+            train, "doc_id", "text", n=3, num_hashes=128
         ).write.mode("overwrite").parquet(os.path.join(root, "sigs"))
         sigs = spark.read.parquet(os.path.join(root, "sigs"))
         DD._banded_frame(sigs, 16, 128 // 16).write.mode("overwrite").parquet(

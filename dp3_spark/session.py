@@ -12,6 +12,11 @@ but every knob is chosen to also make sense on a large cluster:
   everywhere (reference keeps ns; Spark TimestampType is µs — see
   SURVEY.md §1.2), and any TimestampType columns from the driver fixtures
   must render identically to the DuckDB oracle.
+- DataFrame call-site capture off: with it on, every Column call walks
+  the Python stack and makes ~4 more py4j round trips.  Off drops the
+  Python call-site lines from errors' "DataFrame context"; get them back
+  with extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}
+  on the process's first session (PySpark reads it once per process).
 """
 
 from __future__ import annotations
@@ -47,6 +52,7 @@ def get_spark(app_name: str = "dp3_spark", extra_conf: dict | None = None) -> Sp
         # stats. 10k keeps plans driver-side up to compact-cadence file
         # counts; beyond that the distributed job is the right call.
         .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -46,7 +46,6 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dp3_spark.layout import SPREAD_TEXT_BYTES, spread
 from dp3_spark.operators import dedup as DD
 
 
@@ -137,7 +136,7 @@ class StreamingCorpusDedup:
     def process_batch(self, batch_df: DataFrame, epoch_id: int = 0) -> None:
         n_in = batch_df.count()
         sigs_new = DD.minhash_signatures(
-            spread(batch_df, SPREAD_TEXT_BYTES),
+            batch_df,
             self.id_col,
             self.text_col,
             n=self.n,

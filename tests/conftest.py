@@ -85,7 +85,9 @@ def alltypes_store(spark):
         "i8 int, i16 int, i32 int, i64 long, "
         "f32 float, f64 double, s string"
     )
-    df = spark.createDataFrame(rows, schema)
+    # checkpointed once: a list-backed frame is decoded again in Python
+    # workers on every action over it
+    df = spark.createDataFrame(rows, schema).coalesce(1).localCheckpoint()
     return LogStore(
         df=df,
         producer_col="producer",

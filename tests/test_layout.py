@@ -59,6 +59,17 @@ def test_plan_bytes_unknown_on_created_frames(spark):
     assert layout.spread(one) is one
 
 
+def test_plan_bytes_unknown_over_a_created_leaf(spark, one_split_parquet):
+    created = spark.createDataFrame([(1, "a", 2)], "id long, t string, z long")
+    # a projection scales the leaf's Long.MaxValue sentinel below itself
+    projected = created.select("id")
+    assert layout.plan_bytes(projected) is None
+    one = projected.coalesce(1)
+    assert layout.spread(one) is one
+    joined = one_split_parquet.join(created, "id")
+    assert layout.plan_bytes(joined) is None
+
+
 def test_plan_bytes_is_an_int_on_parquet(one_split_parquet):
     size = layout.plan_bytes(one_split_parquet)
     assert isinstance(size, int) and 0 < size < 10 << 20

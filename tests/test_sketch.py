@@ -17,7 +17,8 @@ from dp3_spark.operators import sketch as SK
 def values_df(spark):
     rng = random.Random(7)
     rows = [(i % 4, rng.lognormvariate(3, 2)) for i in range(4000)]
-    return spark.createDataFrame(rows, "k int, v double"), rows
+    df = spark.createDataFrame(rows, "k int, v double").coalesce(1).localCheckpoint()
+    return df, rows
 
 
 def test_quantiles_within_relative_accuracy(spark, values_df):

@@ -34,10 +34,12 @@ def store(spark):
                         round((i * 1.37 + p * 0.11 + t) % 50, 2),
                     )
                 )
+    # checkpointed once: a list-backed frame is decoded again in Python
+    # workers on every action over it
     df = spark.createDataFrame(
         rows,
         "producer string, topic string, log_time long, sequence long, value double",
-    )
+    ).coalesce(1).localCheckpoint()
     return LogStore(df, "producer", "topic", "log_time", "sequence", ("value",))
 
 
